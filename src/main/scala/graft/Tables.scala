@@ -18,13 +18,15 @@ object Tables {
     * ever reused across runs. It is the same lever as Spark's own
     * per-session file-listing cache for catalog tables
     * (`spark.sql.hive.filesourcePartitionFileCacheSize`); bare-path reads
-    * just don't get it for free. Keyed by session identity (a stopped
-    * session's plans must not leak into a new one) and the file's
-    * (mtime, length), so rewriting a table at the same path invalidates
-    * the entry — tests that regenerate fixtures in place stay correct.
+    * just don't get it for free. One entry per (session, path), stamped
+    * with the file's (mtime, length): rewriting a table at the same path
+    * replaces its entry, so tests that regenerate fixtures in place stay
+    * correct and superseded plans do not pile up. Sessions are compared by
+    * identity, and entries of stopped SparkContexts are dropped on every
+    * resolve (a stopped session's plans must not leak into a new one).
     */
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, Long, Long), DataFrame]()
+  private[graft] val relationCache =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Long, Long, DataFrame)]()
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -35,9 +37,10 @@ object Tables {
         val st = fs.getFileStatus(p)
         (st.getModificationTime, st.getLen)
       } catch { case _: Throwable => (-1L, -1L) }
-    relationCache.computeIfAbsent(
-      (System.identityHashCode(spark), path, mtime, len),
-      _ => spark.read.parquet(path))
+    relationCache.keySet.removeIf(_._1.sparkContext.isStopped)
+    relationCache.compute((spark, path), (_, old) =>
+      if (old != null && old._1 == mtime && old._2 == len) old
+      else (mtime, len, spark.read.parquet(path)))._3
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")

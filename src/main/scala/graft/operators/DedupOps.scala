@@ -6,6 +6,7 @@ import graft.functions.TextFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 /** Deduplication family for a training-data pipeline: exact, n-gram Jaccard,
   * MinHash+LSH, SimHash, and embedding-cosine near-dup.
@@ -176,16 +177,15 @@ object DedupOps {
       least(col("a.sz"), col("b.sz")) >= greatest(col("a.sz"), col("b.sz")) * tau
     // The candidate pair table is TINY by construction (near-dup pairs ≪
     // corpus) but is referenced three times downstream (the verify join
-    // plus both branches of candIds) — an eager localCheckpoint truncates
+    // plus both branches of candIds) — an eager checkpoint truncates
     // the lineage so the whole prefix-index subtree is planned and
     // executed ONCE instead of being re-inlined per reference (the
     // un-truncated plan re-derived the gram pipeline ~5×: 322 KB of
     // physical plan and ~130 exchanges at the gate corpus).
-    val cand = prefix.hint("shuffle_hash").as("a")
+    val cand = Checkpoints(prefix.hint("shuffle_hash").as("a")
       .join(prefix.hint("shuffle_hash").as("b"), cond)
       .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // Exact verify only for candidate docs — identical formula to the
     // all-pairs form. The gram sets are REBUILT from the candidate docs
     // (semi-join first, then one narrow wordNgrams projection): the old
@@ -200,12 +200,11 @@ object DedupOps {
     // references (one materialization instead of two corpus scans).
     val candIds = cand.select(col("id1").as("doc_id"))
       .union(cand.select(col("id2"))).distinct()
-    val gramSets = docs
+    val gramSets = Checkpoints(docs
       .join(candIds, Seq("doc_id"), "left_semi")
       .withColumn("w", spaceTokens(col("text")))
       .filter(size(col("w")) >= n)
-      .select(col("doc_id"), wordNgrams(col("w"), n).as("grams"))
-      .localCheckpoint()
+      .select(col("doc_id"), wordNgrams(col("w"), n).as("grams")))
     val inter = size(array_intersect(col("g1"), col("g2")))
     val jac = inter / (size(col("g1")) + size(col("g2")) - inter).cast("double")
     cand
@@ -307,17 +306,16 @@ object DedupOps {
     // the bucket; its members still pair through their other `bands-1`
     // bands whenever they are genuine near-duplicates.
     // Candidate pairs are tiny (near-dup groups) but referenced three
-    // times downstream — eager localCheckpoint truncates the lineage so
+    // times downstream — an eager checkpoint truncates the lineage so
     // the banding subtree plans and runs once (same rationale as
     // ngramJaccardPairsPrefix's checkpoint).
-    val cand = banded
+    val cand = Checkpoints(banded
       .groupBy("band", "band_hash")
       .agg(collect_list(col("doc_id")).as("ids"))
       .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
       .select(bucketPairs(array_sort(col("ids"))).as("p"))
       .select(col("p.id1"), col("p.id2"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // Exact-verify gram sets are built ONLY for candidate docs — and the
     // semi-join now sits BELOW the ngram window: filtering `docs` first
     // means the second pass's posexplode + lead window runs over
@@ -329,10 +327,10 @@ object DedupOps {
     // Checkpointed because g1 and g2 are two references.
     val candIds = cand.select(col("id1").as("doc_id"))
       .union(cand.select(col("id2"))).distinct()
-    val gramSets = ngramRows(docs.join(candIds, Seq("doc_id"), "left_semi"), n)
-      .groupBy("doc_id")
-      .agg(collect_set(col("g")).as("grams"))
-      .localCheckpoint()
+    val gramSets = Checkpoints(
+      ngramRows(docs.join(candIds, Seq("doc_id"), "left_semi"), n)
+        .groupBy("doc_id")
+        .agg(collect_set(col("g")).as("grams")))
     val g1 = gramSets.select(col("doc_id").as("id1"), col("grams").as("g1"))
     val g2 = gramSets.select(col("doc_id").as("id2"), col("grams").as("g2"))
     val inter = size(array_intersect(col("g1"), col("g2")))
@@ -397,12 +395,12 @@ object DedupOps {
     // self-join): un-materialized, each re-inlined the 64-aggregate
     // simhash computation plus the corpus token explode (a 117 KB
     // physical plan, 20 exchanges, and 2-3 executions of the most
-    // expensive stage). An eager localCheckpoint runs it ONCE; the table
+    // expensive stage). An eager checkpoint runs it ONCE; the table
     // is 16 bytes/doc — negligible storage next to the corpus at any
     // scale (same trade as the family's candidate checkpoints, and the
     // blocks are freed by the ContextCleaner when the result is
-    // dropped, or explicitly via GraftSqlBridge.releaseCheckpoints).
-    val sh = simhashTable(docs, "text").localCheckpoint()
+    // dropped, or explicitly via Checkpoints.release).
+    val sh = Checkpoints(simhashTable(docs, "text"))
     val blocked = sh.select(
       col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(i =>

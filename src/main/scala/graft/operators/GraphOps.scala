@@ -4,6 +4,7 @@ import graft.functions.NumFns.roundHalfUp
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 /** Graph-shaped lookups over an (s, p, o) triples table — the Spark twin of
   * the reference's RDF taxonomy/obligation refresh DAGs
@@ -84,7 +85,7 @@ object GraphOps {
     * (map-side combine) over the edge table; labels converge in
     * O(diameter) iterations — dup clusters are shallow (a handful of hops),
     * so the loop runs 2-4 times in practice, each a linear pass. Per-
-    * iteration localCheckpoint truncates lineage (the plan tree otherwise
+    * iteration checkpoint truncates lineage (the plan tree otherwise
     * grows ~3^k and OOMs the driver before the data ever would); the
     * changed-labels probe is a full filter-count sharing the job that
     * materializes the iteration.
@@ -95,10 +96,8 @@ object GraphOps {
     * Output: (id, comp) for every node that appears in an edge, comp = the
     * minimum id reachable from the node.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val (out, converged, iters) =
-      connectedComponentsWithStats(edges, maxIter, checkpointDir)
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    val (out, converged, iters) = connectedComponentsWithStats(edges, maxIter)
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"connectedComponents did not converge after $iters iterations " +
@@ -113,22 +112,9 @@ object GraphOps {
     * feed a keep-canonical decision (where a silently-unconverged label
     * would keep the wrong doc) can branch on the flag instead of trusting
     * the result blindly.
-    *
-    * `checkpointDir`: when set, per-round lineage truncation uses RELIABLE
-    * checkpoints written under the directory instead of localCheckpoint.
-    * localCheckpoint blocks live in executor storage — an executor loss
-    * mid-loop kills the job on a real cluster; a 100 TB multi-hour run
-    * should pay the HDFS/S3 write for restartability. Local/test runs keep
-    * the default (localCheckpoint is cheaper and a single-JVM session has
-    * no executor-loss mode).
     */
   def connectedComponentsWithStats(
-      edges: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): (DataFrame, Boolean, Int) = {
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def ckpt(df: DataFrame, eager: Boolean): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager)
-      else df.localCheckpoint(eager)
+      edges: DataFrame, maxIter: Int = 20): (DataFrame, Boolean, Int) = {
     // Cached pre-partitioned by src: every iteration joins the undirected
     // edge table on src, and InMemoryRelation preserves the repartition's
     // hash layout — only the (smaller) label state exchanges per round.
@@ -141,7 +127,7 @@ object GraphOps {
     // convergence probe shares the SAME action that materializes the
     // iteration (one job per round, not a count + a compare join).
     //
-    // Lineage is truncated EVERY round with a lazy localCheckpoint: the
+    // Lineage is truncated EVERY round with a lazy checkpoint: the
     // iteration body references `state` three times, so chaining plans
     // round-over-round grows the logical tree ~3^k — at a dozen iterations
     // the plan alone (not the data) OOMs the driver rendering explain
@@ -150,9 +136,8 @@ object GraphOps {
     // after which `state` is a flat LogicalRDD. Superseded checkpoint
     // blocks are released explicitly after each round materializes — at
     // most two rounds' blocks are ever live.
-    var state = ckpt(
-      und.select(col("src").as("id")).distinct().withColumn("comp", col("id")),
-      eager = true)
+    var state = Checkpoints(
+      und.select(col("src").as("id")).distinct().withColumn("comp", col("id")))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -162,7 +147,7 @@ object GraphOps {
       // is in state), neighbor rows carry null, and max() ignores nulls —
       // identical (id, comp, comp_prev) rows, one exchange less per round.
       val compType = state.schema("comp").dataType
-      val next = ckpt(
+      val next = Checkpoints(
         und
           .join(state.select(col("id").as("src"), col("comp").as("nc")), "src")
           .select(col("dst").as("id"), col("nc"), lit(null).cast(compType).as("prev"))
@@ -175,7 +160,7 @@ object GraphOps {
       // its checkpoint, so the superseded round's blocks are released
       // EXPLICITLY (bounded storage on long-lived sessions) instead of
       // waiting for GC + ContextCleaner.
-      org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseCheckpoints(state)
+      Checkpoints.release(state)
       state = next
       converged = changed == 0L
       iter += 1
@@ -185,9 +170,9 @@ object GraphOps {
     // release the loop's last internal checkpoint — at return exactly ONE
     // checkpoint (the result's backing data) is pinned, freed by the
     // ContextCleaner when the result is dropped (or explicitly via
-    // GraftSqlBridge.releaseCheckpoints).
-    val out = ckpt(state.select("id", "comp"), eager = true)
-    org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseCheckpoints(state)
+    // Checkpoints.release).
+    val out = Checkpoints(state.select("id", "comp"))
+    Checkpoints.release(state)
     (out, converged, iter)
   }
 
@@ -229,21 +214,16 @@ object GraphOps {
     * broadcast aggregates (N, dangling mass) — never a collect. Hub
     * pages skew the dst shuffle; AQE skew-split handles it (same watch
     * as perplexity_bucket's word join). Lineage is truncated per round
-    * (LAZY localCheckpoint materialized by the next round's dangling-mass
-    * probe — one job per round; or reliable checkpoints under
-    * `checkpointDir` on real clusters — same contract as
-    * [[connectedComponentsWithStats]]); superseded rounds are released
+    * (a LAZY local checkpoint materialized by the next round's
+    * dangling-mass probe — one job per round; see [[Checkpoints]] for the
+    * reliable mode); superseded rounds are released
     * explicitly, so at return only the final round's checkpoint is
     * pinned.
     *
     * Output: (id, rank) for every node, full precision (callers round).
     */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"pageRank needs iters >= 1, got $iters")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def ckptLazy(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(false) else df.localCheckpoint(false)
     // The distinct edge table feeds THREE loop invariants (out-degrees,
     // node set, edge⋈outdeg); persisting it makes the dedup shuffle run
     // once instead of once per invariant materialization.
@@ -283,7 +263,7 @@ object GraphOps {
     // per round for the same single double). ONE job per round: the
     // checkpoint is LAZY and the next round's dangling-mass aggregate is
     // the action that materializes it — the same probe-shares-the-action
-    // pattern as connectedComponentsWithStats (the earlier eager ckpt +
+    // pattern as connectedComponentsWithStats (the earlier eager checkpoint +
     // separate dm job paid two driver round-trips per round). Float
     // semantics are unchanged: the aggregate is the identical plan over
     // the identical checkpointed state, only the job boundary moved.
@@ -291,7 +271,7 @@ object GraphOps {
       .agg(coalesce(sum("rank"), lit(0.0))).head.getDouble(0)
     for (i <- 1 to iters) {
       val prev = ranks
-      ranks = ckptLazy(pageRankStep(nodes, n, linkW, prev, dm, damping))
+      ranks = Checkpoints(pageRankStep(nodes, n, linkW, prev, dm, damping), eager = false)
       if (i < iters)
         dm = ranks.filter(col("dang"))
           .agg(coalesce(sum("rank"), lit(0.0))).head.getDouble(0)
@@ -301,9 +281,8 @@ object GraphOps {
       // blocks are released EXPLICITLY instead of pinning storage until
       // GC — bounded-storage contract: at return only the final round's
       // checkpoint is pinned, freed by the ContextCleaner when the result
-      // is dropped (or via GraftSqlBridge.releaseCheckpoints).
-      if (i > 1)
-        org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseCheckpoints(prev)
+      // is dropped (or via Checkpoints.release).
+      if (i > 1) Checkpoints.release(prev)
     }
     nodes.unpersist(false)
     linkW.unpersist(false)

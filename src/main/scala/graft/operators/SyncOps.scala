@@ -4,6 +4,7 @@ import graft.functions.NumFns.roundHalfUp
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Checkpoints
 
 /** Incremental-sync / crawl-pipeline set operations — the daily work of the
   * reference pipeline re-expressed as declarative Spark plans.
@@ -1727,7 +1728,7 @@ object SyncOps {
     *
     * Scale: one (site × children)-sized equi-join per LEVEL (trees are
     * 2-4 levels deep in practice, never data-sized). Each level's
-    * resolved join is an EAGER localCheckpoint — child-list-sized, tiny —
+    * resolved join is an EAGER checkpoint — child-list-sized, tiny —
     * so the per-level emptiness probe, the leaf accumulator and the NEXT
     * level's parse share one computation instead of re-deriving the join
     * chain from the roots. Pages explode only once, from the accumulated
@@ -1739,10 +1740,9 @@ object SyncOps {
     * per-level checkpoint plus the pool cache has been explicitly
     * released. The leaf-set checkpoint is freed by the ContextCleaner
     * once the result is unreachable, or deterministically via
-    * `GraftSqlBridge.releaseCheckpoints(result)` when the caller is done.
-    * localCheckpoint blocks live in executor-local storage (non-reliable:
-    * an executor loss mid-query fails the job instead of recomputing) —
-    * acceptable for child-list-sized tables; the function is eager (it
+    * `Checkpoints.release(result)` when the caller is done. Checkpoints
+    * follow the SparkContext's mode ([[Checkpoints]]): reliable when a
+    * checkpoint dir is set, otherwise local. The function is eager (it
     * runs Spark jobs at call time, one per level plus the final leaf
     * materialization). The output matches [[sitemapTree]]'s shape
     * (`sitemap_url` = the LEAF that listed the page).
@@ -1767,15 +1767,14 @@ object SyncOps {
         frontier.withColumnRenamed("__tree_xml", "__idx_xml"), "__idx_xml")
       // Each resolved level is child-list-sized (tiny) and referenced by
       // THREE consumers (the leaf accumulator, the next frontier, the
-      // emptiness probe) — an EAGER localCheckpoint materializes it once
+      // emptiness probe) — an EAGER checkpoint materializes it once
       // and truncates lineage, so the accumulated leaf set never
       // re-derives the join chain from the roots (the earlier
       // persist/unpersist dance recomputed the whole ≤maxDepth chain for
       // the final page explode) and the per-level probe is a cached scan.
-      val resolved = children
+      val resolved = Checkpoints(children
         .join(pool, children("sitemap_url") === col("__f_url"))
-        .drop("__f_url")
-        .localCheckpoint()
+        .drop("__f_url"))
       levelCkpts += resolved
       val leafRows = resolved.filter(col("__f_xml").contains("<urlset"))
       leaves = if (leaves == null) leafRows else leaves.unionByName(leafRows)
@@ -1793,8 +1792,8 @@ object SyncOps {
     // new volume), then release every per-level block EXPLICITLY — the
     // returned plan references only the leaf set, so nothing else may
     // stay pinned waiting for GC on a long-lived session.
-    val leafSet = leaves.localCheckpoint()
-    levelCkpts.foreach(org.apache.spark.sql.graftbridge.GraftSqlBridge.releaseCheckpoints)
+    val leafSet = Checkpoints(leaves)
+    levelCkpts.foreach(Checkpoints.release)
     parseSitemaps(leafSet.withColumnRenamed("__f_xml", "__leaf_xml"), "__leaf_xml")
   }
 

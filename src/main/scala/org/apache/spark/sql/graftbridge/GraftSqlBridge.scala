@@ -1,11 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Dataset}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge to the `private[sql]` Column ↔ Expression converters — the
   * standard pattern for libraries that ship custom Catalyst expressions
@@ -14,25 +11,4 @@ import org.apache.spark.sql.execution.LogicalRDD
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** The persisted RDDs backing every (local)checkpointed subtree of a
-    * Dataset's plan. A `df.localCheckpoint()` stores its data as a
-    * persisted RDD wrapped in a `LogicalRDD` leaf; Spark exposes no public
-    * way to release that storage deterministically (`Dataset.unpersist`
-    * only talks to the CacheManager, and the ContextCleaner frees the
-    * blocks only after GC collects the plan — an unbounded delay on a
-    * long-lived session). Operators that checkpoint loop intermediates use
-    * these handles to restore an explicit bounded-storage contract.
-    */
-  def checkpointRdds(df: Dataset[_]): Seq[RDD[InternalRow]] =
-    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
-
-  /** Explicitly release the storage of every checkpointed subtree in the
-    * plan (non-blocking). Safe to call once the Dataset (and anything
-    * derived from it) is no longer needed: a later action would recompute
-    * from lineage where it exists, or fail for truncated checkpoint
-    * lineage — callers release only finished intermediates.
-    */
-  def releaseCheckpoints(df: Dataset[_]): Unit =
-    checkpointRdds(df).foreach(_.unpersist(false))
 }

@@ -159,4 +159,24 @@ class TablesSpec extends SparkSpec {
       assert(instants(dirs("ltz")) === expected)
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
+
+  test("rewriting a table in place leaves one memo entry for that path") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("tables-memo").toString
+    val path = s"$dir/documents.parquet"
+    def entries = Tables.relationCache.keySet.asScala.count(_._2 == path)
+    try {
+      Seq(1L).toDF("doc_id").write.parquet(path)
+      assert(Tables.documents(spark, dir).count() === 1L)
+      // overwrite recreates the table directory, which changes its mtime
+      Seq(1L, 2L, 3L).toDF("doc_id").write.mode("overwrite").parquet(path)
+      assert(Tables.documents(spark, dir).count() === 3L,
+        "the rewritten table must not be served from the old entry")
+      assert(entries === 1, "the superseded (mtime, len) entry must be dropped")
+    } finally {
+      Tables.relationCache.keySet.removeIf(_._2 == path)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
 }

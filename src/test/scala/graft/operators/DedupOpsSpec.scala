@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ReliableCheckpoints
 
 class DedupOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -40,6 +41,21 @@ class DedupOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), "planted near-dup must be found")
     assert(!pairs.exists(p => p._2 == 3L || p._1 == 3L), "unrelated doc must not pair")
+  }
+
+  test("minhashPairs with a reliable checkpoint dir keeps its two checkpoints on disk") {
+    val base = doc(1, 80)
+    val rows = Seq(
+      (1L, base), (2L, base.split(" ").drop(3).mkString(" ")), (3L, doc(2, 80)))
+      .toDF("doc_id", "text")
+    val local = DedupOps.minhashPairs(rows, tau = 0.5).collect().toSet
+    ReliableCheckpoints(spark) {
+      val out = DedupOps.minhashPairs(rows, tau = 0.5)
+      assert(out.collect().toSet === local)
+      // the candidate pairs and the candidates' gram sets back the result
+      assert(ReliableCheckpoints.leaves(out).size === 2)
+      assert(ReliableCheckpoints.onDisk(spark) === ReliableCheckpoints.leaves(out))
+    }
   }
 
   test("minhash signature similarity approximates true Jaccard") {

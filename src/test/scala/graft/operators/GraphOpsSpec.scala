@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{Checkpoints, ReliableCheckpoints}
 
 class GraphOpsSpec extends SparkSpec {
 
@@ -53,19 +54,33 @@ class GraphOpsSpec extends SparkSpec {
   test("connectedComponents converges with a reliable checkpoint dir") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    try {
+    ReliableCheckpoints(spark) {
       val chain = (1L until 13L).map(i => (i, i + 1)).toDF("src", "dst")
-      val (out, converged, _) = GraphOps.connectedComponentsWithStats(
-        chain, checkpointDir = Some(dir))
-      assert(converged)
+      val (out, converged, iters) = GraphOps.connectedComponentsWithStats(chain)
+      assert(converged && iters > 1)
       assert(out.filter(col("comp") =!= 1L).count() === 0)
-      // the reliable path actually wrote checkpoint data
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-      assert(wrote > 0, "reliable checkpoint must persist state to the dir")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      // every superseded round's directory is gone: only the result's
+      // backing checkpoint stays on disk, and release deletes it too
+      val backing = ReliableCheckpoints.leaves(out)
+      assert(backing.size === 1)
+      assert(ReliableCheckpoints.onDisk(spark) === backing)
+      Checkpoints.release(out)
+      assert(ReliableCheckpoints.onDisk(spark).isEmpty)
+    }
+  }
+
+  test("pageRank with a reliable checkpoint dir keeps one round on disk and the same ranks") {
+    val spark2 = spark
+    import spark2.implicits._
+    val e = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (4L, 3L), (3L, 5L)).toDF("src", "dst")
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val local = ranks(GraphOps.pageRank(e, iters = 6))
+    ReliableCheckpoints(spark) {
+      val out = GraphOps.pageRank(e, iters = 6)
+      assert(ranks(out) == local)
+      assert(ReliableCheckpoints.leaves(out).size === 1)
+      assert(ReliableCheckpoints.onDisk(spark) === ReliableCheckpoints.leaves(out))
     }
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, concat, lit, struct, to_json}
+import org.apache.spark.sql.graftbridge.{Checkpoints, ReliableCheckpoints}
 
 class SyncOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -795,10 +796,10 @@ class SyncOpsSpec extends SparkSpec {
     // (operator scaladoc): on RETURN exactly one checkpoint is pinned (the
     // accumulated leaf set — the result's backing data) and every
     // per-level checkpoint plus the pool cache is already gone; the caller
-    // releases the leaf set deterministically via the bridge when done.
-    // No System.gc()/ContextCleaner race anywhere — every assertion is on
-    // state the operator changes synchronously.
-    import org.apache.spark.sql.graftbridge.GraftSqlBridge
+    // releases the leaf set deterministically when done. The assertions
+    // look only at RDDs the call itself persisted: the GC-driven
+    // ContextCleaner may unpersist older RDDs of the shared context at any
+    // time, so a count over the whole context would race it.
     val roots = Seq(("s1",
       "<sitemapindex><sitemap><loc>https://s1.eu/mid.xml</loc></sitemap></sitemapindex>"))
       .toDF("site", "xml")
@@ -808,18 +809,40 @@ class SyncOpsSpec extends SparkSpec {
       ("https://s1.eu/leaf.xml",
         "<urlset><url><loc>https://s1.eu/p1</loc></url></urlset>"))
       .toDF("f_url", "f_xml")
-    val before = spark.sparkContext.getPersistentRDDs.size
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- before
     val out = SyncOps.sitemapTreeDeep(roots, "xml", pool, "f_url", "f_xml",
       maxDepth = 5)
-    assert(spark.sparkContext.getPersistentRDDs.size === before + 1,
+    val backing = Checkpoints.rdds(out).map(_.id).toSet
+    assert(backing.size === 1, "the plan references exactly one checkpoint")
+    assert(added === backing,
       "on return: per-level checkpoints and the pool cache are released, " +
         "only the leaf-set checkpoint backs the result")
     assert(out.count() === 1L, "the tree resolves through the leaf checkpoint")
-    val backing = GraftSqlBridge.checkpointRdds(out)
-    assert(backing.size === 1, "the plan references exactly one checkpoint")
-    GraftSqlBridge.releaseCheckpoints(out)
-    assert(spark.sparkContext.getPersistentRDDs.size === before,
+    Checkpoints.release(out)
+    assert(added.isEmpty,
       "explicit release drops the leaf-set checkpoint deterministically")
+  }
+
+  test("sitemapTreeDeep with a reliable checkpoint dir leaves only the leaf set on disk") {
+    val roots = Seq(("s1",
+      "<sitemapindex><sitemap><loc>https://s1.eu/mid.xml</loc></sitemap></sitemapindex>"))
+      .toDF("site", "xml")
+    val pool = Seq(
+      ("https://s1.eu/mid.xml",
+        "<sitemapindex><sitemap><loc>https://s1.eu/leaf.xml</loc></sitemap></sitemapindex>"),
+      ("https://s1.eu/leaf.xml",
+        "<urlset><url><loc>https://s1.eu/p1</loc></url>" +
+          "<url><loc>https://s1.eu/p2</loc></url></urlset>"))
+      .toDF("f_url", "f_xml")
+    ReliableCheckpoints(spark) {
+      val out = SyncOps.sitemapTreeDeep(roots, "xml", pool, "f_url", "f_xml")
+      assert(out.select("url").as[String].collect().toSet ===
+        Set("https://s1.eu/p1", "https://s1.eu/p2"))
+      assert(ReliableCheckpoints.leaves(out).size === 1)
+      assert(ReliableCheckpoints.onDisk(spark) === ReliableCheckpoints.leaves(out),
+        "the per-level checkpoint directories are deleted on release")
+    }
   }
 
   test("bloomParams clamps at the single-array cap instead of throwing") {
