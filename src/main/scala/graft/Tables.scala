@@ -28,8 +28,16 @@ object Tables {
   private[graft] val relationCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Long, Long, DataFrame)]()
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` through the memo above. Besides the
+    * corpus tables, persisted index parts resolve here: a query over an
+    * index reads its parts once per session, and rebuilding the index in
+    * place changes the parts' stamps, so the next query resolves them
+    * again.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
     val (mtime, len) =
       try {
         val p = new org.apache.hadoop.fs.Path(path)

@@ -818,12 +818,12 @@ object AnnOps {
     */
   def ivf2QueryIndex(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, cprobe: Int, nprobeF: Int): DataFrame = {
-    val coarseDf = spark.read.parquet(s"$path/coarse")
-    val fineDf = spark.read.parquet(s"$path/fine")
+    val coarseDf = graft.Tables.parquet(spark, s"$path/coarse")
+    val fineDf = graft.Tables.parquet(spark, s"$path/fine")
     val probed = ivf2Probe(queries, coarseDf, fineDf, cprobe, nprobeF)
       .withColumn("cid", col("gcid").cast("long") * Ivf2CellStride + col("fcid"))
       .select("query_id", "cid", "qv")
-    val inverted = spark.read.parquet(s"$path/inverted")
+    val inverted = graft.Tables.parquet(spark, s"$path/inverted")
       .select(col("vec_id").as("neighbor_id"), col("v").as("cv2"), col("cid"))
     ivf2Rerank(inverted, probed, k)
   }
@@ -1296,9 +1296,9 @@ object AnnOps {
     */
   def ivfpqQueryIndex(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, cprobe: Int, nprobeF: Int, dim: Int = 64): DataFrame = {
-    val coarseDf = spark.read.parquet(s"$path/coarse")
-    val fineDf = spark.read.parquet(s"$path/fine")
-    val bookRows = spark.read.parquet(s"$path/books").orderBy("s", "cid").collect()
+    val coarseDf = graft.Tables.parquet(spark, s"$path/coarse")
+    val fineDf = graft.Tables.parquet(spark, s"$path/fine")
+    val bookRows = graft.Tables.parquet(spark, s"$path/books").orderBy("s", "cid").collect()
     val m = bookRows.iterator.map(_.getInt(0)).max + 1
     val books: IndexedSeq[IndexedSeq[Array[Double]]] = (0 until m).map { s =>
       bookRows.iterator.filter(_.getInt(0) == s).toIndexedSeq
@@ -1308,7 +1308,7 @@ object AnnOps {
       .join(broadcast(fineDf), Seq("gcid", "fcid"))
       .withColumn("cid", col("gcid").cast("long") * Ivf2CellStride + col("fcid"))
       .select("query_id", "cid", "qv", "fcv")
-    val inverted = spark.read.parquet(s"$path/inverted")
+    val inverted = graft.Tables.parquet(spark, s"$path/inverted")
       .select(col("vec_id").as("neighbor_id"), col("pq_codes"), col("cid"))
     ivfpqRerank(inverted, probed, books, k, dim, residual = true)
   }

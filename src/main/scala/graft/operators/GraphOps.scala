@@ -81,17 +81,23 @@ object GraphOps {
     * PROPAGATION — the step every dedup pipeline needs after pair
     * generation: near-dup PAIRS form chains (A~B, B~C with A,C below the
     * pair threshold), and keep-one-per-cluster requires the transitive
-    * closure, not the pairs. Each iteration is one join + partial-agg min
-    * (map-side combine) over the edge table; labels converge in
-    * O(diameter) iterations — dup clusters are shallow (a handful of hops),
-    * so the loop runs 2-4 times in practice, each a linear pass. Per-
-    * iteration checkpoint truncates lineage (the plan tree otherwise
-    * grows ~3^k and OOMs the driver before the data ever would); the
-    * changed-labels probe is a full filter-count sharing the job that
-    * materializes the iteration.
-    * `maxIter` bounds the loop against pathological chains (a 100 TB run
-    * would switch to the large-star/small-star contraction at extreme
-    * diameters — same contract, fewer rounds).
+    * closure, not the pairs. The undirected edge table is built from one
+    * read of `edges` with a single exchange (on src) and cached. Iteration
+    * 1 is fused into a group-by of that table on src (label = least of the
+    * node's id and its neighbours' ids), which needs no further exchange;
+    * every later iteration is one join + partial-agg min (map-side
+    * combine) over the edge table. Labels converge in O(diameter)
+    * iterations — dup clusters are shallow (a handful of hops), so the
+    * loop runs 2-4 times in practice, each a linear pass. Per-iteration
+    * checkpoint truncates lineage (the plan tree otherwise grows ~3^k and
+    * OOMs the driver before the data ever would); the changed-labels probe
+    * is a full filter-count ([[Checkpoints.materialize]], one job) that
+    * also materializes the iteration's checkpoint. The last iteration's
+    * checkpoint backs the result, so no extra copy is made at return.
+    * `maxIter` (>= 1, the fused round counts as iteration 1) bounds the
+    * loop against pathological chains (a 100 TB run would switch to the
+    * large-star/small-star contraction at extreme diameters — same
+    * contract, fewer rounds).
     *
     * Output: (id, comp) for every node that appears in an edge, comp = the
     * minimum id reachable from the node.
@@ -115,17 +121,25 @@ object GraphOps {
     */
   def connectedComponentsWithStats(
       edges: DataFrame, maxIter: Int = 20): (DataFrame, Boolean, Int) = {
-    // Cached pre-partitioned by src: every iteration joins the undirected
-    // edge table on src, and InMemoryRelation preserves the repartition's
-    // hash layout — only the (smaller) label state exchanges per round.
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    require(maxIter >= 1, s"connectedComponents needs maxIter >= 1, got $maxIter")
+    // Both directions of every edge from ONE read of `edges` (a union of
+    // the two projections evaluates the edge plan twice and shuffles
+    // twice), deduplicated inside the src partitioning: distinct on
+    // (src, dst) is satisfied by the hash layout on src, so the
+    // repartition is the only exchange. Cached pre-partitioned by src:
+    // every round groups or joins the undirected edge table on src, and
+    // InMemoryRelation preserves the repartition's hash layout — only the
+    // (smaller) label state exchanges per round.
+    val both = explode(array(
+      struct(col("src").as("src"), col("dst").as("dst")),
+      struct(col("dst").as("src"), col("src").as("dst"))))
+    val und = edges.select(both.as("e")).select("e.src", "e.dst")
       .repartition(col("src"))
+      .distinct()
       .persist()
-    // state = (id, comp[, comp_prev]) — comp_prev rides along so the
+    // state = (id, comp, comp_prev) — comp_prev rides along so the
     // convergence probe shares the SAME action that materializes the
-    // iteration (one job per round, not a count + a compare join).
+    // round (one job per round, not a count + a compare join).
     //
     // Lineage is truncated EVERY round with a lazy checkpoint: the
     // iteration body references `state` three times, so chaining plans
@@ -136,11 +150,20 @@ object GraphOps {
     // after which `state` is a flat LogicalRDD. Superseded checkpoint
     // blocks are released explicitly after each round materializes — at
     // most two rounds' blocks are ever live.
+    def probe(round: DataFrame): Long =
+      Checkpoints.materialize(round.filter(col("comp") =!= col("comp_prev")))
+    // Round 1, fused: every node starts labelled with its own id, so its
+    // first label is the least of its id and its neighbours' ids. Every
+    // node of `und` is a src (both directions are in it), and the group
+    // by src needs no exchange on und's partitioning.
     var state = Checkpoints(
-      und.select(col("src").as("id")).distinct().withColumn("comp", col("id")))
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+      und.groupBy("src").agg(min("dst").as("nmin"))
+        .select(col("src").as("id"), least(col("src"), col("nmin")).as("comp"),
+          col("src").as("comp_prev")),
+      eager = false)
+    var changed = probe(state)
+    var iter = 1
+    while (changed != 0L && iter < maxIter) {
       // comp_prev rides through the SAME aggregation instead of a second
       // per-round join against state: the state-side union rows carry
       // their comp as `prev` (exactly one state row per id — every node
@@ -155,25 +178,20 @@ object GraphOps {
           .groupBy("id")
           .agg(min("nc").as("comp"), max("prev").as("comp_prev")),
         eager = false)
-      val changed = next.filter(col("comp") =!= col("comp_prev")).count()
-      // The count above computed every partition of `next` and finalized
+      changed = probe(next)
+      // The probe above computed every partition of `next` and finalized
       // its checkpoint, so the superseded round's blocks are released
       // EXPLICITLY (bounded storage on long-lived sessions) instead of
       // waiting for GC + ContextCleaner.
       Checkpoints.release(state)
       state = next
-      converged = changed == 0L
       iter += 1
     }
     und.unpersist(false)
-    // Hand the caller a lineage-free projection of the final state, then
-    // release the loop's last internal checkpoint — at return exactly ONE
-    // checkpoint (the result's backing data) is pinned, freed by the
-    // ContextCleaner when the result is dropped (or explicitly via
-    // Checkpoints.release).
-    val out = Checkpoints(state.select("id", "comp"))
-    Checkpoints.release(state)
-    (out, converged, iter)
+    // The final round's checkpoint is the result's backing data: at return
+    // exactly ONE checkpoint is pinned, freed by the ContextCleaner when
+    // the result is dropped (or explicitly via Checkpoints.release).
+    (state.select("id", "comp"), changed == 0L, iter)
   }
 
   /** Apply cluster resolution to the corpus: drop every non-canonical
@@ -275,7 +293,7 @@ object GraphOps {
       if (i < iters)
         dm = ranks.filter(col("dang"))
           .agg(coalesce(sum("rank"), lit(0.0))).head.getDouble(0)
-      else ranks.count() // materialize the final round before the caches drop
+      else Checkpoints.materialize(ranks) // the final round, before the caches drop
       // Round i is fully stored (the action above computed every
       // partition and doCheckpoint truncated its lineage), so round i−1's
       // blocks are released EXPLICITLY instead of pinning storage until
@@ -363,12 +381,16 @@ object GraphOps {
     */
   def dedupClusterQuery(base: DataFrame, maxIter: Int = 20): DataFrame = {
     val id = col("doc_id")
-    val star = base.select(id.as("src"), (id - id % 5).as("dst"))
+    // Star and link edges from ONE scan of `base`: each doc emits its star
+    // edge and, every 35th doc, a link edge (a null element otherwise,
+    // dropped with the star's self-edges by the src ≠ dst filter).
+    val edges = base.select(explode(array(
+        struct(id.as("src"), (id - id % 5).as("dst")),
+        when(id % 35 === 0 && id >= 5, struct(id.as("src"), (id - 5).as("dst")))
+      )).as("e"))
+      .select("e.src", "e.dst")
       .filter(col("src") =!= col("dst"))
-    val link = base.filter(id % 35 === 0 && id >= 5)
-      .select(id.as("src"), (id - 5).as("dst"))
-    val (comps, converged, _) =
-      connectedComponentsWithStats(star.unionByName(link), maxIter)
+    val (comps, converged, _) = connectedComponentsWithStats(edges, maxIter)
     comps
       .select(col("id").as("doc_id"), col("comp").as("cluster_id"),
         (col("id") === col("comp")).as("is_canonical"),

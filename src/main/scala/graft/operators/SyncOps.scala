@@ -1781,7 +1781,7 @@ object SyncOps {
       val next = resolved.filter(col("__f_xml").contains("<sitemapindex"))
         .drop("sitemap_url", "sitemap_lastmod")
         .withColumnRenamed("__f_xml", "__tree_xml")
-      done = next.count() == 0
+      done = Checkpoints.materialize(next) == 0
       frontier = next
       depth += 1
     }

@@ -26,6 +26,15 @@ object Checkpoints {
     if (ds.sparkSession.sparkContext.getCheckpointDir.isEmpty) ds.localCheckpoint(eager)
     else ds.checkpoint(eager = true)
 
+  /** Compute every partition of `ds` and return its row count. Over a
+    * checkpoint, or a narrow plan on one (a filter, a projection), this is
+    * ONE job, and for a lazy checkpoint it is the action that materializes
+    * it. `Dataset.count()` plans a partial + final aggregate across an
+    * exchange, which AQE runs as two jobs; counting the rows of the
+    * executed RDD needs no shuffle.
+    */
+  def materialize(ds: Dataset[_]): Long = ds.queryExecution.toRdd.count()
+
   /** The RDDs behind every checkpointed leaf of the Dataset's plan. Spark
     * wraps a checkpoint in a `LogicalRDD` leaf and exposes no public way
     * to free its storage deterministically: `Dataset.unpersist` only talks

@@ -160,6 +160,33 @@ class TablesSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
+  test("an IVF index rebuilt at the same path is re-resolved for the next query") {
+    import graft.operators.AnnOps
+    val vecs = AnnOps.corpus(spark, sfDir)
+    val n = vecs.count()
+    val (cprobe, nprobeF) =
+      (AnnOps.ivf2Cprobe(AnnOps.ivf2Ncoarse(n)), AnnOps.ivf2NprobeF(AnnOps.IvfCellTarget))
+    val dir = java.nio.file.Files.createTempDirectory("tables-ivf").toString
+    def query(parity: Int) =
+      AnnOps.ivf2QueryIndex(spark, dir, vecs.filter(col("vec_id") % 2 === parity),
+        k = 10, cprobe, nprobeF)
+        .select("neighbor_id").collect().map(_.getLong(0) % 2).toSet
+    def resolved = Tables.parquet(spark, s"$dir/inverted")
+    try {
+      AnnOps.ivf2SaveIndex(vecs.filter(col("vec_id") % 2 === 0), dir, n / 2)
+      assert(query(0) === Set(0L))
+      val first = resolved
+      assert(resolved eq first, "an unchanged index must be served from the memo")
+      // overwrite deletes and rewrites every part of the index in place
+      AnnOps.ivf2SaveIndex(vecs.filter(col("vec_id") % 2 === 1), dir, n - n / 2)
+      assert(query(1) === Set(1L), "the next query must see the rebuilt index")
+      assert(!(resolved eq first), "the rebuilt index must be resolved again")
+    } finally {
+      Tables.relationCache.keySet.removeIf(_._2.startsWith(dir))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("rewriting a table in place leaves one memo entry for that path") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._

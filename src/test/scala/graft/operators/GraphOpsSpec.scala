@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{Checkpoints, ReliableCheckpoints}
+import org.apache.spark.sql.graftbridge.{Checkpoints, JobCount, ReliableCheckpoints}
 
 class GraphOpsSpec extends SparkSpec {
 
@@ -34,7 +34,9 @@ class GraphOpsSpec extends SparkSpec {
     assert(partial.filter(col("comp") =!= 1L).count() > 0,
       "an unconverged run leaves non-minimal labels (that is WHY the flag matters)")
     val (full, converged, iters) = GraphOps.connectedComponentsWithStats(chain)
-    assert(converged && iters <= 20)
+    // 12 rounds carry label 1 from node 1 to node 13 (the fused first
+    // round counts as one), and the 13th finds no change
+    assert(converged && iters === 13)
     assert(full.filter(col("comp") =!= 1L).count() === 0)
   }
 
@@ -49,6 +51,64 @@ class GraphOpsSpec extends SparkSpec {
     val full = GraphOps.dedupClusterQuery(base)
     assert(full.select("converged").head.getBoolean(0) === true)
     assert(full.filter(col("converged") =!= true).count() === 0)
+  }
+
+  /** Driver-side reference components: union-find over the edge list,
+    * each node labelled with the minimum id of its component.
+    */
+  private def refComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      // the smaller root wins, so every root is its component's minimum
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(v => v -> find(v)).toMap
+  }
+
+  test("connectedComponents matches a driver-side union-find on a seeded random graph") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rnd = new scala.util.Random(20261017L)
+    // ids drawn from a shuffled pool, so a chain's minimum sits anywhere
+    // along it and labels must travel both ways
+    val ids = rnd.shuffle((1L to 5000L).toVector).iterator
+    def take(n: Int) = Vector.fill(n)(ids.next())
+    val chains = Seq.fill(8)(take(2 + rnd.nextInt(14)))
+      .flatMap(c => c.zip(c.tail))
+    val stars = Seq.fill(6)(take(2 + rnd.nextInt(9)))
+      .flatMap(s => s.tail.map(s.head -> _))
+    val islands = Seq.fill(10)(take(2)).map(p => p(0) -> p(1))
+    val loners = take(3)
+    val selfLoops = loners.map(v => v -> v) ++ Seq(chains.head._1 -> chains.head._1)
+    val base = chains ++ stars ++ islands ++ selfLoops
+    val noise = rnd.shuffle(base).take(20) ++ rnd.shuffle(base).take(20).map(_.swap)
+    val edges = rnd.shuffle(base ++ noise)
+    val (out, converged, _) = GraphOps.connectedComponentsWithStats(
+      edges.toDF("src", "dst").repartition(3), maxIter = 64)
+    assert(converged)
+    val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === refComponents(edges))
+    // a node whose only edge is a self-loop is its own one-node component
+    loners.foreach(v => assert(got(v) === v))
+  }
+
+  test("dedupClusterQuery construction runs a bounded number of Spark jobs") {
+    val spark2 = spark
+    import spark2.implicits._
+    // 200 docs: 40 five-doc stars, and every 35th doc links its star to
+    // the previous one, so labels settle in round 2 and round 3 observes
+    // no change. Round 1 runs the edge repartition, the edge cache and the
+    // probe; rounds 2 and 3 each run the label-state shuffle, the
+    // aggregate shuffle and the probe.
+    val base = (0L until 200L).toDF("doc_id")
+    val (q, jobs) = JobCount(spark)(GraphOps.dedupClusterQuery(base))
+    assert(q.filter(!col("converged")).isEmpty)
+    assert(jobs === 9, s"dedupClusterQuery construction ran $jobs jobs")
   }
 
   test("connectedComponents converges with a reliable checkpoint dir") {
