@@ -1,10 +1,165 @@
 package graft.functions
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+/** Main-content TEXT of an html column — the trafilatura stand-in
+  * (SURVEY §6) as one codegen'd kernel, evaluated once per row through a
+  * static forwarder (the [[StripHtmlSelectors]] pattern).
+  *
+  * `selectContainer = false` is the line filter alone
+  * ([[MainText.lines]]); `true` is the full extraction: the
+  * [[MainContainer]] selection, the line filter over it, and, when that
+  * comes out empty, the line filter over the whole page with only chrome
+  * pruned (trafilatura's favor_recall retry).
+  */
+case class MainText(child: Expression, minChars: Int, maxLinkDensity: Double,
+    selectContainer: Boolean) extends UnaryExpression {
+
+  override def prettyName: String =
+    if (selectContainer) "main_text_blocks" else "main_text"
+
+  override def dataType: DataType = StringType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"expects string, got $t")
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    MainText.extract(input.asInstanceOf[UTF8String], minChars, maxLinkDensity,
+      selectContainer)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // the double by its bits: Double.toString is not Java source for NaN/Inf
+    val density = "java.lang.Double.longBitsToDouble(" +
+      s"${java.lang.Double.doubleToRawLongBits(maxLinkDensity)}L)"
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.MainText.extract($c, $minChars, " +
+        s"$density, $selectContainer);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MainText {
+
+  /** Block-close tags (and `<br>`) become line breaks before the tag strip,
+    * so the line filter sees the document's visual line structure.
+    */
+  val BlockCloseRe: String =
+    "(?i)</(?:p|div|h[1-6]|head|li|td|tr|th|ul|ol|table|section|article|main|header|footer|nav|blockquote|title|body|html)>|<br */?>"
+
+  /** Block-level OPEN tags break lines too (`</a><p>prose` must not glue the
+    * link text to the paragraph); `<a>` and inline tags never match.
+    */
+  val BlockOpenRe: String =
+    "(?i)<(?:p|div|h[1-6]|li|td|tr|th|ul|ol|table|section|article|main|header|footer|nav|blockquote)(?:\\s[^>]*)?>"
+
+  /** Anchor elements; group 1 is the link text (marked with \x01..\x02
+    * sentinels so per-line link density survives the global tag strip).
+    */
+  val AnchorRe: String = "(?is)<a(?:\\s[^>]*)?>(.*?)</a>"
+
+  /** An anchor containing a `<br>`/block close carries a line break INSIDE
+    * its sentinel span; a split would orphan the span and its text would
+    * count as non-link. Each pass closes and reopens the span around one
+    * break; two passes handle up to two breaks per anchor (beyond that the
+    * residue degrades to the undercount, never a crash).
+    */
+  val SpanBreakRe: String = "(\\x01[^\\x02\\n]*)\\n"
+
+  private val BlockBreak = Pattern.compile(BlockCloseRe + "|" + BlockOpenRe)
+  private val Anchor = Pattern.compile(AnchorRe)
+  private val SpanBreak = Pattern.compile(SpanBreakRe)
+  private val Tag = Pattern.compile(TextFns.HtmlTagRe)
+
+  def extract(html: UTF8String, minChars: Int, maxLinkDensity: Double,
+      selectContainer: Boolean): UTF8String = {
+    val s = html.toString
+    val text =
+      if (!selectContainer) lines(s, minChars, maxLinkDensity)
+      else {
+        val inContainer = lines(MainContainer.selectText(s), minChars, maxLinkDensity)
+        if (inContainer.nonEmpty) inContainer
+        else lines(MainContainer.pruneAll(s), minChars, maxLinkDensity)
+      }
+    UTF8String.fromString(text)
+  }
+
+  /** Line-level boilerplate filter of one html document: block tags become
+    * line breaks, anchor text is wrapped in \x01..\x02 sentinels, every
+    * tag is stripped (the reference's cleanhtml regex), and each
+    * `\n`-separated line is kept iff its visible text (sentinels removed,
+    * [[TextFns.ZsChars]]-trimmed) is non-empty, its link text (code points
+    * inside sentinel spans) is at most `maxLinkDensity` of it, and it is
+    * at least `minChars` code points long or ends in `.`/`!`/`?`. Kept
+    * lines join with `\n`.
+    */
+  def lines(html: String, minChars: Int, maxLinkDensity: Double): String = {
+    val marked = Anchor.matcher(BlockBreak.matcher(html).replaceAll("\n"))
+      .replaceAll("\u0001$1\u0002")
+    val repair = "$1\u0002\n\u0001"
+    val repaired =
+      SpanBreak.matcher(SpanBreak.matcher(marked).replaceAll(repair)).replaceAll(repair)
+    val t = Tag.matcher(repaired).replaceAll("")
+    val out = new java.lang.StringBuilder(t.length)
+    var from = 0
+    while (from <= t.length) {
+      val nl = t.indexOf('\n', from)
+      val until = if (nl < 0) t.length else nl
+      keepLine(t, from, until, minChars, maxLinkDensity, out)
+      from = until + 1
+    }
+    out.toString
+  }
+
+  private def isMark(c: Char): Boolean = c == '\u0001' || c == '\u0002'
+
+  private def isEdge(c: Char): Boolean = isMark(c) || TextFns.ZsChars.indexOf(c) >= 0
+
+  /** Appends line t[from, until)'s visible text to `out` (after a `\n`
+    * unless it is the first kept line) when the line is content.
+    */
+  private def keepLine(t: String, from: Int, until: Int, minChars: Int,
+      maxLinkDensity: Double, out: java.lang.StringBuilder): Unit = {
+    // visible text = t[a, b) minus its sentinels: sentinels drop first, so
+    // Zs runs with sentinels between them are still edges
+    var a = from
+    while (a < until && isEdge(t.charAt(a))) a += 1
+    var b = until
+    while (b > a && isEdge(t.charAt(b - 1))) b -= 1
+    if (a == b) return
+    var visLen = t.codePointCount(a, b)
+    var i = a
+    while (i < b) { if (isMark(t.charAt(i))) visLen -= 1; i += 1 }
+    // link text: the inside of each leftmost \x01[^\x02]*\x02 span
+    var linkLen = 0
+    var open = -1
+    i = from
+    while (i < until) {
+      val c = t.charAt(i)
+      if (c == '\u0001' && open < 0) open = i
+      else if (c == '\u0002' && open >= 0) {
+        linkLen += t.codePointCount(open + 1, i); open = -1
+      }
+      i += 1
+    }
+    val last = t.charAt(b - 1)
+    if (linkLen.toDouble <= visLen.toDouble * maxLinkDensity &&
+        (visLen >= minChars || last == '.' || last == '!' || last == '?')) {
+      if (out.length > 0) out.append('\n')
+      i = a
+      while (i < b) { val c = t.charAt(i); if (!isMark(c)) out.append(c); i += 1 }
+    }
+  }
+}
 
 /** Main-content CONTAINER selection — the first half of the reference's
   * trafilatura extraction path (normalizers/lib/trafilatura_extract.py:
@@ -33,72 +188,23 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - no tier matches → the whole document is returned noise-pruned (the
   *    trafilatura fallback when no body expression hits).
   *
-  * Callers compose this with the line-level density filter
-  * ([[graft.operators.NormOps.mainText]] — link density + length /
-  * punctuation keep rule) to get the full "html in, main text out"
-  * contract; the favor_recall fallback (empty extraction retries on the
-  * whole page) lives in the operator. A regex cannot express any of
-  * this (nesting-aware skip, first-match-per-tier priority), hence the
-  * kernel tier — one pass inside whole-stage codegen via the same
-  * static-forwarder pattern as [[StripHtmlSelectors]].
+  * [[MainText]] composes this with the line-level density filter (link
+  * density + length / punctuation keep rule) and the favor_recall
+  * fallback (an empty extraction retries on [[pruneAll]] of the whole
+  * page) to get the full "html in, main text out" contract. A regex
+  * cannot express any of this (nesting-aware skip, first-match-per-tier
+  * priority), hence a hand-written scan.
   */
-case class MainContainer(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"expects string, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MainContainer.select(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MainContainer.select($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Whole-document noise pruning WITHOUT container selection — the
-  * recall-biased fallback surface ([[MainContainer]] minus the tier
-  * scan): script/style/head/nav/header/footer/aside/… subtrees and
-  * comments drop, and link-farm blocks (div/list/table subtrees whose
-  * visible text is majority anchor text — `MainContainer.dropLinkFarms`)
-  * drop wholesale too; everything else passes through. Used when a
-  * selected container extracts empty (trafilatura's favor_recall
-  * baseline retry, which still runs its own link-density deletion).
-  */
-case class PruneChrome(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"expects string, got $t")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MainContainer.pruneAll(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MainContainer.pruneAll($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MainContainer {
   import StripHtmlSelectors.{isNameStart, tagName, rawTextEnd, skipSubtree, VoidTags, RawTextTags}
 
-  /** Whole document, noise-pruned (the [[PruneChrome]] kernel). */
-  def pruneAll(html: UTF8String): UTF8String = {
-    val s = html.toString
-    UTF8String.fromString(dropLinkFarms(prune(s, 0, s.length)))
-  }
+  /** Whole document, noise-pruned: script/style/head/nav/header/footer/
+    * aside/… subtrees and comments drop, and link-farm blocks drop
+    * wholesale ([[dropLinkFarms]]); everything else passes through. The
+    * recall fallback of [[MainText]] (trafilatura's favor_recall baseline
+    * retry, which still runs its own link-density deletion).
+    */
+  def pruneAll(s: String): String = dropLinkFarms(prune(s, 0, s.length))
 
   /** Block elements subject to the link-density test — the container-like
     * elements trafilatura's `delete_by_link_density` stage examines (lists
@@ -276,9 +382,11 @@ object MainContainer {
 
   private val SectionTags = Set("article", "div", "main", "section")
 
-  /** Pruned main-container content of one HTML document (see class doc). */
-  def select(html: UTF8String): UTF8String = {
-    val s = html.toString
+  /** Pruned main-container content of one HTML document (see object doc). */
+  def select(html: UTF8String): UTF8String =
+    UTF8String.fromString(selectText(html.toString))
+
+  def selectText(s: String): String = {
     val n = s.length
     // ---- pass 1: first candidate per tier, document order ----------------
     var bestTier = Int.MaxValue
@@ -317,7 +425,7 @@ object MainContainer {
     val (from, until) =
       if (bestFrom < 0) (0, n)
       else (bestFrom, subtreeContentEnd(s, bestFrom, bestName))
-    UTF8String.fromString(dropLinkFarms(prune(s, from, until)))
+    dropLinkFarms(prune(s, from, until))
   }
 
   /** Index of the '<' of the matching close tag (content end), counting

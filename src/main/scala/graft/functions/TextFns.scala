@@ -68,25 +68,6 @@ object TextFns {
       StripHtmlSelectors(GraftSqlBridge.expression(c), selectors))
   }
 
-  /** Main-content CONTAINER of an html column — the reference's patched
-    * trafilatura BODY_XPATH selection (trafilatura_extract.py:9-56) as the
-    * native [[MainContainer]] kernel: first matching container element per
-    * priority tier, noise subtrees (script/nav/header/footer/aside/…)
-    * pruned; no match → whole document noise-pruned.
-    */
-  def mainContainer(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftSqlBridge
-    GraftSqlBridge.column(MainContainer(GraftSqlBridge.expression(c)))
-  }
-
-  /** Whole-document chrome pruning (no container selection) — the
-    * recall-fallback half of [[MainContainer]].
-    */
-  def pruneChrome(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.GraftSqlBridge
-    GraftSqlBridge.column(PruneChrome(GraftSqlBridge.expression(c)))
-  }
-
   /** Inner HTML of the first element matching a simple CSS selector, or
     * the empty string — the reference's `main_by_css_selector` narrowing
     * (trafilatura_extract.py:82-94), as the native [[SelectHtmlSelector]]

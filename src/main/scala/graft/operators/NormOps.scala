@@ -2,9 +2,11 @@ package graft.operators
 
 import graft.functions.NumFns.roundHalfUp
 import graft.Tables
+import graft.functions.MainText
 import graft.functions.TextFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.StructType
 
 /** Normalization / document-transform family — the reference's
@@ -34,9 +36,19 @@ object NormOps {
     * strip_fields (:146) / remove_empty (:129) steps of common_normalizer.
     */
   def cleanHtmlDocs(docs: DataFrame, htmlCol: String): DataFrame =
-    docs
-      .withColumn("text_clean", cleanHtml(col(htmlCol)))
-      .filter(length(col("text_clean")) > 0)
+    admitNonEmpty(docs, htmlCol, "text_clean", cleanHtml(col(htmlCol)))
+
+  /** `docs` with `text` added as column `out` and `htmlCol` dropped, minus
+    * the rows whose `text` is null or empty — the remove_empty (:129)
+    * admission of the extract-then-drop operators, evaluating `text` ONCE
+    * per row. A Filter on the aliased column would not: the optimizer
+    * pushes it below the projection with the alias inlined, so the plan
+    * carries the whole extraction in both the Filter and the Project. The
+    * 0-or-1-element explode drops the empty rows inside one Generate.
+    */
+  private def admitNonEmpty(docs: DataFrame, htmlCol: String, out: String,
+      text: Column): DataFrame =
+    docs.withColumn(out, explode(filter(array(text), t => length(t) > 0)))
       .drop(htmlCol)
 
   /** queries() wrapper: synthesizes deterministic HTML around each document's
@@ -56,23 +68,6 @@ object NormOps {
 
   // --------------------------------------------------------- norm_boilerplate
 
-  /** Block-close tags (and `<br>`) become line breaks before the tag strip,
-    * so the line filter below sees the document's visual line structure.
-    */
-  val BlockCloseRe: String =
-    "(?i)</(?:p|div|h[1-6]|head|li|td|tr|th|ul|ol|table|section|article|main|header|footer|nav|blockquote|title|body|html)>|<br */?>"
-
-  /** Block-level OPEN tags break lines too (`</a><p>prose` must not glue the
-    * link text to the paragraph); `<a>` and inline tags never match.
-    */
-  val BlockOpenRe: String =
-    "(?i)<(?:p|div|h[1-6]|li|td|tr|th|ul|ol|table|section|article|main|header|footer|nav|blockquote)(?:\\s[^>]*)?>"
-
-  /** Anchor elements; group 1 is the link text (marked with \x01..\x02
-    * sentinels so per-line link density survives the global tag strip).
-    */
-  val AnchorRe: String = "(?is)<a(?:\\s[^>]*)?>(.*?)</a>"
-
   /** Line-level boilerplate filtering — the second half of the trafilatura
     * stand-in (trafilatura_extract.py extracts MAIN content, not all text;
     * `cleanHtmlDocs` above is the reference's regex fallback that keeps
@@ -83,19 +78,16 @@ object NormOps {
     * like a sentence. Nav bars (all links), cookie banners and footer
     * copyright lines (short, no terminal punctuation) drop; prose survives.
     *
-    * Mechanics: block-close tags → newlines, anchor text wrapped in \x01..
-    * \x02 sentinels, global `<.*?>` strip (the reference's cleanhtml regex),
-    * then a per-line filter + rejoin. Pure per-row projection — zero
-    * shuffle; the line lambdas run interpreted but over a handful of lines
-    * per document (NOT per-gram — the scale hazard HOFs pose elsewhere
-    * doesn't apply at one call per line).
+    * Mechanics: the native [[graft.functions.MainText]] kernel — block tags
+    * → newlines, anchor text wrapped in \x01..\x02 sentinels, global
+    * `<.*?>` strip (the reference's cleanhtml regex), then a per-line
+    * filter + rejoin, all in one codegen'd call per row. Pure per-row
+    * projection — zero shuffle.
     */
   def boilerplateFilter(docs: DataFrame, htmlCol: String,
       minChars: Int = 30, maxLinkDensity: Double = 0.5): DataFrame =
-    docs
-      .withColumn("text_main", mainText(col(htmlCol), minChars, maxLinkDensity))
-      .filter(length(col("text_main")) > 0)
-      .drop(htmlCol)
+    admitNonEmpty(docs, htmlCol, "text_main",
+      mainText(col(htmlCol), minChars, maxLinkDensity))
 
   /** The columnar heart of [[boilerplateFilter]] — main-content text of one
     * HTML column (the trafilatura stand-in, SURVEY §6), reusable where the
@@ -103,40 +95,9 @@ object NormOps {
     * preprocessor's extract-else-fallback chain, nlp.py:16-18).
     */
   def mainText(html: Column,
-      minChars: Int = 30, maxLinkDensity: Double = 0.5): Column = {
-    val marked = regexp_replace(
-      regexp_replace(html, BlockCloseRe + "|" + BlockOpenRe, "\n"),
-      AnchorRe, "\u0001$1\u0002")
-    // An anchor containing a <br>/block close carries a line break INSIDE
-    // its sentinel span; a split would orphan the span and its text would
-    // count as non-link. Close-and-reopen the span around each break (two
-    // passes handle up to two breaks per anchor — beyond that the residue
-    // degrades to the pre-repair undercount, never a crash).
-    val repairOnce: Column => Column =
-      c => regexp_replace(c, "(\\x01[^\\x02\\n]*)\\n", "$1\u0002\n\u0001")
-    val repaired = repairOnce(repairOnce(marked))
-    val lines = split(regexp_replace(repaired, HtmlTagRe, ""), "\n")
-    val spanRe = "\\x01[^\\x02]*\\x02"
-    val markRe = "[\\x01\\x02]"
-    val scored = transform(lines, l => {
-      val vis = zsTrim(regexp_replace(l, markRe, ""))
-      val linkLen = length(l) - length(regexp_replace(l, spanRe, "")) -
-        size(regexp_extract_all(l, lit(spanRe), lit(0))) * 2
-      val keep = length(vis) > 0 &&
-        linkLen.cast("double") <= length(vis) * lit(maxLinkDensity) &&
-        // (?d) = UNIX_LINES: Java's bare `$` also matches before a FINAL
-        // \r / U+0085 / U+2028 / U+2029 (it treats them all as line
-        // terminators), so a CRLF line "prose.\r" would pass the
-        // sentence-final test in Java but fail it in Python (the
-        // reference: only \n is special) and RE2 (the oracle: $ is
-        // end-of-text). UNIX_LINES restricts Java to \n — and these
-        // split("\n") segments contain none — so all three engines agree.
-        (length(vis) >= minChars || vis.rlike("(?d)[.!?]$"))
-      struct(vis.as("t"), keep.as("keep"))
-    })
-    zsTrim(array_join(
-      transform(filter(scored, c => c.getField("keep")), c => c.getField("t")), "\n"))
-  }
+      minChars: Int = 30, maxLinkDensity: Double = 0.5): Column =
+    GraftSqlBridge.column(MainText(GraftSqlBridge.expression(html),
+      minChars, maxLinkDensity, selectContainer = false))
 
   // --------------------------------------------------------- main_text_blocks
 
@@ -159,15 +120,16 @@ object NormOps {
     *     drops residual boilerplate lines inside the container.
     *  3. favor_recall: a container whose extraction comes out EMPTY falls
     *     back to extracting over the whole page (still noise-pruned —
-    *     [[graft.functions.PruneChrome]]), like trafilatura's
+    *     `MainContainer.pruneAll`), like trafilatura's
     *     recall-biased baseline retry — better too much text than an
     *     empty fulltext feeding readingTime/passages/embeddings.
     *
     * vs [[boilerplateFilter]] alone: the line filter keeps prose-shaped
     * text ANYWHERE in the page (sidebar teasers, long footer legalese);
     * container selection drops everything outside the main element first,
-    * which is exactly what trafilatura adds over a density filter. Pure
-    * per-row projection, zero shuffle, kernel inside whole-stage codegen.
+    * which is exactly what trafilatura adds over a density filter. All
+    * three steps are one [[graft.functions.MainText]] kernel call per row:
+    * pure per-row projection, zero shuffle, inside whole-stage codegen.
     *
     * NOTE `maxLinkDensity` parameterizes the LINE filter only; the
     * element-level farm threshold inside the kernel is fixed at 0.5
@@ -177,21 +139,17 @@ object NormOps {
     * drop.
     */
   def mainTextBlocks(html: Column,
-      minChars: Int = 30, maxLinkDensity: Double = 0.5): Column = {
-    val extracted = mainText(mainContainer(html), minChars, maxLinkDensity)
-    when(length(extracted) > 0, extracted)
-      .otherwise(mainText(pruneChrome(html), minChars, maxLinkDensity))
-  }
+      minChars: Int = 30, maxLinkDensity: Double = 0.5): Column =
+    GraftSqlBridge.column(MainText(GraftSqlBridge.expression(html),
+      minChars, maxLinkDensity, selectContainer = true))
 
   /** [[mainTextBlocks]] over a DataFrame column, dropping docs that come
     * out empty both ways (same admission contract as [[boilerplateFilter]]).
     */
   def mainContentExtract(docs: DataFrame, htmlCol: String,
       minChars: Int = 30, maxLinkDensity: Double = 0.5): DataFrame =
-    docs
-      .withColumn("text_main", mainTextBlocks(col(htmlCol), minChars, maxLinkDensity))
-      .filter(length(col("text_main")) > 0)
-      .drop(htmlCol)
+    admitNonEmpty(docs, htmlCol, "text_main",
+      mainTextBlocks(col(htmlCol), minChars, maxLinkDensity))
 
   /** queries() wrapper: a real-shaped page — header nav, a prose-like
     * sidebar teaser and a long footer line (both of which a line filter
@@ -949,7 +907,10 @@ object NormOps {
       else lit("")
     docs.withColumn("nlp_text",
       concat(
-        when(length(extracted) > 0, extracted).otherwise(assembled),
+        // nullif, not a CASE WHEN on length(extracted): its common
+        // expression is evaluated once, where the CASE WHEN would run the
+        // extraction in both its condition and its value
+        coalesce(nullif(extracted, lit("")), assembled),
         lit("\n\n"), pdf))
   }
 

@@ -147,9 +147,12 @@ object SyncOps {
         bloom_might_contain(xxhash64(col("url")), col("bloom")))
     val definitelyNew = probed.filter(!col("maybe_seen"))
       .drop("bloom", "maybe_seen")
+    // shuffle_hash: a broadcast build of the seen side allocates a full
+    // BytesToBytesMap page (16 MB) however few urls it holds, and the page
+    // stays in the driver's MemoryStore until the ContextCleaner sweeps it
     val confirmedNew = probed.filter(col("maybe_seen"))
       .drop("bloom", "maybe_seen")
-      .join(seen.select("url"), Seq("url"), "left_anti")
+      .join(seen.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
     definitelyNew.unionByName(confirmedNew)
   }
 

@@ -279,6 +279,33 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), "no cartesian — the cross join is 1-row broadcast")
   }
 
+  test("frontier_bloom: the exact anti-join is a shuffled hash join, not a broadcast") {
+    // a broadcast build of the seen side pins a 16 MB BytesToBytesMap page
+    // in the driver's MemoryStore until the ContextCleaner sweeps it
+    val df = SparkEntry.queries("frontier_bloom")(spark, sfDir)
+    df.collect() // runs df's own plan: AQE re-plans joins on runtime sizes
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true") && p.contains("ShuffledHashJoin"), p)
+    assert(!p.contains("BroadcastHashJoin"), p)
+  }
+
+  test("main_text_blocks, norm_boilerplate, norm_clean_html extract once per row") {
+    // a Filter on the aliased extraction would be pushed below the Project
+    // with the alias inlined, evaluating the extraction twice
+    for ((q, kernel) <- Seq("main_text_blocks" -> "main_text_blocks(",
+        "norm_boilerplate" -> "main_text(", "norm_clean_html" -> "regexp_replace(")) {
+      val p = SparkEntry.queries(q)(spark, sfDir).queryExecution.optimizedPlan.toString
+      assert(p.split(java.util.regex.Pattern.quote(kernel), -1).length - 1 == 1,
+        s"$q must reference $kernel exactly once:\n$p")
+      assert(!p.contains("Filter"), s"$q admits through the generator, not a Filter:\n$p")
+    }
+  }
+
+  test("nlp_preprocess extracts once per row (no CASE WHEN repeating the extraction)") {
+    val p = SparkEntry.queries("nlp_preprocess")(spark, sfDir).queryExecution.optimizedPlan.toString
+    assert(p.split(java.util.regex.Pattern.quote("main_text("), -1).length - 1 == 1, p)
+  }
+
   test("crawl_rank: the iteration plan equi-joins ranks and broadcasts the 1-row aggregates") {
     // The checkpointed loop flattens each round to an ExistingRDD scan, so
     // the audit inspects ONE iteration step built on real edges.

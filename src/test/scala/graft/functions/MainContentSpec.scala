@@ -2,8 +2,9 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** MainContainer / PruneChrome + the composed mainTextBlocks extraction —
+/** MainContainer selection / chrome pruning + the composed mainTextBlocks extraction —
   * the trafilatura-class path (trafilatura_extract.py:9-56 patched
   * BODY_XPATH selection, :120-122 favor_recall extract). Fixture pages
   * under src/test/resources/maincontent are realistic page shapes with
@@ -15,10 +16,6 @@ class MainContentSpec extends SparkSpec {
   private def extract(html: String): String =
     spark.range(1)
       .select(graft.operators.NormOps.mainTextBlocks(lit(html)).as("r"))
-      .head.getString(0)
-
-  private def container(html: String): String =
-    spark.range(1).select(TextFns.mainContainer(lit(html)).as("r"))
       .head.getString(0)
 
   private def fixture(name: String): String = {
@@ -89,9 +86,8 @@ class MainContentSpec extends SparkSpec {
   }
 
   test("pruneChrome drops chrome subtrees and comments, keeps content") {
-    val got = spark.range(1).select(TextFns.pruneChrome(lit(
-      "<head><title>T</title></head><p>keep</p><!-- note --><footer>legal</footer><em>tail</em>"))
-      .as("r")).head.getString(0)
+    val got = MainContainer.pruneAll(
+      "<head><title>T</title></head><p>keep</p><!-- note --><footer>legal</footer><em>tail</em>")
     assert(got == "<p>keep</p><em>tail</em>")
   }
 
@@ -250,9 +246,9 @@ class MainContentSpec extends SparkSpec {
       val sb = new StringBuilder
       var j = 0
       while (j < n) { sb.append(frags(rnd.nextInt(frags.length))); j += 1 }
-      val u = org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString)
+      val u = UTF8String.fromString(sb.toString)
       assert(MainContainer.select(u) != null)   // must not throw
-      assert(MainContainer.pruneAll(u) != null) // must not throw
+      assert(MainContainer.pruneAll(sb.toString) != null) // must not throw
       t += 1
     }
   }
@@ -306,10 +302,14 @@ class MainContentSpec extends SparkSpec {
   }
 
   test("codegen and interpreted kernels agree bit for bit") {
-    val html = fixture("page1.html")
-    val viaExpr = container(html)
-    val direct = MainContainer.select(
-      org.apache.spark.unsafe.types.UTF8String.fromString(html)).toString
-    assert(viaExpr == direct)
+    val spark2 = spark
+    import spark2.implicits._
+    val pages = (1 to 7).map(i => fixture(s"page$i.html"))
+    // a column read from a DataFrame: the kernel runs in whole-stage codegen
+    val viaCodegen = pages.toDF("html")
+      .select(graft.operators.NormOps.mainTextBlocks(col("html"))).as[String].collect().toSeq
+    val direct = pages.map(h =>
+      MainText.extract(UTF8String.fromString(h), 30, 0.5, selectContainer = true).toString)
+    assert(viaCodegen == direct)
   }
 }

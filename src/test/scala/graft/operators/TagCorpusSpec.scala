@@ -115,7 +115,7 @@ class TagCorpusSpec extends SparkSpec {
           s"doc $i: non-selector script stays in `stripped`: $stripped")
       // the extraction column is tag-free and keeps the prose. (No script
       // assertion here: bare mainText is the LINE filter only — subtree
-      // pruning is MainContainer/PruneChrome's job, covered by the
+      // pruning is the container selection's job, covered by the
       // main_text_blocks test above — so inline-glued script TEXT is
       // visible text to it by contract.)
       assert(!main.contains("<") && !main.contains(">"), s"doc $i leaked markup: $main")
