@@ -115,7 +115,14 @@ object Bench {
     val qArr = orderedNames
       .map(n => timings.get(n).map(v => math.round(v * 100).toString).getOrElse("-1"))
       .mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$nRuns,"spread_total":$totalSpread,$host,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)},"errors":$es,"queries_file":"BENCH.json","order_file":"BENCH_ORDER.json","q_unit":"centisec","q":$qArr,"top":$top}"""
+    // A focused run's `q` would be keyed to its subset, yet BENCH_ORDER.json
+    // lists the full suite: zipping the two misattributes every timing, so
+    // the focused line carries no order file and no `q` (`top` still names
+    // its queries).
+    val order =
+      if (only.isEmpty) s""","order_file":"BENCH_ORDER.json","q_unit":"centisec","q":$qArr"""
+      else ""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$nRuns,"spread_total":$totalSpread,$host,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)},"errors":$es,"queries_file":"BENCH.json"$order,"top":$top}"""
     val record = s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$nRuns,"spread_total":$totalSpread,$host,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)},"errors":$es,"queries":$qs,"spread":$sp}"""
     // A FOCUSED run (BENCH_ONLY set) must not clobber the full-suite
     // records — its partial total would read as a catastrophic regression

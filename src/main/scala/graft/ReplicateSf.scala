@@ -4,17 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Materialize a K×-scaled twin of a testdata scale-factor directory so the
-  * FULL Bench suite can run at an sf1-equivalent size (`ScaleProbe` times
-  * the dedup family in memory; this writes every table so every query
-  * scales). Usage: `runMain graft.ReplicateSf <srcDir> <dstDir> <k>`.
+  * FULL Bench suite can run at an sf1-equivalent size (every table is
+  * written, so every query scales). Usage:
+  * `runMain graft.ReplicateSf <srcDir> <dstDir> <k>`.
   *
   * Replicas are key-shifted so join/group keys stay distinct and
-  * DECORRELATED the way ScaleProbe replicas are — document words get a
-  * per-replica suffix and embeddings are rotated — so similarity structure
-  * grows linearly (each replica holds its own dups; no cross-replica
-  * pairs). Dimension tables (region, nation) are copied as-is: scaling
-  * facts against fixed dims is exactly the 100 TB shape (a dim that fits
-  * in a broadcast at sf0.1 still does at sf1000).
+  * DECORRELATED — document words get a per-replica suffix and embeddings
+  * are rotated — so similarity structure grows linearly (each replica
+  * holds its own dups; no cross-replica pairs). Dimension tables (region,
+  * nation) are copied as-is: scaling facts against fixed dims is exactly
+  * the 100 TB shape (a dim that fits in a broadcast at sf0.1 still does at
+  * sf1000).
   */
 object ReplicateSf {
   def main(args: Array[String]): Unit = {
@@ -38,8 +38,8 @@ object ReplicateSf {
 
     replicate("documents") { (df, r) =>
       // Replica 0 is VERBATIM; replicas 1..k−1 suffix every word so they
-      // share zero n-grams with each other and with replica 0 (ScaleProbe's
-      // decorrelation trick — similarity structure grows linearly, no
+      // share zero n-grams with each other and with replica 0 (the
+      // decorrelation — similarity structure grows linearly, no
       // cross-replica pairs). Keeping one verbatim replica preserves the
       // fixed query VOCABULARY: search_bm25/search_match/multi_match terms
       // still hit replica-0 docs, so the ×K twins compare non-empty search

@@ -47,8 +47,8 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
   * k-CHAR gram of the text, slide a window of `w` hashes, keep each
   * window's minimum, dedupe with first-occurrence order.
   *
-  * Exactly the semantics of the HOF formulation in
-  * `TextAnalysis.docFingerprintsHof` (its parity cross-check), including
+  * Exactly the semantics of the HOF formulation in the test-side
+  * `TextReference.docFingerprintsHof` (its parity cross-check), including
   * the clamped bounds that make it TOTAL on short input — but the
   * interpreted transform/slice/array_min tree walks ~6k boxed windows per
   * document (measured ~50 s for one sf0.01 pass) where this kernel is one
@@ -317,8 +317,9 @@ case class WordNgramsAll(child: Expression, n: Int) extends UnaryExpression {
   * wildcard semantics of dags/lib/robots_txt.py:22: `*` any run, `?` one
   * char, `[seq]`/`[!seq]` classes, trailing `$` exact match, implied
   * trailing `*` otherwise. The translation core is the single shared
-  * implementation — `SyncOps.globToRegex` (driver-side rule seqs) delegates
-  * here, so column-path and constant-path semantics cannot diverge.
+  * implementation — `SyncOps.ploneSearch` (driver-side rule seqs) calls
+  * `translate` directly, so column-path and constant-path semantics cannot
+  * diverge.
   * Foldable on literal input; codegen calls the same static kernel as the
   * interpreted path.
   */
@@ -346,8 +347,8 @@ object GlobRegex {
     UTF8String.fromString(translate(glob.toString))
 
   /** The reference's RuleLine.applies_to wildcard semantics (see the case
-    * class scaladoc). Moved here verbatim from SyncOps.globToRegex so the
-    * native expression and the driver-side helper share one body.
+    * class scaladoc), shared by the native expression and driver-side
+    * rule seqs.
     */
   def translate(rule: String): String = {
     val (core, exact) =

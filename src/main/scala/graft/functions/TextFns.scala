@@ -125,16 +125,6 @@ object TextFns {
     GraftSqlBridge.column(WordNgrams(GraftSqlBridge.expression(tokens), n))
   }
 
-  /** The interpreted higher-order formulation of `wordNgrams` — kept as the
-    * reference implementation for the parity spec (identical output order
-    * and content; ~4× slower per gram).
-    */
-  def wordNgramsHof(tokens: Column, n: Int): Column = {
-    val idx = sequence(lit(1), size(tokens) - (n - 1))
-    array_distinct(transform(idx, i =>
-      concat_ws("_", (0 until n).map(o => element_at(tokens, i + o)): _*)))
-  }
-
   /** Count of tokens that belong to `set` (tiny literal set → stays inside
     * codegen; no join needed).
     */

@@ -890,11 +890,6 @@ object AnnOps {
             x => round(x / col("q_scale") * lit(127.0), 0).cast("int"))))
   }
 
-  /** Dequantize back to doubles: v_i ≈ code_i × scale / 127. */
-  def dequantizeEmbeddings(df: DataFrame): DataFrame =
-    df.withColumn("v_deq",
-      transform(col("q_codes"), c => c.cast("double") * col("q_scale") / lit(127.0)))
-
   /** queries() wrapper: quantize the corpus, emit per-vector scale, the
     * code string, and code-sum — DuckDB recomputes all three from the same
     * float column with the same double arithmetic.

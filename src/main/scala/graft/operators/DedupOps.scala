@@ -23,20 +23,14 @@ object DedupOps {
     * candidate generators (minhash bands, embedding LSH buckets, shared
     * fingerprints): all (id1 < id2) pairs of a sorted id array as structs.
     * Backed by the native codegen'd `SortedIdPairs` kernel (one primitive
-    * double loop); `bucketPairsHof` below is the interpreted reference
-    * formulation its parity spec checks against.
+    * double loop); the test-side `DedupReference.bucketPairsHof` is the
+    * interpreted reference formulation its parity spec checks against.
     */
   private[operators] def bucketPairs(sortedIds: Column): Column = {
     import org.apache.spark.sql.graftbridge.GraftSqlBridge
     explode(GraftSqlBridge.column(
       graft.functions.SortedIdPairs(GraftSqlBridge.expression(sortedIds))))
   }
-
-  /** Interpreted HOF twin of `bucketPairs` — parity-spec reference only. */
-  private[operators] def bucketPairsHof(sortedIds: Column): Column =
-    explode(flatten(transform(sortedIds, (x, i) =>
-      transform(slice(sortedIds, i + 2, size(sortedIds)), y =>
-        struct(x.as("id1"), y.as("id2"))))))
 
   // -------------------------------------------------------------- dedup_exact
 
@@ -76,42 +70,10 @@ object DedupOps {
 
   // ------------------------------------------------------------ ngram_jaccard
 
-  /** Word-3-gram Jaccard pairs ≥ τ within (lang, source) blocks — the
-    * all-pairs self-join form. EXACT but quadratic per block: this is the
-    * small-SF cross-check used by the prefix-filter equivalence spec, NOT
-    * the registered query (`ngramJaccardPairsPrefix` below computes the
-    * identical result with a linear candidate plan and is what
-    * `qNgramJaccard` runs).
-    */
-  def ngramJaccardPairs(docs: DataFrame, n: Int, tau: Double, blockCols: Seq[String]): DataFrame = {
-    val grams = docs
-      .withColumn("w", spaceTokens(col("text")))
-      .filter(size(col("w")) >= n)
-      .withColumn("grams", wordNgrams(col("w"), n))
-      .select((Seq("doc_id", "grams") ++ blockCols).map(col): _*)
-    // Alias-based self-join (not renamed projections): both sides stay
-    // canonically identical, so Spark's ReuseExchange materializes the
-    // shuffled gram table ONCE — the n-gram construction is the expensive
-    // part and would otherwise run twice. The shuffle_hash hint matters:
-    // size stats undercount the built gram arrays, and the resulting
-    // broadcast join would construct them single-threaded on the driver.
-    val cond = blockCols
-      .map(c => col(s"a.$c") === col(s"b.$c"))
-      .reduce(_ && _) && col("a.doc_id") < col("b.doc_id")
-    val inter = size(array_intersect(col("g1"), col("g2")))
-    val jac = inter / (size(col("g1")) + size(col("g2")) - inter).cast("double")
-    grams.hint("shuffle_hash").as("a").join(grams.hint("shuffle_hash").as("b"), cond)
-      .select(
-        col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        col("a.grams").as("g1"), col("b.grams").as("g2"))
-      .withColumn("jaccard", roundHalfUp(jac, 6))
-      .filter(col("jaccard") >= tau)
-      .select("id1", "id2", "jaccard")
-  }
-
   /** Exact n-gram Jaccard pairs ≥ τ via PREFIX FILTERING — the AllPairs /
     * PPJoin candidate scheme (Bayardo et al., WWW'07; Xiao et al., ICDE'08).
-    * Same result set as `ngramJaccardPairs`, bit for bit, but the plan is
+    * Same result set as the all-pairs self-join (the test-side
+    * `DedupReference.ngramJaccardPairs`), bit for bit, but the plan is
     * linear: no all-pairs join anywhere.
     *
     * Principle: order every doc's gram set by a global total order
@@ -220,14 +182,6 @@ object DedupOps {
       .orderBy("id1", "id2")
 
   // ------------------------------------------------------------- dedup_minhash
-
-  /** MinHash signatures: sig[i] = min over shingles of murmur3(shingle, i).
-    * Expression-tree form (one array traversal per hash function) — used by
-    * the estimation spec; `minhashBands` below is the high-throughput path.
-    */
-  def minhashSignature(grams: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(i =>
-      array_min(transform(grams, g => hash(g, lit(i))))): _*)
 
   /** (doc_id, band, band_hash) from (doc_id, g) shingle rows: murmur3 each
     * shingle ONCE, then `numHashes` cheap permuted-min aggregates with

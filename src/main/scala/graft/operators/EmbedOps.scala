@@ -155,17 +155,8 @@ object EmbedOps {
     val encoded = encodeDistinct(passages, "passage", dim)
     val attached = attachEmbeddings(passages, encoded, "passage")
     val qv = stubEmbedding(lit(queryText), dim)
-    attached
-      .withColumn("cos", graft.functions.VectorFns.cosine_sim(col("embedding"), qv))
-      // a zero-vector passage has no cosine (NaN, which Spark's max would
-      // treat as the LARGEST value and poison the doc's best_cos) — drop
-      // it; n_passages counts scorable passages
-      .filter(!isnan(col("cos")))
-      .groupBy("doc_id")
-      .agg(roundHalfUp(max(col("cos")), 4).as("best_cos"),
-        count(lit(1)).as("n_passages"))
-      .orderBy(desc("best_cos"), col("doc_id"))
-      .limit(k)
+    topDocsByBestPassage(attached,
+      graft.functions.VectorFns.cosine_sim(col("embedding"), qv), k)
   }
 
   /** [[semanticSearchTopK]] with a pluggable [[Encoder]] on BOTH sides:
@@ -181,9 +172,16 @@ object EmbedOps {
     val encoded = encodeDistinctWith(passages, "passage", encoder, batchSize)
     val attached = attachEmbeddings(passages, encoded, "passage")
     val qv = encoder.encode(Seq(queryText)).head.map(_.toDouble)
+    topDocsByBestPassage(attached, graft.functions.VectorFns.cosine_sim(
+      col("embedding").cast("array<double>"), typedLit(qv)), k)
+  }
+
+  /** The scoring tail both searches share: score every attached passage
+    * with `cos`, keep each doc's best passage, return the top-k docs.
+    */
+  private def topDocsByBestPassage(attached: DataFrame, cos: Column, k: Int): DataFrame =
     attached
-      .withColumn("cos", graft.functions.VectorFns.cosine_sim(
-        col("embedding").cast("array<double>"), typedLit(qv)))
+      .withColumn("cos", cos)
       // a zero-vector passage has no cosine (NaN, which Spark's max would
       // treat as the LARGEST value and poison the doc's best_cos) — drop
       // it; n_passages counts scorable passages
@@ -193,7 +191,6 @@ object EmbedOps {
         count(lit(1)).as("n_passages"))
       .orderBy(desc("best_cos"), col("doc_id"))
       .limit(k)
-  }
 
   def qSemanticSearch(s: SparkSession, d: String): DataFrame =
     semanticSearchTopK(Tables.documents(s, d),

@@ -1656,9 +1656,9 @@ object SiteNormalizers {
   }
 
   /** The qSiteSdi synthesized SDI-elastic record set over ANY frame with
-    * a `doc_id` column — shared with `graft.ScaleProbe` so scale growth
-    * is measured on the same record shape the oracle checks. The qSiteSdi
-    * query runs the sdi site pipeline end-to-end over these records —
+    * a `doc_id` column, so a replicated base feeds the same record shape
+    * the oracle checks. The qSiteSdi query runs the sdi site pipeline
+    * end-to-end over these records —
     * field mapping, topic renames + theme taxonomy, temporal-range years,
     * the sdi-chain issued fallback (no creationDateForResource step),
     * obsolete expiry, last_modified from children changeDates, spatial
@@ -1894,8 +1894,8 @@ object SiteNormalizers {
     * over — one wide record per base doc_id, exercising every
     * pre-normalize branch (date fallback chains, obsolete statuses, the
     * frequency map, temporal ranges, children). Factored out of
-    * [[qSiteSdiFise]] so ScaleProbe can feed a replicated base through the
-    * IDENTICAL record shape.
+    * [[qSiteSdiFise]] so a replicated base can feed through the IDENTICAL
+    * record shape.
     */
   def sdiFiseSyntheticDocs(base: DataFrame): DataFrame = {
     val id = col("doc_id")

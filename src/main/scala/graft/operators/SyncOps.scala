@@ -171,34 +171,6 @@ object SyncOps {
       .select("doc_id", "url").orderBy("doc_id")
   }
 
-  /** fnmatch glob → Java regex with the reference's full semantics
-    * (dags/lib/robots_txt.py:22 `applies_to`, which delegates to Python
-    * `fnmatch.fnmatchcase`): `*` any run, `?` one char, `[seq]` / `[!seq]`
-    * character classes (fnmatch honors these, so we must too); trailing `$`
-    * forces an exact match, otherwise a trailing `*` is implied. Shared by
-    * `robotsDisallowed` and `ploneSearch`'s robots filter; the translation
-    * core lives in [[graft.functions.GlobRegex]] so `robotsCanFetch` can
-    * apply the identical semantics to rule COLUMNS (rules-as-data) via the
-    * native expression.
-    */
-  private[operators] def globToRegex(rule: String): String =
-    graft.functions.GlobRegex.translate(rule)
-
-  /** Robots rule matching: a path is disallowed when it starts with the
-    * rule, or when it glob-matches (`globToRegex`). Rules are a tiny
-    * broadcast table; the url side is matched with one codegen'd rlike per
-    * row, no shuffle.
-    */
-  def robotsDisallowed(urls: DataFrame, rules: Seq[String]): DataFrame = {
-    val spark = urls.sparkSession
-    import spark.implicits._
-    val ruleDf = broadcast(rules.map(r => (r, globToRegex(r))).toDF("rule", "rx"))
-    urls
-      .join(ruleDf, col("path").startsWith(col("rule")) || rlike(col("path"), col("rx")))
-      .select(urls.columns.toSeq.map(col): _*)
-      .distinct()
-  }
-
   // ------------------------------------------------------------ mark_redirects
 
   /** d7 semantics: join index docs to their latest fetch status; emit an
@@ -587,12 +559,14 @@ object SyncOps {
       .filter(if (cfg.skipDocs.nonEmpty)
         !col("url").isInCollection(cfg.skipDocs) else lit(true))
 
-    // robots.txt (:82-84), same broadcast rule table as robotsDisallowed
+    // robots.txt (:82-84): a path is disallowed when it starts with a rule
+    // or glob-matches it (fnmatch via GlobRegex, the translation
+    // robotsCanFetch applies per row); the rules are a tiny broadcast table
     val robotsFree =
       if (cfg.robotsDisallow.isEmpty) admitted
       else {
-        val ruleDf = broadcast(
-          cfg.robotsDisallow.map(r => (r, globToRegex(r))).toDF("rule", "rx"))
+        val ruleDf = broadcast(cfg.robotsDisallow
+          .map(r => (r, graft.functions.GlobRegex.translate(r))).toDF("rule", "rx"))
         admitted.join(ruleDf,
           col("path").startsWith(col("rule")) || rlike(col("path"), col("rx")),
           "left_anti")
@@ -1272,8 +1246,8 @@ object SyncOps {
     *    a `?`-suffix pattern is a pure prefix test, then `*` matches all,
     *    then prefix, then `$`-exact fnmatch, then fnmatch with an implied
     *    trailing `*` — the glob half via [[graft.functions.GlobRegex]], the
-    *    same translation `robotsDisallowed` uses, but applied per-ROW so
-    *    rules can come from data.
+    *    same translation `ploneSearch`'s robots filter uses, but applied
+    *    per-ROW so rules can come from data.
     *
     * The tested "filename" is path+query(+fragment) of the URL — CPython
     * re-quotes it after unquoting, which is the identity for ASCII-safe

@@ -375,12 +375,9 @@ object TextAnalysis {
     * minimum, dedupe. Guarantees any shared substring of length ≥ w+k-1
     * yields a shared fingerprint — the standard near-dup/plagiarism sketch.
     *
-    * The k-gram hash is Spark's murmur3 `hash`, but the k-gram/window loops
-    * are higher-order array functions, which Spark evaluates INTERPRETED —
-    * this operator trades peak throughput for a compact expression form
-    * (measured ~0.15 s of a ~18 s sf0.1 bench; an explode+window rewrite
-    * like `ngramRows` is the known escape hatch if fingerprinting ever
-    * becomes the bottleneck). Per-doc, no shuffle; selectivity
+    * The k-gram hash is Spark's murmur3 `hash`; the k-gram and window
+    * loops run in the native `WinnowFingerprints` expression, one primitive
+    * loop per document inside codegen. Per-doc, no shuffle; selectivity
     * (fingerprints ≪ k-grams) keeps the output small enough to join at
     * 100 TB.
     */
@@ -391,30 +388,6 @@ object TextAnalysis {
       .filter(length(t) >= k + w - 1) // need at least one full window
       .withColumn("fingerprints", GraftSqlBridge.column(
         graft.functions.WinnowFingerprints(GraftSqlBridge.expression(t), k, w)))
-  }
-
-  /** The interpreted higher-order formulation of `docFingerprints` — kept as
-    * the parity reference for the native `WinnowFingerprints` expression.
-    * Bounds are clamped to ≥ 1 so the expression is TOTAL on any row: the
-    * length filter removes short docs semantically, but Catalyst may still
-    * EVALUATE the expression on them (an inferred generator predicate
-    * shares the subexpression and subexpression elimination runs it before
-    * conjunct short-circuiting; unclamped, sequence(1, negative) descends
-    * through 0 into slice's illegal-start error).
-    */
-  def docFingerprintsHof(docs: DataFrame, textCol: String, k: Int = 7, w: Int = 4): DataFrame = {
-    val t = col(textCol)
-    val kgrams = transform(sequence(lit(1), greatest(lit(1), length(t) - (k - 1))),
-      i => hash(t.substr(i, lit(k))))
-    docs
-      .filter(length(t) >= k + w - 1) // need at least one full window
-      .withColumn("kg", kgrams)
-      .withColumn(
-        "fingerprints",
-        array_distinct(
-          transform(sequence(lit(1), greatest(lit(1), size(col("kg")) - (w - 1))), j =>
-            array_min(slice(col("kg"), j, lit(w))))))
-      .drop("kg")
   }
 
   // ------------------------------------------------------- contamination_check

@@ -22,7 +22,7 @@ class TextExpressionsSpec extends SparkSpec {
     val both = docs.filter(size(col("w")) >= 3).select(
       col("doc_id"),
       wordNgrams(col("w"), 3).as("native"),
-      wordNgramsHof(col("w"), 3).as("hof"))
+      TextReference.wordNgramsHof(col("w"), 3).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() === 0L,
       "native and HOF n-grams must agree element-for-element, order included")
     val edge = docs.filter(col("doc_id") >= 900001L).orderBy("doc_id")
@@ -45,7 +45,7 @@ class TextExpressionsSpec extends SparkSpec {
         df.orderBy("doc_id").select("doc_id", "fingerprints")
           .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toSeq
       val native = fps(TextAnalysis.docFingerprints(docs, "text", k, w))
-      val hof = fps(TextAnalysis.docFingerprintsHof(docs, "text", k, w))
+      val hof = fps(TextReference.docFingerprintsHof(docs, "text", k, w))
       assert(native === hof, s"winnowing parity failed for k=$k w=$w")
     }
   }
@@ -67,13 +67,13 @@ class TextExpressionsSpec extends SparkSpec {
       df.orderBy("doc_id").select("doc_id", "fingerprints")
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toSeq
     assert(fps(TextAnalysis.docFingerprints(docs, "text")) ===
-      fps(TextAnalysis.docFingerprintsHof(docs, "text")),
+      fps(TextReference.docFingerprintsHof(docs, "text")),
       "winnowing parity must hold on multibyte text")
 
     val toks = docs.select(col("doc_id"), spaceTokens(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
     assert(toks
-      .filter(wordNgrams(col("w"), 3) =!= wordNgramsHof(col("w"), 3))
+      .filter(wordNgrams(col("w"), 3) =!= TextReference.wordNgramsHof(col("w"), 3))
       .count() === 0L, "n-gram parity must hold on multibyte tokens")
   }
 

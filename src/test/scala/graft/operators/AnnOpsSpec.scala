@@ -451,10 +451,10 @@ class AnnOpsSpec extends SparkSpec {
     val k = 10
     val exact = AnnOps.bruteTopK(vecs, queries, k)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val deq = AnnOps.dequantizeEmbeddings(
+    val deq = AnnReference.dequantizeEmbeddings(
       AnnOps.quantizeEmbeddings(vecs, "v"))
       .select(col("vec_id"), col("v_deq").as("v"))
-    val qdeq = AnnOps.dequantizeEmbeddings(
+    val qdeq = AnnReference.dequantizeEmbeddings(
       AnnOps.quantizeEmbeddings(queries, "v"))
       .select(col("vec_id"), col("v_deq").as("v"))
     val approx = AnnOps.bruteTopK(deq, qdeq, k)

@@ -64,7 +64,7 @@ class DedupOpsSpec extends SparkSpec {
     val df = Seq((1L, base), (2L, near)).toDF("doc_id", "text")
       .withColumn("w", split(col("text"), " "))
       .withColumn("grams", graft.functions.TextFns.wordNgrams(col("w"), 3))
-      .withColumn("sig", DedupOps.minhashSignature(col("grams"), 64))
+      .withColumn("sig", DedupReference.minhashSignature(col("grams"), 64))
     val Array(a, b) = df.orderBy("doc_id").select("sig", "grams").collect()
     val sigA = a.getSeq[Int](0); val sigB = b.getSeq[Int](0)
     val gA = a.getSeq[String](1).toSet; val gB = b.getSeq[String](1).toSet
@@ -212,7 +212,7 @@ class DedupOpsSpec extends SparkSpec {
       f(df, 3, 0.4, Seq("lang", "source")).orderBy("id1", "id2")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(result(planted, DedupOps.ngramJaccardPairsPrefix) ===
-      result(planted, DedupOps.ngramJaccardPairs))
+      result(planted, DedupReference.ngramJaccardPairs))
 
     val gen = (0 until 20).map { i =>
       val base = doc(i % 5, 60) // 4 docs per seed → guaranteed dup clusters
@@ -220,7 +220,7 @@ class DedupOpsSpec extends SparkSpec {
       (i.toLong, "en", s"src${i % 2}", text)
     }.toDF("doc_id", "lang", "source", "text")
     assert(result(gen, DedupOps.ngramJaccardPairsPrefix) ===
-      result(gen, DedupOps.ngramJaccardPairs))
+      result(gen, DedupReference.ngramJaccardPairs))
   }
 
   test("semanticDedupPairs: a subset of the exact pairs with full recall on planted dups") {
@@ -330,7 +330,7 @@ class DedupOpsSpec extends SparkSpec {
       df.select(col("bucket"), f(col("ids")).as("p"))
         .select(col("bucket"), col("p.id1"), col("p.id2"))
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(pairs(DedupOps.bucketPairs) === pairs(DedupOps.bucketPairsHof))
+    assert(pairs(DedupOps.bucketPairs) === pairs(DedupReference.bucketPairsHof))
   }
 
   test("qDedupEmbedding plan construction triggers zero Spark jobs") {

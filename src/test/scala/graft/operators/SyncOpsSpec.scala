@@ -121,41 +121,47 @@ class SyncOpsSpec extends SparkSpec {
       ("https://example.eu/2", "")))
   }
 
-  test("robotsDisallowed implements prefix, glob, and exact-match rules") {
-    import spark.implicits._
+  /** The paths a `User-agent: *` robots.txt holding one Disallow line per
+    * rule denies, through `parseRobotsTxt` + `robotsCanFetch` (bare paths
+    * test as-is).
+    */
+  private def disallowed(paths: Seq[String], rules: Seq[String]): Set[String] = {
+    val robots = Seq(("h1", ("User-agent: *" +: rules.map("Disallow: " + _)).mkString("\n")))
+      .toDF("host", "content")
+    val urls = paths.map(p => ("h1", p)).toDF("host", "url")
+    SyncOps.robotsCanFetch(SyncOps.parseRobotsTxt(robots, "host", "content"),
+      urls, "host", "url", "anybot")
+      .filter(!col("allowed")).select("url").collect().map(_.getString(0)).toSet
+  }
+
+  test("robotsCanFetch implements prefix, glob, and exact-match rules") {
     val urls = Seq(
       "/private/a.html", // prefix rule
       "/tmp/x/cache.bin", // glob with inner *
       "/exact", // exact ($) rule hit
       "/exact/sub", // NOT hit by exact rule, no other match
       "/public/ok.html" // clean
-    ).zipWithIndex.map { case (p, i) => (i.toLong, p) }.toDF("id", "path")
+    )
     val rules = Seq("/private", "/tmp/*/cache*", "/exact$")
-    val got = SyncOps.robotsDisallowed(urls, rules)
-      .select("path").collect().map(_.getString(0)).toSet
+    val got = disallowed(urls, rules)
     assert(got === Set("/private/a.html", "/tmp/x/cache.bin", "/exact"))
   }
 
-  test("robotsDisallowed honors fnmatch [seq] and [!seq] character classes") {
-    import spark.implicits._
+  test("robotsCanFetch honors fnmatch [seq] and [!seq] character classes") {
     val urls = Seq(
       "/docs/1a", "/docs/2a", "/docs/xa", // [0-9] class: digits hit, letter doesn't
       "/cache/a1", "/cache/b1" // [!a] negation: everything but 'a'
-    ).zipWithIndex.map { case (p, i) => (i.toLong, p) }.toDF("id", "path")
+    )
     val rules = Seq("/docs/[0-9]a$", "/cache/[!a]*")
-    val got = SyncOps.robotsDisallowed(urls, rules)
-      .select("path").collect().map(_.getString(0)).toSet
+    val got = disallowed(urls, rules)
     assert(got === Set("/docs/1a", "/docs/2a", "/cache/b1"))
   }
 
-  test("robotsDisallowed treats a leading ^ in a class as a literal, like fnmatch") {
-    import spark.implicits._
+  test("robotsCanFetch treats a leading ^ in a class as a literal, like fnmatch") {
     // CPython fnmatch: only '!' negates — '[^b]' matches the characters
     // '^' or 'b', NOT everything-but-b. Java regex negation must not leak.
     val urls = Seq("/a^x", "/abx", "/acx")
-      .zipWithIndex.map { case (p, i) => (i.toLong, p) }.toDF("id", "path")
-    val got = SyncOps.robotsDisallowed(urls, Seq("/a[^b]x$"))
-      .select("path").collect().map(_.getString(0)).toSet
+    val got = disallowed(urls, Seq("/a[^b]x$"))
     assert(got === Set("/a^x", "/abx"),
       "caret and 'b' match; 'c' must NOT match a literal-caret class")
   }
