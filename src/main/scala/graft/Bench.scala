@@ -122,13 +122,27 @@ object Bench {
     val order =
       if (only.isEmpty) s""","order_file":"BENCH_ORDER.json","q_unit":"centisec","q":$qArr"""
       else ""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$nRuns,"spread_total":$totalSpread,$host,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)},"errors":$es,"queries_file":"BENCH.json"$order,"top":$top}"""
+    // Only a full-suite run at the default sf dir (SPARK_GRAFT_SF_DIR
+    // unset) rewrites the committed records: a FOCUSED run's partial total
+    // would read as a catastrophic regression in the BENCH.json trend, and
+    // a run at another scale is not comparable with it. Other records land
+    // only where SPARK_GRAFT_BENCH_LOCAL explicitly points, and the line
+    // names the file that holds its full record, if any.
+    val trendRun = only.isEmpty && !sys.env.contains("SPARK_GRAFT_SF_DIR")
+    // A value ending in ".json" names the target file, so scale-point
+    // records (e.g. BENCH_local_sf1.json for the replicated-sf1 twin) can
+    // coexist with the sf0.1 trend line; ANY other value — "1", "true",
+    // whatever boolean convention a caller reaches for — keeps the
+    // historical meaning and writes BENCH_local.json (a bare flag value
+    // silently becoming a filename would strand the record in a file
+    // named "true" and leave the trend line stale).
+    val localFile = sys.env.get("SPARK_GRAFT_BENCH_LOCAL")
+      .map(v => if (v.endsWith(".json")) v else "BENCH_local.json")
+    val queriesFile = (if (trendRun) Some("BENCH.json") else localFile)
+      .fold("")(f => s""","queries_file":${jstr(f)}""")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$nRuns,"spread_total":$totalSpread,$host,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)},"errors":$es$queriesFile$order,"top":$top}"""
     val record = s"""{"metric":"total","value":$total,"unit":"sec","runs_per_query":$nRuns,"spread_total":$totalSpread,$host,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)},"errors":$es,"queries":$qs,"spread":$sp}"""
-    // A FOCUSED run (BENCH_ONLY set) must not clobber the full-suite
-    // records — its partial total would read as a catastrophic regression
-    // in the BENCH.json trend. Focused records land only where
-    // SPARK_GRAFT_BENCH_LOCAL explicitly points.
-    if (only.isEmpty) {
+    if (trendRun) {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH.json"), record.getBytes("UTF-8"))
       java.nio.file.Files.write(
@@ -144,15 +158,7 @@ object Bench {
     // driver-run record lands on a contended host. OPT-IN via env: the
     // driver invokes this same main without the flag, so its (possibly
     // contended) run can never clobber the builder's clean-host record.
-    // A value ending in ".json" names the target file, so scale-point
-    // records (e.g. BENCH_local_sf1.json for the replicated-sf1 twin) can
-    // coexist with the sf0.1 trend line; ANY other value — "1", "true",
-    // whatever boolean convention a caller reaches for — keeps the
-    // historical meaning and writes BENCH_local.json (a bare flag value
-    // silently becoming a filename would strand the record in a file
-    // named "true" and leave the trend line stale).
-    sys.env.get("SPARK_GRAFT_BENCH_LOCAL").foreach { v =>
-      val file = if (v.endsWith(".json")) v else "BENCH_local.json"
+    localFile.foreach { file =>
       java.nio.file.Files.write(
         java.nio.file.Paths.get(file), record.getBytes("UTF-8"))
     }

@@ -9,8 +9,25 @@ import org.apache.spark.sql.SparkSession
   * `shuffle.partitions` sized to cores (cluster: 2-3x total cores):
   * AQE (runtime coalescing + skew-join splitting), broadcast joins for dims,
   * UTC session time.
+  *
+  * Spark's generated-code cache holds [[CodegenCacheEntries]] classes
+  * instead of its default 100. The graftbench working sets are ~127
+  * distinct classes for llm_curate and fewer than 100 for crawl_refresh;
+  * one sf0.001 `graft.Bench` run over every registered query compiles
+  * ~1,130 with an unbounded cache. At 100 entries (four LRU segments of
+  * 25) every steady-state llm_curate pass recompiled 84-99 classes of
+  * identical source. `spark.sql.codegen.cache.maxEntries` is a static
+  * conf, and the cache is JVM-wide and sized once, from the active
+  * session's conf, when Spark first generates code: the setting takes
+  * effect only when this builder creates the JVM's first session, and
+  * `getOrCreate` on an existing session ignores it.
   */
 object GraftSession {
+
+  /** Codegen cache capacity: the whole registered suite with headroom for
+    * the cache's four-segment split.
+    */
+  val CodegenCacheEntries = 2048
 
   def builder(appName: String = "graft"): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -27,6 +44,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // The driver-generated events.parquet stores ts as INT64
       // TIMESTAMP(NANOS); Spark 4.x refuses that physical type unless it is
       // read as a raw long (Tables.events converts nanos -> TimestampType

@@ -12,6 +12,12 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, qnames) = args.take(4)
     val spark = GraftSession.get("graft-plandump")
+    // A dump must show every field: at Spark's default (25) a long literal
+    // such as semantic_search's stub embedding is cut to "... N more
+    // fields", which can hide a difference between two dumps. Set here
+    // rather than in GraftSession, where it would lengthen every explain
+    // string Spark posts.
+    spark.conf.set("spark.sql.debug.maxToStringFields", Int.MaxValue.toString)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     qnames.split(",").foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -8,7 +8,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
   test("extensions register cosine_sim / dot_product as SQL functions") {
     // Extensions only apply at session instantiation, so force a NEW session
     // (clearing the active/default ones); the SparkContext is shared with
-    // other suites and must NOT be stopped here.
+    // other suites and must NOT be stopped here. SharedSpark creates it,
+    // whichever suite runs first: its conf also sizes the JVM-wide codegen
+    // cache, which the first compile fixes for good.
+    SharedSpark.spark
     val prevDefault = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -49,6 +52,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("extensions register glob_regex / warc_parse / gunzip") {
+    SharedSpark.spark
     val prevDefault = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()

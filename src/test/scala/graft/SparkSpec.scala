@@ -21,6 +21,7 @@ object SharedSpark {
       .master("local[4, 2]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
