@@ -27,6 +27,12 @@ import org.apache.spark.sql.functions._
   * All similarity math runs through the codegen'd `CosineSim`/`DotProduct`
   * expressions (graft.functions.VectorExpressions) — primitive loops, no
   * interpreted array lambdas in the hot path.
+  *
+  * Two private helpers carry the shared decisions: [[topK]] is the one
+  * bounded per-group top-k step (every probe, rerank and seed window goes
+  * through it), and [[lloyd]] is the one grouped Lloyd trainer (the coarse
+  * IVF level, the fine IVF level and the PQ codebooks are its one-group,
+  * per-coarse-cell and per-subspace cases).
   */
 object AnnOps {
 
@@ -52,20 +58,37 @@ object AnnOps {
   def bruteTopK(vecs: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = vecs.select(col("vec_id").as("neighbor_id"), col("v").as("cv"))
     val q = queries.select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val byQuery = Window.partitionBy("query_id").orderBy(desc("cos_raw"), col("neighbor_id"))
-    c.crossJoin(broadcast(q))
+    rankNeighbors(c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos_raw", cosine_sim(col("cv"), col("qv")))
       // zero vectors have no cosine (0/0 = NaN) and are EXCLUDED: Spark's
       // NaN-largest ordering would rank them first, and the DuckDB twin's
       // x/0 yields NULL — dropping on both sides is the one portable (and
       // semantically right) answer for a similarity search
-      .filter(!isnan(col("cos_raw")))
-      .withColumn("rank", row_number().over(byQuery).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        roundHalfUp(col("cos_raw"), 4).as("cos_sim"))
+      .filter(!isnan(col("cos_raw"))), "cos_raw", k, 4, "cos_sim")
   }
+
+  /** The one bounded top-k step: rows numbered by `order` within each
+    * `part` group (distinct ranks 1, 2, …; every ordering here ends in id
+    * keys, so the numbering is deterministic), those ranked ≤ `k`
+    * kept, the rank in a long `rank` column. `k` is a literal — which Spark
+    * turns into a per-partition group limit below the window's shuffle — or
+    * a per-row Column (a per-group count).
+    */
+  private def topK(df: DataFrame, part: String, order: Seq[Column], k: Column): DataFrame =
+    df.withColumn("rank",
+        row_number().over(Window.partitionBy(part).orderBy(order: _*)).cast("long"))
+      .filter(col("rank") <= k)
+
+  /** The per-query neighbor ranking every search here ends in: [[topK]]
+    * by descending `score`, ties on neighbor_id, emitted as (query_id,
+    * neighbor_id, rank, `score` rounded half-up to `digits` as `as`).
+    */
+  private def rankNeighbors(cands: DataFrame, score: String, k: Int,
+      digits: Int, as: String): DataFrame =
+    topK(cands, "query_id", Seq(desc(score), col("neighbor_id")), lit(k))
+      .select(col("query_id"), col("neighbor_id"), col("rank"),
+        roundHalfUp(col(score), digits).as(as))
 
   /** The registered brute-force query bounds its query side to a CONSTANT
     * number of vectors (first 8 by id of the %100 sample) — the exact
@@ -206,20 +229,12 @@ object AnnOps {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id")
       .distinct() // same pair may collide in several tables
-    val byQuery = Window.partitionBy("query_id").orderBy(desc("cos_raw"), col("neighbor_id"))
-    cand
+    rankNeighbors(cand
       .join(vecs.select(col("vec_id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
       .join(broadcast(queries.select(col("vec_id").as("query_id"), col("v").as("qv"))), "query_id")
       .withColumn("cos_raw", cosine_sim(col("cv"), col("qv")))
-      // zero vectors have no cosine (0/0 = NaN) and are EXCLUDED: Spark's
-      // NaN-largest ordering would rank them first, and the DuckDB twin's
-      // x/0 yields NULL — dropping on both sides is the one portable (and
-      // semantically right) answer for a similarity search
-      .filter(!isnan(col("cos_raw")))
-      .withColumn("rank", row_number().over(byQuery).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        roundHalfUp(col("cos_raw"), 4).as("cos_sim"))
+      .filter(!isnan(col("cos_raw"))), // zero vectors: no cosine (see bruteTopK)
+      "cos_raw", k, 4, "cos_sim")
   }
 
   def qAnnLsh(s: SparkSession, d: String): DataFrame = {
@@ -246,25 +261,6 @@ object AnnOps {
     */
   private def noNegZero(c: Column): Column = c + lit(0.0d)
 
-  /** Deterministic IVF (inverted-file) coarse quantizer. Training is
-    * corpus-size-INDEPENDENT: Lloyd runs over a bounded deterministic sample
-    * (the `trainCap` hash-smallest vec_ids — one TakeOrdered pass over the
-    * corpus, per-partition top-k, no full sort), exactly how published IVF
-    * implementations train the quantizer on a sample rather than the
-    * collection. At 100 TB the training cost is one corpus scan to draw the
-    * sample plus `iters` passes over ≤ `trainCap` vectors; seeding from the
-    * hash order is reproducible without RNG state.
-    *
-    * Within the sample each Lloyd pass is one codegen'd assignment
-    * projection (the [[graft.functions.NearestCentroid]] kernel over the
-    * previous iteration's COLLECTED centroids — they are nlist × dim
-    * doubles and end as plan literals regardless) plus one partial-agg
-    * groupBy for the ordered-fold update means. The per-iteration
-    * sort-collect keeps lineage flat (O(iters), not O(iters²) scans) and
-    * replaces the earlier crossJoin×nlist assignment shuffle, which
-    * carried the vectors and dominated training cost once cell counts
-    * became corpus-sized (round-18 decade probe).
-    */
   /** Euclidean-argmin assignment through the SAME max-dot kernel: argmin
     * ‖x−c‖² = argmax(x·c − ‖c‖²/2), realized by appending a constant-1
     * dimension to the vector and −‖c‖²/2 to each centroid — one extra
@@ -284,18 +280,11 @@ object AnnOps {
       c :+ -(0.5 * n)
     }
 
-  /** The assignment expression: plain max-dot, or Euclidean argmin via the
-    * augmented form (see [[euclidAugment]]).
-    */
-  def assignExpr(v: Column, cents: IndexedSeq[Array[Double]], euclid: Boolean): Column =
-    if (!euclid) nearestCentroid(v, cents)
-    else nearestCentroid(concat(v, array(lit(1.0d))), euclidAugment(cents))
-
   /** The deterministic training sample every quantizer here draws: the
     * `trainCap` hash-smallest vec_ids (one TakeOrdered pass — per-partition
-    * top-k, no full sort), persisted. Factored out so ONE sample feeds the
-    * coarse Lloyd, the fine Lloyd and the residual PQ codebooks (each used
-    * to re-sort the corpus independently); callers unpersist when done.
+    * top-k, no full sort), persisted. [[ivf2Train]] feeds its coarse and
+    * fine levels (and [[ivfpqTrainAll]] its residuals) from ONE such
+    * sample; callers unpersist when done.
     */
   private[operators] def hashSample(vecs: DataFrame, trainCap: Int): DataFrame =
     vecs
@@ -304,92 +293,107 @@ object AnnOps {
       .select("vec_id", "v")
       .persist()
 
+  /** Deterministic IVF (inverted-file) coarse quantizer. Training is
+    * corpus-size-INDEPENDENT: Lloyd runs over a bounded deterministic sample
+    * (the `trainCap` hash-smallest vec_ids — one TakeOrdered pass over the
+    * corpus, per-partition top-k, no full sort), exactly how published IVF
+    * implementations train the quantizer on a sample rather than the
+    * collection. At 100 TB the training cost is one corpus scan to draw the
+    * sample plus `iters` passes over ≤ `trainCap` vectors; seeding from the
+    * hash order is reproducible without RNG state. The Lloyd passes are
+    * [[lloyd]]'s one-group case.
+    */
   def ivfCentroids(vecs: DataFrame, nlist: Int, iters: Int, dim: Int = 64,
-      trainCap: Int = 100000, euclid: Boolean = false): DataFrame = {
+      trainCap: Int = 100000): DataFrame = {
     val session = vecs.sparkSession
     import session.implicits._
     val sample = hashSample(vecs, trainCap)
-    val cents = lloydCents(sample, nlist, iters, dim, euclid)
+    val cents = flatLloyd(sample, nlist, iters, dim)
     sample.unpersist(false)
     cents.zipWithIndex
       .map { case (c, i) => (i.toLong, c.toSeq) }
       .toDF("cid", "cv")
   }
 
-  /** The Lloyd loop over an already-persisted [[hashSample]] — factored
-    * out of [[ivfCentroids]] so [[ivf2Train]] can run the coarse level on
-    * the SAME cached sample its fine level (and the residual PQ training)
-    * reads, instead of each level re-sorting the corpus into its own
-    * sample. Identical arithmetic, identical collects.
+  /** [[lloyd]] over a whole (vec_id, v) sample as one group — the coarse
+    * quantizer of [[ivfCentroids]] and [[ivf2Train]].
     */
-  private def lloydCents(sample: DataFrame, nlist: Int, iters: Int,
-      dim: Int, euclid: Boolean): IndexedSeq[Array[Double]] = {
-    // cid by position in the same deterministic hash order (NOT
-    // monotonically_increasing_id, whose values depend on the physical
-    // partitioning of the limit output). The seed table is sort-COLLECTED
-    // and re-parallelized with an explicit cid: a global row_number window
-    // would move the rows to one partition anyway (and WARN about it), and
-    // this quantizer's centroids end up driver-side literals regardless
-    // (see centroidArrays) — so the ≤nlist-row collect is the honest form,
-    // not a scale hazard. orderBy→limit compiles to TakeOrderedAndProject,
-    // whose collected order IS the sort order.
-    val seeds = sample
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(nlist)
-      .select(col("v"))
-      .collect()
-    var cents: IndexedSeq[Array[Double]] = seeds.toIndexedSeq
-      .map(_.getSeq[Double](0).toArray)
+  private def flatLloyd(sample: DataFrame, nlist: Int, iters: Int,
+      dim: Int): IndexedSeq[Array[Double]] =
+    lloyd(sample.withColumn("g", lit(0)), lit(nlist), iters, dim, euclid = false)
+      .getOrElse(0, IndexedSeq.empty)
+
+  /** The one Lloyd trainer, grouped: every group `g` of the persisted
+    * `sample` (vec_id, g: int, v) trains its own centroids, `k` of them
+    * (a Column — a literal, or a per-group count looked up from `g`).
+    * Returns each group's centroids in cid order.
+    *
+    *  - Seeds: per group, the `k` hash-smallest members by
+    *    (xxhash64(vec_id), vec_id) through [[topK]] — position in that
+    *    order is the cid; a group with fewer members seeds what it has.
+    *  - Assignment, each pass: ONE broadcast join on `g` to the current
+    *    matrices + the codegen'd [[graft.functions.NearestCentroidDyn]]
+    *    kernel (the matrix is a column — never an nlist × dim literal
+    *    tree), over the Euclid-augmented form when `euclid` (see
+    *    [[euclidAugment]]). The kernel's first max is the min POSITION,
+    *    and positions run in cid order, so ties go to the min cid — the
+    *    twins' min-cid-at-max-dot, bit for bit.
+    *  - Update: an ORDERED left fold (members sorted by vec_id), not a
+    *    plain `avg`: a double `avg` accumulates in scan order, so its low
+    *    bits are partition-dependent and the trained quantizer — and every
+    *    result downstream of it — would not be reproducible across cluster
+    *    layouts, let alone engines. Whole VECTORS fold via zip_with
+    *    (component i accumulates in vec_id order — the per-component IEEE
+    *    add sequence the twins' `list(x ORDER BY vec_id)` fold runs, see
+    *    `TwinHashSql.lloydCtes`), so the shuffle moves one row per member,
+    *    not `dim` exploded rows. The interpreted lambdas are sanctioned
+    *    here: this is the index-BUILD phase, bounded by trainCap × dim
+    *    elements regardless of corpus size, not a per-query path.
+    *  - One collect per pass (the matrices are totalCells × dim doubles
+    *    and end as plan literals or broadcast data anyway), which keeps
+    *    lineage flat. A cell Lloyd empties vanishes from the groupBy; the
+    *    survivors keep their sparse cids, so position order stays cid
+    *    order and the caller's final dense re-index matches the twins'.
+    *
+    * All groups train in one DataFrame — bit-identical to independent
+    * per-group runs (groups share nothing), with one driver round-trip per
+    * pass instead of one per group per pass.
+    */
+  private def lloyd(sample: DataFrame, k: Column, iters: Int, dim: Int,
+      euclid: Boolean): Map[Int, IndexedSeq[Array[Double]]] = {
+    val spark = sample.sparkSession
+    import spark.implicits._
+    def regroup(rows: Array[org.apache.spark.sql.Row]) =
+      rows.toIndexedSeq
+        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+        .groupBy(_._1)
+        .map { case (g, rs) => g -> rs.sortBy(_._2).map(t => (t._2, t._3)) }
+    var cents = regroup(
+      topK(sample, "g", Seq(xxhash64(col("vec_id")), col("vec_id")), k)
+        .select(col("g"), (col("rank") - 1).as("cid"), col("v"))
+        .collect())
+    val v = if (euclid) concat(col("v"), array(lit(1.0d))) else col("v")
     (0 until iters).foreach { _ =>
-      // Assignment via the native NearestCentroid kernel over the
-      // COLLECTED previous centroids (each iteration's table is nlist×dim
-      // doubles — a few KB — and becomes plan literals at the end anyway):
-      // one codegen'd projection over the sample, so the only shuffle per
-      // pass is the narrow update-step groupBy. The earlier
-      // crossJoin(broadcast)+min_by form shuffled sample × nlist rows
-      // CARRYING the vectors — ~2 GB per pass at 20k × 200 cells, which
-      // the round-18 decade probe measured as the dominant IVF cost.
-      // Kernel tie-breaks (first max = min POSITION; positions are in cid
-      // order) match the min_by (min-distance-then-min-cid) and the twin
-      // bit for bit.
-      //
-      // The update-step mean is an ORDERED left fold (members sorted by
-      // vec_id), not a plain `avg`: a double `avg` accumulates in scan
-      // order, so its low bits are partition-dependent and the trained
-      // quantizer — and every result downstream of it — would not be
-      // reproducible across cluster layouts, let alone engines. The fold
-      // fixes the accumulation order, making the centroids bit-identical
-      // under ANY partitioning; the DuckDB twins (TwinHashSql.annIvf /
-      // dedupSemantic) re-run the same Lloyd arithmetic with the same
-      // fold. Whole VECTORS fold via zip_with (component i accumulates in
-      // vec_id order — the identical per-component IEEE add sequence the
-      // twins' per-pos `list(x ORDER BY vec_id)` fold runs), so the
-      // shuffle moves one row per member vector, not dim exploded rows.
-      // The interpreted lambdas are sanctioned here: this is the
-      // index-BUILD phase, bounded by trainCap × dim elements regardless
-      // of corpus size, not a per-query path.
-      //
-      // Per-iteration sort-collect: a cell Lloyd empties vanishes from the
-      // groupBy; collecting ORDERED BY cid keeps the surviving cells'
-      // relative order, so position-based tie-breaks stay isomorphic to
-      // sparse-cid tie-breaks and the final dense re-index matches
-      // centroidArrays' (and the twin's lv_cf) exactly.
-      val next = sample
-        .withColumn("cid", assignExpr(col("v"), cents, euclid).cast("long"))
-        .groupBy("cid")
+      val mats = cents.toSeq.map { case (g, cs) =>
+        val m = cs.map(_._2)
+        (g, (if (euclid) euclidAugment(m) else m).map(_.toSeq), cs.map(_._1))
+      }.toDF("g", "mats", "cids")
+      cents = regroup(sample
+        .join(broadcast(mats), "g")
+        .withColumn("cid", element_at(col("cids"),
+          graft.functions.VectorFns.nearest_centroid_dyn(v, col("mats")) + 1))
+        .groupBy("g", "cid")
         .agg(array_sort(collect_list(struct(col("vec_id"), col("v")))).as("ms"),
           count(lit(1)).as("n"))
-        .select(col("cid"),
+        .select(col("g"), col("cid"),
           transform(
             aggregate(col("ms"),
               array_repeat(lit(0.0d), dim),
               (acc, e) => zip_with(acc, e.getField("v"), (a, b) => a + b)),
             s => s / col("n")).as("cv"))
-        .orderBy("cid")
-        .collect()
-      cents = next.map(r => r.getSeq[Double](r.fieldIndex("cv")).toArray).toIndexedSeq
+        .collect())
     }
-    cents
+    cents.map { case (g, cs) => g -> cs.map(_._2) }
   }
 
   /** Driver-side materialization of the trained quantizer — nlist × dim
@@ -398,16 +402,9 @@ object AnnOps {
     * to a zero-shuffle projection instead of a crossJoin + groupBy.
     * Re-indexed densely 0..m−1 in cid order (Lloyd can empty a cell).
     */
-  def centroidArrays(centroids: DataFrame): IndexedSeq[Array[Double]] = {
-    val rows = centroids.orderBy("cid").collect()
+  def centroidArrays(centroids: DataFrame): IndexedSeq[Array[Double]] =
+    centroids.orderBy("cid").collect()
       .map(r => r.getSeq[Double](r.fieldIndex("cv")).toArray).toIndexedSeq
-    // ivfCentroids now hands over a small local-relation table (its loop
-    // collects per iteration), so there is no cache entry to release —
-    // the unpersist stays as a no-op guard for any caller that persisted
-    // a centroid table of its own before passing it in.
-    centroids.unpersist(false)
-    rows
-  }
 
   /** Nearest-centroid id as a pure expression: the native
     * [[graft.functions.NearestCentroid]] kernel — one codegen'd argmax
@@ -459,29 +456,17 @@ object AnnOps {
     // Literal-backed centroid table for the query probe side: no lineage to
     // the corpus, so probing never re-runs training.
     val centDf = cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cid", "cv")
-    val byQuery = Window.partitionBy("query_id").orderBy(desc("sim"), col("cid"))
-    val probed = queries.select(col("vec_id").as("query_id"), col("v").as("qv"))
-      .crossJoin(broadcast(centDf))
-      .withColumn("sim", noNegZero(dot_product(col("qv"), col("cv"))))
-      .withColumn("pr", row_number().over(byQuery))
-      .filter(col("pr") <= nprobe)
+    val probed = topK(queries.select(col("vec_id").as("query_id"), col("v").as("qv"))
+        .crossJoin(broadcast(centDf))
+        .withColumn("sim", noNegZero(dot_product(col("qv"), col("cv")))),
+        "query_id", Seq(desc("sim"), col("cid")), lit(nprobe))
       .select("query_id", "cid", "qv")
     // The inverted file: one projection over the corpus, vectors ride along
     // so candidates need no join back to the corpus for the rerank.
     val inverted = vecs.select(
       col("vec_id").as("neighbor_id"), col("v").as("cv2"),
       nearestCentroid(col("v"), cents).as("cid"))
-    val byQueryRank = Window.partitionBy("query_id").orderBy(desc("cos_raw"), col("neighbor_id"))
-    inverted
-      .join(broadcast(probed), "cid")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos_raw", noNegZero(cosine_sim(col("cv2"), col("qv"))))
-      .filter(!isnan(col("cos_raw"))) // zero vectors: no cosine (see bruteTopK)
-      .select("query_id", "neighbor_id", "cos_raw")
-      .withColumn("rank", row_number().over(byQueryRank).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        roundHalfUp(col("cos_raw"), 4).as("cos_sim"))
+    cosineRerank(inverted, probed, k)
   }
 
   // ------------------------------------------------- two-level IVF quantizer
@@ -569,22 +554,15 @@ object AnnOps {
   /** Train the two-level quantizer. Deterministic end to end (the DuckDB
     * twins re-derive every step):
     *
-    *  1. COARSE: [[ivfCentroids]] Lloyd over the trainCap hash-smallest
+    *  1. COARSE: the [[ivfCentroids]] Lloyd over the trainCap hash-smallest
     *     sample, ncoarse = [[ivf2Ncoarse]] cells → plan-literal matrix.
     *  2. Exact full-corpus coarse cell populations (one ≤ncoarse-row
     *     partial-agg groupBy) → per-cell fine counts k_g = [[ivf2FineK]].
-    *  3. FINE seeds: per coarse cell, its k_g hash-smallest sample members
-    *     (rank within the cell by (xxhash64(vec_id), vec_id)); a cell with
-    *     fewer sample members than k_g seeds what it has.
-    *  4. FINE Lloyd, `iters` grouped passes: assignment is ONE broadcast
-    *     join on gcid + the codegen'd [[graft.functions.NearestCentroidDyn]]
-    *     kernel (matrix as a column — never an nlist×dim literal tree);
-    *     the update mean is the same ordered vec_id fold as the coarse
-    *     level, grouped by (gcid, fcid). Sparse fcids survive emptied
-    *     cells across passes (position order in each cell's matrix is
-    *     sparse-fcid order, so the kernel's first-max tie-break stays
-    *     isomorphic to min-fcid — exactly the coarse level's invariant).
-    *  5. Dense per-cell re-index; corpus coarse cells that trained no fine
+    *  3. FINE: [[lloyd]] grouped by coarse cell over the same sample,
+    *     k_g centroids per cell (seeded from the cell's hash-smallest
+    *     members; a cell with fewer sample members than k_g seeds what it
+    *     has).
+    *  4. Dense per-cell re-index; corpus coarse cells that trained no fine
     *     centroid (possible only when n > trainCap leaves a cell
     *     sample-empty) fall back to one fine cell at the coarse centroid.
     *
@@ -612,66 +590,25 @@ object AnnOps {
       vecs: DataFrame, n: Long, target: Int, iters: Int = 2,
       dim: Int = 64, trainCap: Int = 100000,
       ncoarseOverride: Option[Int] = None): (Ivf2Index, DataFrame) = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
     val ncoarse = ncoarseOverride.getOrElse(ivf2Ncoarse(n))
-    val sample0 = hashSample(vecs, trainCap)
-    val coarse = lloydCents(sample0, ncoarse, iters, dim, euclid = false)
+    val sample = hashSample(vecs, trainCap)
+    val coarse = flatLloyd(sample, ncoarse, iters, dim)
     val counts = vecs
       .select(nearestCentroid(col("v"), coarse).as("gcid"))
       .groupBy("gcid").agg(count(lit(1)).as("cn"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val kg = counts.map { case (g, c) => g -> ivf2FineK(c, target) }
-    // Fine-level sample: the same cached rows, coarse cell attached by a
-    // projection (the kernel over ≤512 literal centroids) — not a second
-    // corpus TakeOrdered.
-    val sample = sample0.select(col("vec_id"), col("v"),
-      nearestCentroid(col("v"), coarse).as("gcid"))
-    def regroup(rows: Array[org.apache.spark.sql.Row]): IndexedSeq[(Int, IndexedSeq[(Long, Array[Double])])] =
-      rows.toIndexedSeq
-        .map(r => (r.getInt(r.fieldIndex("gcid")), r.getLong(r.fieldIndex("fcid")),
-          r.getSeq[Double](r.fieldIndex("cv")).toArray))
-        .groupBy(_._1).toIndexedSeq.sortBy(_._1)
-        .map { case (g, rs) => g -> rs.sortBy(_._2).map(t => (t._2, t._3)) }
-    val kgDf = kg.toIndexedSeq.toDF("gcid", "kg")
-    val byCell = Window.partitionBy("gcid")
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    val seedRows = sample
-      .join(broadcast(kgDf), "gcid")
-      .withColumn("r", row_number().over(byCell))
-      .filter(col("r") <= col("kg"))
-      .select(col("gcid"), (col("r") - 1).cast("long").as("fcid"), col("v").as("cv"))
-      .collect()
-    var fine = regroup(seedRows)
-    (0 until iters).foreach { _ =>
-      val matDf = fine.map { case (g, cs) =>
-        (g, cs.map(_._2.toSeq), cs.map(_._1))
-      }.toDF("gcid", "mats", "fcids")
-      val next = sample
-        .join(broadcast(matDf), "gcid")
-        .withColumn("fcid", element_at(col("fcids"),
-          graft.functions.VectorFns.nearest_centroid_dyn(col("v"), col("mats")) + 1))
-        .groupBy("gcid", "fcid")
-        // identical ordered-fold update as the coarse Lloyd (see
-        // ivfCentroids): members sorted by vec_id, per-component strict
-        // left fold, one closing division — bit-reproducible under any
-        // partitioning, re-run verbatim by the twins
-        .agg(array_sort(collect_list(struct(col("vec_id"), col("v")))).as("ms"),
-          count(lit(1)).as("cn"))
-        .select(col("gcid"), col("fcid"),
-          transform(
-            aggregate(col("ms"),
-              array_repeat(lit(0.0d), dim),
-              (acc, e) => zip_with(acc, e.getField("v"), (a, b) => a + b)),
-            s => s / col("cn")).as("cv"))
-        .collect()
-      fine = regroup(next)
-    }
-    val fineMap = fine.toMap
+    // Fine level: the same cached rows grouped by coarse cell, attached by
+    // a projection (the kernel over ≤512 literal centroids) — not a second
+    // corpus TakeOrdered. Every sample cell is a corpus cell, so the k_g
+    // lookup always hits.
+    val fine = lloyd(
+      sample.select(col("vec_id"), nearestCentroid(col("v"), coarse).as("g"), col("v")),
+      typedLit(kg).apply(col("g")), iters, dim, euclid = false)
     val all = counts.keys.toIndexedSeq.sorted.map { g =>
-      g -> fineMap.get(g).map(_.map(_._2)).getOrElse(IndexedSeq(coarse(g)))
+      g -> fine.getOrElse(g, IndexedSeq(coarse(g)))
     }
-    (Ivf2Index(coarse, all), sample0)
+    (Ivf2Index(coarse, all), sample)
   }
 
   /** Corpus assignment against a trained two-level index: coarse cell from
@@ -693,14 +630,6 @@ object AnnOps {
       .drop("mats")
   }
 
-  /** Two-level probe + rerank: rank coarse centroids per query (≤ncoarse
-    * dots), take `cprobe` cells; rank THEIR fine centroids, take `nprobeF`
-    * fine cells; exact cosine rerank over only those cells' vectors
-    * (~nprobeF × target candidates — constant per query at any corpus
-    * size). Both probe tables are broadcast; the corpus-side plan is one
-    * assignment projection + broadcast joins + the per-query top-k window
-    * over narrow candidate rows.
-    */
   /** Literal-backed centroid tables for the probe side: (gcid, gcv) and
     * (gcid, fcid, fcv) — no lineage to the corpus, so probing never
     * re-runs training.
@@ -715,10 +644,18 @@ object AnnOps {
     (coarseDf, fineDf)
   }
 
+  /** Two-level probe + rerank: rank coarse centroids per query (≤ncoarse
+    * dots), take `cprobe` cells; rank THEIR fine centroids, take `nprobeF`
+    * fine cells; exact cosine rerank over only those cells' vectors
+    * (~nprobeF × target candidates — constant per query at any corpus
+    * size). Both probe tables are broadcast; the corpus-side plan is one
+    * assignment projection + broadcast joins + the per-query top-k window
+    * over narrow candidate rows.
+    */
   def ivf2ProbeTopK(vecs: DataFrame, queries: DataFrame, k: Int,
       idx: Ivf2Index, cprobe: Int, nprobeF: Int): DataFrame = {
     val (coarseDf, fineDf) = ivf2LiteralDfs(vecs.sparkSession, idx)
-    ivf2Rerank(vecs2Inverted(vecs, idx),
+    cosineRerank(vecs2Inverted(vecs, idx),
       ivf2Probe(queries, coarseDf, fineDf, cprobe, nprobeF), k)
   }
 
@@ -734,40 +671,31 @@ object AnnOps {
     */
   def ivf2Probe(queries: DataFrame, coarseDf: DataFrame, fineDf: DataFrame,
       cprobe: Int, nprobeF: Int): DataFrame = {
-    val byQueryG = Window.partitionBy("query_id").orderBy(desc("gsim"), col("gcid"))
-    val byQueryF = Window.partitionBy("query_id")
-      .orderBy(desc("fsim"), col("gcid"), col("fcid"))
-    queries.select(col("vec_id").as("query_id"), col("v").as("qv"))
-      .crossJoin(broadcast(coarseDf))
-      .withColumn("gsim", noNegZero(dot_product(col("qv"), col("gcv"))))
-      .withColumn("pr", row_number().over(byQueryG))
-      .filter(col("pr") <= cprobe)
+    val coarseProbed = topK(queries.select(col("vec_id").as("query_id"), col("v").as("qv"))
+        .crossJoin(broadcast(coarseDf))
+        .withColumn("gsim", noNegZero(dot_product(col("qv"), col("gcv")))),
+        "query_id", Seq(desc("gsim"), col("gcid")), lit(cprobe))
       .select("query_id", "gcid", "qv")
-      .join(broadcast(fineDf), "gcid")
-      .withColumn("fsim", noNegZero(dot_product(col("qv"), col("fcv"))))
-      .withColumn("fr", row_number().over(byQueryF))
-      .filter(col("fr") <= nprobeF)
+    topK(coarseProbed
+        .join(broadcast(fineDf), "gcid")
+        .withColumn("fsim", noNegZero(dot_product(col("qv"), col("fcv")))),
+        "query_id", Seq(desc("fsim"), col("gcid"), col("fcid")), lit(nprobeF))
       .select("query_id", "gcid", "fcid", "qv")
   }
 
   /** Exact cosine rerank of an inverted file against a probe table — the
-    * shared tail of the in-memory and persisted-index paths. `inverted`
-    * must carry (neighbor_id, cv2) plus the join key columns present in
-    * `probed` besides (query_id, qv).
+    * shared tail of the flat IVF, the two-level and the persisted-index
+    * paths. `inverted` must carry (neighbor_id, cv2) plus the join key
+    * columns present in `probed` besides (query_id, qv).
     */
-  private def ivf2Rerank(inverted: DataFrame, probed: DataFrame, k: Int): DataFrame = {
+  private def cosineRerank(inverted: DataFrame, probed: DataFrame, k: Int): DataFrame = {
     val keys = probed.columns.filter(c => c != "query_id" && c != "qv").toSeq
-    val byQueryRank = Window.partitionBy("query_id").orderBy(desc("cos_raw"), col("neighbor_id"))
-    inverted
+    rankNeighbors(inverted
       .join(broadcast(probed), keys)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos_raw", noNegZero(cosine_sim(col("cv2"), col("qv"))))
       .filter(!isnan(col("cos_raw"))) // zero vectors: no cosine (see bruteTopK)
-      .select("query_id", "neighbor_id", "cos_raw")
-      .withColumn("rank", row_number().over(byQueryRank).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        roundHalfUp(col("cos_raw"), 4).as("cos_sim"))
+      .select("query_id", "neighbor_id", "cos_raw"), "cos_raw", k, 4, "cos_sim")
   }
 
   def qAnnIvf(s: SparkSession, d: String): DataFrame = {
@@ -789,24 +717,23 @@ object AnnOps {
     * slivers — a NameNode hazard at scale). Every later query reads ONLY
     * its probed cell directories via dynamic partition pruning.
     */
-  def ivf2SaveIndex(vecs: DataFrame, path: String, n: Long,
-      target: Int = IvfCellTarget, iters: Int = 2, dim: Int = 64,
-      trainCap: Int = 100000): Unit = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val idx = ivf2Train(vecs, n, target, iters, dim, trainCap)
-    idx.coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("gcid", "gcv")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/coarse")
-    idx.fine.flatMap { case (g, cs) =>
-      cs.zipWithIndex.map { case (c, f) => (g, f.toLong, c.toSeq) }
-    }.toDF("gcid", "fcid", "fcv")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/fine")
+  def ivf2SaveIndex(vecs: DataFrame, path: String, n: Long): Unit = {
+    val idx = ivf2Train(vecs, n, IvfCellTarget)
+    saveCentroids(vecs.sparkSession, idx, path)
     ivf2Assign(vecs, idx)
       .withColumn("cid", col("gcid").cast("long") * Ivf2CellStride + col("fcid"))
       .drop("gcid", "fcid")
       .repartition(col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/inverted")
+  }
+
+  /** `<path>/coarse` and `<path>/fine`: the two [[ivf2LiteralDfs]]
+    * centroid tables, one parquet file each.
+    */
+  private def saveCentroids(spark: SparkSession, idx: Ivf2Index, path: String): Unit = {
+    val (coarseDf, fineDf) = ivf2LiteralDfs(spark, idx)
+    coarseDf.repartition(1).write.mode("overwrite").parquet(s"$path/coarse")
+    fineDf.repartition(1).write.mode("overwrite").parquet(s"$path/fine")
   }
 
   /** Query a persisted two-level index. The probe table (queries × nprobeF
@@ -825,7 +752,7 @@ object AnnOps {
       .select("query_id", "cid", "qv")
     val inverted = graft.Tables.parquet(spark, s"$path/inverted")
       .select(col("vec_id").as("neighbor_id"), col("v").as("cv2"), col("cid"))
-    ivf2Rerank(inverted, probed, k)
+    cosineRerank(inverted, probed, k)
   }
 
   /** Paths whose persisted index THIS JVM already built. The registered
@@ -912,7 +839,7 @@ object AnnOps {
     * subspaces of 64/m dims, each trained with its OWN deterministic
     * Lloyd quantizer of `k` centroids over the same hash-ordered sample —
     * assignment by TRUE Euclidean argmin (reconstruction error is an L2
-    * objective; see [[assignExpr]]'s augmented-dot form), update means by
+    * objective; see [[euclidAugment]]'s augmented-dot form), update means by
     * the same ordered fold as every quantizer here, so the codebooks are
     * bit-reproducible under any partitioning and the DuckDB twin re-runs
     * all m trainings. Training cost: m small Lloyd runs over ≤trainCap
@@ -923,67 +850,21 @@ object AnnOps {
       iters: Int = 2, trainCap: Int = 100000): IndexedSeq[IndexedSeq[Array[Double]]] = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val sd = dim / m
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    // All m trainings run GROUPED in one pass — bit-identical to m
-    // independent per-subspace Lloyd runs (the per-subspace computations
-    // share nothing: same hash-smallest sample membership for every
-    // subspace, per-subspace seeds/assignments/ordered-fold means), but
-    // one exploded DataFrame + ONE collect per iteration instead of
-    // m × (seed + iters) driver round-trips — at gate-scale corpora the
-    // round-trips WERE the training cost (measured ~4.3 s of the 4.8 s
-    // ann_pq wall). The DuckDB twins keep the per-subspace formulation;
-    // the unchanged hash-exact gate is the equivalence proof. Same
-    // grouped pattern as ivf2Train's fine level, with the subspace id in
-    // the role of the coarse cell.
-    val sample = vecs
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(trainCap)
-      .select(col("vec_id"), posexplode(array(
-        (0 until m).map(s => slice(col("v"), s * sd + 1, sd)): _*))
-        .as(Seq("s", "v")))
-      .persist()
-    def regroup(rows: Array[org.apache.spark.sql.Row]): IndexedSeq[IndexedSeq[(Long, Array[Double])]] = {
-      val by = rows.toIndexedSeq
-        .map(r => (r.getInt(r.fieldIndex("s")), r.getLong(r.fieldIndex("cid")),
-          r.getSeq[Double](r.fieldIndex("cv")).toArray))
-        .groupBy(_._1)
-      (0 until m).map(s =>
-        by.getOrElse(s, IndexedSeq.empty).sortBy(_._2).map(t => (t._2, t._3)))
-    }
-    val byS = Window.partitionBy("s").orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    val seedRows = sample
-      .withColumn("r", row_number().over(byS))
-      .filter(col("r") <= k)
-      .select(col("s"), (col("r") - 1).cast("long").as("cid"), col("v").as("cv"))
-      .collect()
-    var books = regroup(seedRows)
-    (0 until iters).foreach { _ =>
-      // assignment via the dynamic kernel over EUCLID-augmented matrices
-      // (argmin L2 — see euclidAugment); position order per subspace is
-      // sparse-cid order, so first-max ties ⟺ min cid, as everywhere
-      val matDf = books.zipWithIndex.map { case (cs, s) =>
-        (s, euclidAugment(cs.map(_._2)).map(_.toSeq), cs.map(_._1))
-      }.toDF("s", "mats", "cids")
-      val next = sample
-        .join(broadcast(matDf), "s")
-        .withColumn("cid", element_at(col("cids"),
-          graft.functions.VectorFns.nearest_centroid_dyn(
-            concat(col("v"), array(lit(1.0d))), col("mats")) + 1))
-        .groupBy("s", "cid")
-        .agg(array_sort(collect_list(struct(col("vec_id"), col("v")))).as("ms"),
-          count(lit(1)).as("cn"))
-        .select(col("s"), col("cid"),
-          transform(
-            aggregate(col("ms"),
-              array_repeat(lit(0.0d), sd),
-              (acc, e) => zip_with(acc, e.getField("v"), (a, b) => a + b)),
-            x => x / col("cn")).as("cv"))
-        .collect()
-      books = regroup(next)
-    }
+    // All m trainings run as ONE grouped [[lloyd]], the subspace id in the
+    // role of the group — bit-identical to m independent per-subspace runs
+    // (same hash-smallest sample membership for every subspace, per-
+    // subspace seeds/assignments/ordered-fold means), but one collect per
+    // pass instead of m × (seed + iters) driver round-trips; at gate-scale
+    // corpora the round-trips WERE the training cost (measured ~4.3 s of
+    // the 4.8 s ann_pq wall). The DuckDB twins keep the per-subspace
+    // formulation; the hash-exact gate is the equivalence proof.
+    val sample = hashSample(vecs, trainCap)
+    val books = lloyd(
+      sample.select(col("vec_id"), posexplode(array(
+        (0 until m).map(s => slice(col("v"), s * sd + 1, sd)): _*)).as(Seq("g", "v"))),
+      lit(k), iters, sd, euclid = true)
     sample.unpersist(false)
-    books.map(_.map(_._2))
+    (0 until m).map(books.getOrElse(_, IndexedSeq.empty))
   }
 
   /** Encode the corpus against trained PQ codebooks: per subspace one
@@ -991,14 +872,17 @@ object AnnOps {
     * expressions per row, zero joins, zero shuffles. Adds `pq_codes`
     * (array<int>, one code per subspace).
     */
-  def pqEncode(vecs: DataFrame, books: IndexedSeq[IndexedSeq[Array[Double]]],
-      dim: Int = 64): DataFrame = {
-    val m = books.size
-    val sd = dim / m
-    vecs.withColumn("pq_codes", array((0 until m).map { s =>
-      assignExpr(slice(col("v"), s * sd + 1, sd), books(s), euclid = true)
+  def pqEncode(vecs: DataFrame, books: IndexedSeq[IndexedSeq[Array[Double]]]): DataFrame = {
+    val sd = subDim(books)
+    vecs.withColumn("pq_codes", array(books.indices.map { s =>
+      nearestCentroid(concat(slice(col("v"), s * sd + 1, sd), array(lit(1.0d))),
+        euclidAugment(books(s)))
     }: _*))
   }
+
+  /** Sub-vector width of trained codebooks: the length of a centroid. */
+  private def subDim(books: IndexedSeq[IndexedSeq[Array[Double]]]): Int =
+    books.head.head.length
 
   /** Reconstruction from codes (decode = concatenated codebook rows) plus
     * the per-vector squared reconstruction error — the quality number a
@@ -1006,11 +890,10 @@ object AnnOps {
     * ascending dimension order and across subspaces in subspace order
     * (both strict left folds, re-run verbatim by the twin).
     */
-  def pqReconError(encoded: DataFrame, books: IndexedSeq[IndexedSeq[Array[Double]]],
-      dim: Int = 64): DataFrame = {
-    val m = books.size
-    val sd = dim / m
-    val err = (0 until m).map { s =>
+  def pqReconError(encoded: DataFrame,
+      books: IndexedSeq[IndexedSeq[Array[Double]]]): DataFrame = {
+    val sd = subDim(books)
+    val err = books.indices.map { s =>
       val bookLit = typedLit(books(s).map(_.toSeq))
       val recon = element_at(bookLit, element_at(col("pq_codes"), s + 1) + 1)
       // interpreted lambdas sanctioned: index-build/diagnostic phase, not
@@ -1056,26 +939,12 @@ object AnnOps {
     * neighbor_id. Recall vs the exact ranking is spec-floored.
     */
   def pqAdcTopK(encoded: DataFrame, queries: DataFrame,
-      books: IndexedSeq[IndexedSeq[Array[Double]]], k: Int,
-      dim: Int = 64): DataFrame = {
-    val m = books.size
-    val sd = dim / m
-    val score = (0 until m).map { s =>
-      val bookLit = typedLit(books(s).map(_.toSeq))
-      dot_product(
-        slice(col("qv"), s * sd + 1, sd),
-        element_at(bookLit, element_at(col("pq_codes"), s + 1) + 1))
-    }.reduce(_ + _)
-    val byQuery = Window.partitionBy("query_id").orderBy(desc("adc_raw"), col("neighbor_id"))
-    encoded.select(col("vec_id").as("neighbor_id"), col("pq_codes"))
+      books: IndexedSeq[IndexedSeq[Array[Double]]], k: Int): DataFrame =
+    rankNeighbors(encoded.select(col("vec_id").as("neighbor_id"), col("pq_codes"))
       .crossJoin(broadcast(queries.select(col("vec_id").as("query_id"), col("v").as("qv"))))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc_raw", noNegZero(score))
-      .withColumn("rank", row_number().over(byQuery).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        roundHalfUp(col("adc_raw"), 6).as("adc_score"))
-  }
+      .withColumn("adc_raw", noNegZero(pqAdcScoreExpr(books, None))),
+      "adc_raw", k, 6, "adc_score")
 
   /** Like qAnnTopK, the registered EXHAUSTIVE baseline bounds its query
     * side to a CONSTANT 8 vectors — the scan stays linear in the corpus
@@ -1116,10 +985,9 @@ object AnnOps {
     * q·c_fine). Left-assoc sum, twin-identical ordering.
     */
   private def pqAdcScoreExpr(books: IndexedSeq[IndexedSeq[Array[Double]]],
-      dim: Int, lead: Option[Column]): Column = {
-    val m = books.size
-    val sd = dim / m
-    val terms = (0 until m).map { s =>
+      lead: Option[Column]): Column = {
+    val sd = subDim(books)
+    val terms = books.indices.map { s =>
       val bookLit = typedLit(books(s).map(_.toSeq))
       dot_product(
         slice(col("qv"), s * sd + 1, sd),
@@ -1130,26 +998,22 @@ object AnnOps {
 
   /** ADC rerank of a coded inverted file against a probe table — the
     * shared tail of the in-memory and persisted IVF-PQ paths (the PQ
-    * analogue of [[ivf2Rerank]]). `inverted` carries (neighbor_id,
+    * analogue of [[cosineRerank]]). `inverted` carries (neighbor_id,
     * pq_codes) plus the join key columns present in `probed` besides
     * (query_id, qv, fcv); when `residual` the score is q·c_fine + q·r̂
     * (fcv rides on the broadcast probe side), else the raw q·x̂.
     */
   private def ivfpqRerank(inverted: DataFrame, probed: DataFrame,
-      books: IndexedSeq[IndexedSeq[Array[Double]]], k: Int, dim: Int,
+      books: IndexedSeq[IndexedSeq[Array[Double]]], k: Int,
       residual: Boolean): DataFrame = {
     val keys = probed.columns
       .filter(c => c != "query_id" && c != "qv" && c != "fcv").toSeq
     val lead = if (residual) Some(dot_product(col("qv"), col("fcv"))) else None
-    val byQuery = Window.partitionBy("query_id").orderBy(desc("adc_raw"), col("neighbor_id"))
-    inverted
+    rankNeighbors(inverted
       .join(broadcast(probed), keys)
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc_raw", noNegZero(pqAdcScoreExpr(books, dim, lead)))
-      .withColumn("rank", row_number().over(byQuery).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        roundHalfUp(col("adc_raw"), 6).as("adc_score"))
+      .withColumn("adc_raw", noNegZero(pqAdcScoreExpr(books, lead))),
+      "adc_raw", k, 6, "adc_score")
   }
 
   /** IVF-PQ: the production billion-vector ANN layout (Jégou et al. 2011
@@ -1174,8 +1038,7 @@ object AnnOps {
     */
   def ivfpqTopK(vecs: DataFrame, queries: DataFrame, k: Int,
       idx: Ivf2Index, books: IndexedSeq[IndexedSeq[Array[Double]]],
-      cprobe: Int, nprobeF: Int, dim: Int = 64,
-      residual: Boolean = true): DataFrame = {
+      cprobe: Int, nprobeF: Int, residual: Boolean = true): DataFrame = {
     val (coarseDf, fineDf) = ivf2LiteralDfs(vecs.sparkSession, idx)
     val probed0 = ivf2Probe(queries, coarseDf, fineDf, cprobe, nprobeF)
     val probed =
@@ -1194,10 +1057,10 @@ object AnnOps {
     // vs 1.8 s materialized at the ×10 twin; ~1000 s at ×100). The shuffle
     // payload is (neighbor_id, pq_codes, cell) — ~20 bytes/row, never a
     // corpus float vector.
-    val inverted = pqEncode(encodeSrc, books, dim)
+    val inverted = pqEncode(encodeSrc, books)
       .select("neighbor_id", "pq_codes", "gcid", "fcid")
       .repartition(col("gcid"), col("fcid"))
-    ivfpqRerank(inverted, probed, books, k, dim, residual)
+    ivfpqRerank(inverted, probed, books, k, residual)
   }
 
   /** Residual-trained PQ codebooks for a trained two-level index — the
@@ -1252,29 +1115,21 @@ object AnnOps {
     * pruning. Training runs ONCE here; [[ivfpqQueryIndex]] never
     * retrains.
     */
-  def ivfpqSaveIndex(vecs: DataFrame, path: String, n: Long,
-      target: Int = IvfCellTarget, m: Int = 8, kq: Int = 16,
-      iters: Int = 2, dim: Int = 64, trainCap: Int = 100000): Unit = {
+  def ivfpqSaveIndex(vecs: DataFrame, path: String, n: Long): Unit = {
     val spark = vecs.sparkSession
     import spark.implicits._
     // Shared-sample training (see ivfpqTrainAll); the FULL-corpus residual
     // pass below exists only for the encode — the write every vector rides
     // out in — not for training.
-    val (idx, books) = ivfpqTrainAll(vecs, n, target, m, kq, iters, dim, trainCap)
-    idx.coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("gcid", "gcv")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/coarse")
-    idx.fine.flatMap { case (g, cs) =>
-      cs.zipWithIndex.map { case (c, f) => (g, f.toLong, c.toSeq) }
-    }.toDF("gcid", "fcid", "fcv")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/fine")
+    val (idx, books) = ivfpqTrainAll(vecs, n)
+    saveCentroids(spark, idx, path)
     val res = ivf2Residuals(vecs.select(col("vec_id"), col("v")), idx)
     books.zipWithIndex.flatMap { case (cs, s) =>
       cs.zipWithIndex.map { case (c, cid) => (s, cid.toLong, c.toSeq) }
     }.toDF("s", "cid", "cv")
       .repartition(1).write.mode("overwrite").parquet(s"$path/books")
     pqEncode(res.select(col("vec_id"), col("gcid"), col("fcid"),
-      col("rv").as("v")), books, dim)
+      col("rv").as("v")), books)
       .withColumn("cid", col("gcid").cast("long") * Ivf2CellStride + col("fcid"))
       .select("vec_id", "pq_codes", "cid")
       .repartition(col("cid"))
@@ -1290,7 +1145,7 @@ object AnnOps {
     * but the pruned scan reads 4-byte codes, never a corpus vector.
     */
   def ivfpqQueryIndex(spark: SparkSession, path: String, queries: DataFrame,
-      k: Int, cprobe: Int, nprobeF: Int, dim: Int = 64): DataFrame = {
+      k: Int, cprobe: Int, nprobeF: Int): DataFrame = {
     val coarseDf = graft.Tables.parquet(spark, s"$path/coarse")
     val fineDf = graft.Tables.parquet(spark, s"$path/fine")
     val bookRows = graft.Tables.parquet(spark, s"$path/books").orderBy("s", "cid").collect()
@@ -1305,7 +1160,7 @@ object AnnOps {
       .select("query_id", "cid", "qv", "fcv")
     val inverted = graft.Tables.parquet(spark, s"$path/inverted")
       .select(col("vec_id").as("neighbor_id"), col("pq_codes"), col("cid"))
-    ivfpqRerank(inverted, probed, books, k, dim, residual = true)
+    ivfpqRerank(inverted, probed, books, k, residual = true)
   }
 
   /** queries() wrapper for the persisted IVF-PQ path: build the index

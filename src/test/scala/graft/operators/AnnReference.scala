@@ -1,10 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
-/** Inverse of `AnnOps.quantizeEmbeddings`, used by `AnnOpsSpec` to rank on
-  * the int8 codes and compare against the exact ranking.
+/** Plain-Scala references for `AnnOpsSpec`: the inverse of
+  * `AnnOps.quantizeEmbeddings`, and a driver-side Lloyd trainer that the
+  * Spark quantizers must equal bit for bit.
   */
 object AnnReference {
 
@@ -12,4 +15,54 @@ object AnnReference {
   def dequantizeEmbeddings(df: DataFrame): DataFrame =
     df.withColumn("v_deq",
       transform(col("q_codes"), c => c.cast("double") * col("q_scale") / lit(127.0)))
+
+  /** Seed order key: Spark's `xxhash64` of a long column (seed 42), then
+    * the id.
+    */
+  def hashOrder(id: Long): (Long, Long) =
+    (XxHash64Function.hash(id, LongType, 42L), id)
+
+  /** Index of the first maximal dot product of `x` against `cents` —
+    * ascending-index accumulation from 0.0, first max wins.
+    */
+  def nearest(x: Array[Double], cents: IndexedSeq[Array[Double]]): Int = {
+    val dots = cents.map { c =>
+      var d = 0.0
+      var i = 0
+      while (i < math.min(x.length, c.length)) { d += x(i) * c(i); i += 1 }
+      d
+    }
+    dots.indices.foldLeft(0)((best, j) => if (dots(j) > dots(best)) j else best)
+  }
+
+  /** Lloyd over `points` (vec_id, vector), one group:
+    *  - seeds: the `k` points first in [[hashOrder]];
+    *  - assignment: first-max dot; with `euclid`, the vector gains a
+    *    trailing 1.0 and each centroid a trailing −‖c‖²/2 (argmin L2);
+    *  - update: members in vec_id order, component-wise left fold from
+    *    0.0, one division by the member count. A centroid that draws no
+    *    member is dropped; the survivors keep their order.
+    */
+  def lloyd(points: Seq[(Long, Array[Double])], k: Int, iters: Int,
+      euclid: Boolean): IndexedSeq[Array[Double]] = {
+    val dim = points.head._2.length
+    var cents = points
+      .sortBy { case (id, _) => hashOrder(id) }
+      .take(k).map(_._2).toIndexedSeq
+    for (_ <- 0 until iters) {
+      val mats =
+        if (!euclid) cents
+        else cents.map(c => c :+ -(0.5 * c.foldLeft(0.0)((n, x) => n + x * x)))
+      val cells = points.groupBy { case (_, v) =>
+        nearest(if (euclid) v :+ 1.0 else v, mats)
+      }
+      cents = cells.toIndexedSeq.sortBy(_._1).map { case (_, members) =>
+        val sum = members.sortBy(_._1).foldLeft(Array.fill(dim)(0.0)) {
+          case (acc, (_, v)) => acc.zip(v).map { case (a, b) => a + b }
+        }
+        sum.map(_ / members.size)
+      }
+    }
+    cents
+  }
 }
