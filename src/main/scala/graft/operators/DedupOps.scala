@@ -16,12 +16,14 @@ import org.apache.spark.sql.graftbridge.Checkpoints
   * label block) and verification happens only within candidate groups —
   * never an all-pairs cross join. AQE skew-join handles pathological buckets
   * (e.g. a boilerplate shingle that lands millions of docs in one band).
+  * The bucketed pair operators share one candidate step
+  * ([[bucketCandidates]]; `simhashPairs` keeps its own join) and one
+  * verify per measure ([[jaccardVerify]], [[cosineVerify]]).
   */
 object DedupOps {
 
-  /** In-bucket ordered pair expansion shared by the collect_list-based
-    * candidate generators (minhash bands, embedding LSH buckets, shared
-    * fingerprints): all (id1 < id2) pairs of a sorted id array as structs.
+  /** In-bucket ordered pair expansion of [[bucketCandidates]]: all
+    * (id1 < id2) pairs of a sorted id array as structs.
     * Backed by the native codegen'd `SortedIdPairs` kernel (one primitive
     * double loop); the test-side `DedupReference.bucketPairsHof` is the
     * interpreted reference formulation its parity spec checks against.
@@ -31,6 +33,92 @@ object DedupOps {
     explode(GraftSqlBridge.column(
       graft.functions.SortedIdPairs(GraftSqlBridge.expression(sortedIds))))
   }
+
+  /** Per-group list in sorted order: one partial-agg collect plus a
+    * codegen'd array_sort (struct elements sort field-lexicographically).
+    */
+  private def sortedList(c: Column): Column = array_sort(collect_list(c))
+
+  /** Degenerate-bucket cap of the band, block, LSH and cell candidate
+    * generators. Fingerprints cap tighter: one common fingerprint is
+    * shared far more widely than one band bucket or cell.
+    */
+  val MaxBucket = 1000
+  private val FingerprintMaxBucket = 200
+
+  /** The family's one candidate step: `rows` grouped on the blocking `keys`
+    * (band bucket, LSH bucket, centroid cell, fingerprint), and every
+    * (id1 < id2) pair of each bucket's `id`s. The result keeps
+    * MULTIPLICITY: a pair that shares two buckets comes out twice. Callers
+    * whose keys overlap add their own `distinct()`; `fingerprintPairs`
+    * counts the copies as its verdict.
+    *
+    * `maxBucket` is the degenerate-bucket guard: a bucket of more than
+    * `maxBucket` ids is a boilerplate cluster ("click here to accept
+    * cookies…", a direction cluster) whose pair count grows
+    * quadratically, so — the standard web-dedup practice, and the skew
+    * story at 100 TB — it is dropped. Genuine near-duplicates in it still
+    * pair through their other keys (other bands or tables).
+    */
+  private[operators] def bucketCandidates(rows: DataFrame, keys: Seq[String],
+      id: String, maxBucket: Int): DataFrame =
+    rows
+      .groupBy(keys.map(col): _*)
+      .agg(sortedList(col(id)).as("ids"))
+      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
+      .select(bucketPairs(col("ids")).as("p"))
+      .select(col("p.id1"), col("p.id2"))
+
+  /** Exact word-n-gram Jaccard ≥ τ of candidate (id1, id2) pairs. Gram sets
+    * are built for candidate docs only (semi-join first, then one narrow
+    * `wordNgrams` projection), so the verify is linear in candidates, not
+    * a second corpus pass. `wordNgrams` is distinct by construction and
+    * array_intersect/size are order-insensitive, so the arrays ARE the
+    * gram sets. Checkpointed because g1 and g2 are two references (one
+    * materialization instead of two scans); both joins are pinned to
+    * shuffle_hash, since size stats undercount the built gram arrays.
+    */
+  private def jaccardVerify(cand: DataFrame, docs: DataFrame, n: Int, tau: Double): DataFrame = {
+    val candIds = cand.select(col("id1").as("doc_id"))
+      .union(cand.select(col("id2"))).distinct()
+    val gramSets = Checkpoints(docs
+      .join(candIds, Seq("doc_id"), "left_semi")
+      .withColumn("w", spaceTokens(col("text")))
+      .filter(size(col("w")) >= n)
+      .select(col("doc_id"), wordNgrams(col("w"), n).as("grams")))
+    val inter = size(array_intersect(col("g1"), col("g2")))
+    val jac = inter / (size(col("g1")) + size(col("g2")) - inter).cast("double")
+    cand
+      .join(gramSets.select(col("doc_id").as("id1"), col("grams").as("g1")).hint("shuffle_hash"), "id1")
+      .join(gramSets.select(col("doc_id").as("id2"), col("grams").as("g2")).hint("shuffle_hash"), "id2")
+      .withColumn("jaccard", roundHalfUp(jac, 6))
+      .filter(col("jaccard") >= tau)
+      .select("id1", "id2", "jaccard")
+  }
+
+  /** Candidate (id1, id2) pairs with their vectors `v1`, `v2` joined back
+    * — vectors stay out of the candidate shuffle.
+    */
+  private def withVectors(cand: DataFrame, vecs: DataFrame): DataFrame =
+    cand
+      .join(vecs.select(col("vec_id").as("id1"), col("v").as("v1")), "id1")
+      .join(vecs.select(col("vec_id").as("id2"), col("v").as("v2")), "id2")
+
+  /** Exact cosine ≥ τ of (id1, id2, v1, v2) pairs, rounded to 4 digits
+    * through the codegen'd `CosineSim` expression (the interpreted
+    * `aggregate(zip_with(...))` formulation computes the same doubles ~5×
+    * slower).
+    */
+  private def cosineVerify(pairs: DataFrame, tau: Double): DataFrame =
+    pairs
+      .withColumn("cos_sim", roundHalfUp(
+        graft.functions.VectorFns.cosine_sim(col("v1"), col("v2")), 4))
+      // The NaN guard is load-bearing: Spark orders NaN ABOVE every
+      // double, so a zero-vector pair's 0/0 cosine would pass >= tau —
+      // while the DuckDB twin's x/0 is NULL and drops. Cosine is undefined
+      // for zero vectors; exclude them on both sides.
+      .filter(!isnan(col("cos_sim")) && col("cos_sim") >= tau)
+      .select("id1", "id2", "cos_sim")
 
   // -------------------------------------------------------------- dedup_exact
 
@@ -85,8 +173,8 @@ object DedupOps {
     * grams rank late in every doc's order, so posting lists for prefix
     * grams stay short — candidates grow ~linearly with the corpus, and the
     * size filter (Jaccard ≥ τ forces |s1|,|s2| within a 1/τ factor) prunes
-    * the rest. Exact verification then runs only on candidate docs (the
-    * same semi-join pattern as `minhashPairs`).
+    * the rest. Exact verification then runs only on candidate docs
+    * ([[jaccardVerify]]).
     *
     * Shuffle budget: one groupBy on the gram (document frequency — partial
     * aggregation combines map-side, so a boilerplate gram that appears in
@@ -127,7 +215,7 @@ object DedupOps {
     val perDoc = setRows
       .join(dfCounts.hint("shuffle_hash"), Seq("g"))
       .groupBy((Seq("doc_id") ++ blockCols).map(col): _*)
-      .agg(array_sort(collect_list(struct(col("df"), col("g")))).as("sg"))
+      .agg(sortedList(struct(col("df"), col("g"))).as("sg"))
       .withColumn("sz", size(col("sg")).cast("long"))
     val prefixLen = (col("sz") - ceil(col("sz") * tau) + 1).cast("int")
     val prefix = perDoc
@@ -148,33 +236,11 @@ object DedupOps {
       .join(prefix.hint("shuffle_hash").as("b"), cond)
       .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
       .distinct())
-    // Exact verify only for candidate docs — identical formula to the
-    // all-pairs form. The gram sets are REBUILT from the candidate docs
-    // (semi-join first, then one narrow wordNgrams projection): the old
-    // perDoc-semi formulation re-derived the whole corpus gram pipeline
-    // (dfCounts groupBy + join + collect) a second time, because nothing
-    // materializes perDoc between the two references. wordNgrams is
-    // distinct-by-construction and array_intersect/size are
-    // order-insensitive, so the raw gram array verifies bit-identically
-    // to the df-sorted sg.g projection — and candidates ≪ corpus, so the
-    // rebuild is linear in candidates instead of a second corpus pass.
-    // Checkpointed for the same reason as `cand`: g1 and g2 are two
-    // references (one materialization instead of two corpus scans).
-    val candIds = cand.select(col("id1").as("doc_id"))
-      .union(cand.select(col("id2"))).distinct()
-    val gramSets = Checkpoints(docs
-      .join(candIds, Seq("doc_id"), "left_semi")
-      .withColumn("w", spaceTokens(col("text")))
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"), wordNgrams(col("w"), n).as("grams")))
-    val inter = size(array_intersect(col("g1"), col("g2")))
-    val jac = inter / (size(col("g1")) + size(col("g2")) - inter).cast("double")
-    cand
-      .join(gramSets.select(col("doc_id").as("id1"), col("grams").as("g1")).hint("shuffle_hash"), "id1")
-      .join(gramSets.select(col("doc_id").as("id2"), col("grams").as("g2")).hint("shuffle_hash"), "id2")
-      .withColumn("jaccard", roundHalfUp(jac, 6))
-      .filter(col("jaccard") >= tau)
-      .select("id1", "id2", "jaccard")
+    // The verify rebuilds gram sets from the candidate docs instead of
+    // projecting perDoc: nothing materializes perDoc, so a second
+    // reference would re-run the whole corpus gram pipeline (dfCounts
+    // groupBy + join + collect).
+    jaccardVerify(cand, docs, n, tau)
   }
 
   def qNgramJaccard(s: SparkSession, d: String): DataFrame =
@@ -213,88 +279,41 @@ object DedupOps {
         .as(Seq("band", "band_hash")))
   }
 
-  /** MinHash + LSH banding near-dup pairs:
-    * shingle → `numHashes` minhashes → `bands` bands of `numHashes/bands`
-    * rows → explode to (band, band_hash) keys → self-join on the band key
-    * (THE one shuffle) → distinct candidate pairs → verify exact Jaccard ≥
-    * τ on the shingle sets. Candidate volume is linear in docs × bands, not
-    * quadratic — the scale path for text near-dup at 100 TB.
-    */
-  /** One row per word n-gram: (doc_id, g). Built with posexplode + `lead`
-    * windows instead of higher-order array functions — HOFs are interpreted
-    * in Spark and dominate runtime (~10s of a 12s pipeline at sf0.1); this
-    * path is whole-stage-codegen end to end. The window's doc_id shuffle is
-    * reused by every downstream doc_id aggregation, so the op still costs
-    * one logical shuffle.
-    */
-  def ngramRows(docs: DataFrame, n: Int): DataFrame = {
-    val byDocPos = Window.partitionBy("doc_id").orderBy("pos")
-    val parts = col("tok") +: (1 until n).map(o => lead("tok", o).over(byDocPos))
-    docs
-      .withColumn("w", spaceTokens(col("text")))
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"), size(col("w")).as("nw"), posexplode(col("w")).as(Seq("pos", "tok")))
-      .withColumn("g", concat_ws("_", parts: _*))
-      .filter(col("pos") <= col("nw") - n) // last n-1 positions have no full gram
-      .select("doc_id", "g")
-  }
+  private[operators] val MinhashN = 3
+  private[operators] val MinhashHashes = 64
+  private[operators] val MinhashBands = 16
 
-  def minhashPairs(
-      docs: DataFrame,
-      n: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      tau: Double = 0.4,
-      maxBucket: Int = 1000): DataFrame = {
-    val gramRows = ngramRows(docs, n)
-    val banded = minhashBands(gramRows, numHashes, bands)
-    // Pairs per bucket via collect_list instead of a self-join: the band
-    // lineage is computed once (a self-join would run it for both sides) and
-    // the only shuffle is the bucket groupBy. Buckets are tiny (near-dup
-    // groups), so in-bucket pair expansion is cheap.
-    //
-    // `maxBucket` is the boilerplate guard: a band whose bucket collects
-    // more than `maxBucket` docs is a degenerate shingle cluster ("click
-    // here to accept cookies…") whose pair count grows quadratically — the
-    // standard web-dedup practice (and the skew story at 100 TB) is to drop
-    // the bucket; its members still pair through their other `bands-1`
-    // bands whenever they are genuine near-duplicates.
+  /** (doc_id, g) shingle rows: each doc's distinct word n-grams from the
+    * native `wordNgrams` kernel (docs under `n` tokens, empty or null text
+    * give none).
+    */
+  private[operators] def shingleRows(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), explode(wordNgrams(spaceTokens(col("text")), n)).as("g"))
+
+  /** MinHash + LSH banding near-dup pairs over word 3-grams:
+    * shingle → 64 minhashes → 16 bands of 4 rows → explode to (band,
+    * band_hash) keys → [[bucketCandidates]] on the band key (THE one
+    * shuffle; the band lineage is computed once, where a self-join would
+    * run it for both sides) → distinct candidate pairs → [[jaccardVerify]]
+    * exact Jaccard ≥ τ on the shingle sets. Candidate volume is linear in
+    * docs × bands, not quadratic — the scale path for text near-dup at
+    * 100 TB. A bucket over `maxBucket` docs is shed; its members still
+    * pair through their other 15 bands.
+    *
+    * Shingles come from the native `wordNgrams` kernel, which keeps each
+    * doc's distinct grams only: a min over the distinct set equals the
+    * min over the multiset, so the band hashes are those of every gram
+    * occurrence.
+    */
+  def minhashPairs(docs: DataFrame, tau: Double = 0.4, maxBucket: Int = MaxBucket): DataFrame = {
     // Candidate pairs are tiny (near-dup groups) but referenced three
     // times downstream — an eager checkpoint truncates the lineage so
     // the banding subtree plans and runs once (same rationale as
     // ngramJaccardPairsPrefix's checkpoint).
-    val cand = Checkpoints(banded
-      .groupBy("band", "band_hash")
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(bucketPairs(array_sort(col("ids"))).as("p"))
-      .select(col("p.id1"), col("p.id2"))
-      .distinct())
-    // Exact-verify gram sets are built ONLY for candidate docs — and the
-    // semi-join now sits BELOW the ngram window: filtering `docs` first
-    // means the second pass's posexplode + lead window runs over
-    // candidate docs only, instead of re-deriving the full-corpus
-    // gramRows subtree (whole-corpus window sort) that nothing had
-    // materialized between the two references. Per-doc rows are
-    // unchanged (the window partitions by doc_id, so dropping whole docs
-    // cannot move any gram), hence collect_set is bit-identical.
-    // Checkpointed because g1 and g2 are two references.
-    val candIds = cand.select(col("id1").as("doc_id"))
-      .union(cand.select(col("id2"))).distinct()
-    val gramSets = Checkpoints(
-      ngramRows(docs.join(candIds, Seq("doc_id"), "left_semi"), n)
-        .groupBy("doc_id")
-        .agg(collect_set(col("g")).as("grams")))
-    val g1 = gramSets.select(col("doc_id").as("id1"), col("grams").as("g1"))
-    val g2 = gramSets.select(col("doc_id").as("id2"), col("grams").as("g2"))
-    val inter = size(array_intersect(col("g1"), col("g2")))
-    val jac = inter / (size(col("g1")) + size(col("g2")) - inter).cast("double")
-    cand
-      .join(g1, "id1")
-      .join(g2, "id2")
-      .withColumn("jaccard", roundHalfUp(jac, 6))
-      .filter(col("jaccard") >= tau)
-      .select("id1", "id2", "jaccard")
+    val cand = Checkpoints(bucketCandidates(
+      minhashBands(shingleRows(docs, MinhashN), MinhashHashes, MinhashBands),
+      Seq("band", "band_hash"), "doc_id", maxBucket).distinct())
+    jaccardVerify(cand, docs, MinhashN, tau)
   }
 
   def qDedupMinhash(s: SparkSession, d: String): DataFrame =
@@ -343,7 +362,7 @@ object DedupOps {
     * from boilerplate), and the guard can be disabled with a large
     * `maxBucket` when exactness matters more than skew safety.
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3, maxBucket: Int = MaxBucket): DataFrame = {
     // The signature table is referenced by THREE downstream subtrees (the
     // degenerate-bucket count, and both sides of the candidate
     // self-join): un-materialized, each re-inlined the 64-aggregate
@@ -363,7 +382,9 @@ object DedupOps {
     // Degenerate buckets are identified with a partial-aggregating count
     // (tiny result — only values shared by >maxBucket docs) broadcast into
     // an anti-join; the candidate join itself stays the codegen'd equi-join
-    // with both sides sharing one exchange of the blocked table.
+    // with both sides sharing one exchange of the blocked table. The
+    // family's collect-based bucketCandidates measured slower here
+    // (plans/pr10/README.md).
     val big = blocked
       .groupBy("block", "block_val").agg(count(lit(1)).as("bn"))
       .filter(col("bn") > maxBucket)
@@ -419,39 +440,33 @@ object DedupOps {
   /** Cosine near-dup pairs ≥ τ within `label` blocks (blocked cross join —
     * the exact small-SF cross-check used by the LSH equivalence spec, NOT
     * the registered query; `embeddingPairsLsh` below is what
-    * `qDedupEmbedding` runs). Similarity runs through the codegen'd
-    * `CosineSim` expression — the interpreted `aggregate(zip_with(...))`
-    * formulation computes the same doubles ~5× slower.
+    * `qDedupEmbedding` runs). Vectors ride the label join itself, so the
+    * pair table is never shuffled; [[cosineVerify]] decides.
     */
   def embeddingPairs(vecs: DataFrame, tau: Double): DataFrame = {
     val a = vecs.select(col("label"), col("vec_id").as("id1"), col("v").as("v1"))
     val b = vecs.select(col("label"), col("vec_id").as("id2"), col("v").as("v2"))
-    a.join(b, Seq("label"))
-      .filter(col("id1") < col("id2"))
-      .withColumn("cos_sim", roundHalfUp(
-        graft.functions.VectorFns.cosine_sim(col("v1"), col("v2")), 4))
-      // !isnan is load-bearing: Spark orders NaN ABOVE every double, so a
-      // zero-vector pair's 0/0 cosine would pass >= tau — while the DuckDB
-      // twin's x/0 is NULL and drops. Cosine is undefined for zero
-      // vectors; exclude them on both sides.
-      .filter(!isnan(col("cos_sim")) && col("cos_sim") >= tau)
-      .select("id1", "id2", "cos_sim")
+    cosineVerify(a.join(b, Seq("label")).filter(col("id1") < col("id2")), tau)
   }
 
+  private val LshTables = 8
+  private val LshTargetBucket = 8
+  private val EmbeddingDim = 64
+
   /** Cosine near-dup pairs ≥ τ within `label` blocks with candidates from
-    * random-hyperplane LSH buckets — the linear-candidate scale form of the
-    * blocked cross-join baseline ([[semanticDedupPairs]]'s two-level
-    * centroid cells are the density-following production path; hyperplanes
-    * are data-blind but need no training pass). Three properties make it a
-    * plan and not a disguised cross join:
+    * random-hyperplane LSH buckets (8 tables) — the linear-candidate scale
+    * form of the blocked cross-join baseline ([[semanticDedupPairs]]'s
+    * two-level centroid cells are the density-following production path;
+    * hyperplanes are data-blind but need no training pass). Three
+    * properties make it a plan and not a disguised cross join:
     *
     *  - **Bucket width scales with the corpus.** `bits` defaults to
-    *    ⌈log₂(N / targetBucket)⌉ (clamped to [8, 20]), so the expected
-    *    bucket population stays ≈ `targetBucket` no matter how much data
-    *    arrives — candidate volume is ~tables · N · targetBucket / 2, i.e.
-    *    LINEAR in N, where a fixed bit width would be N²/2^bits.
-    *  - **`maxBucket` cap** (same guard as `minhashPairs`): a bucket that
-    *    still collects more than `maxBucket` vectors (a direction cluster —
+    *    ⌈log₂(N / 8)⌉ (clamped to [8, 20], [[lshBits]]), so the expected
+    *    bucket population stays ≈ 8 no matter how much data arrives —
+    *    candidate volume is ~tables · N · 8 / 2, i.e. LINEAR in N, where a
+    *    fixed bit width would be N²/2^bits.
+    *  - **[[MaxBucket]] cap** ([[bucketCandidates]]): a bucket that
+    *    still collects more than 1000 vectors (a direction cluster —
     *    real embeddings are not uniform) is dropped; genuine near-dups in it
     *    survive through their other `tables − 1` tables.
     *  - **`label` is part of the bucket key**, so candidates never cross
@@ -466,52 +481,32 @@ object DedupOps {
     * are caught; boundary-grazing pairs degrade gracefully and can be
     * bought back with more tables.
     *
-    * The one corpus shuffle is the (table, bucket, label) groupBy; in-bucket
-    * pair expansion via collect_list runs on ≤ maxBucket ids; exact cosine
-    * verification touches candidates only, and vectors stay out of the
-    * shuffle (ids pair first, arrays join back after the distinct).
+    * The one corpus shuffle is the (table, bucket, label) groupBy; exact
+    * cosine verification touches candidates only, and vectors stay out of
+    * the shuffle (ids pair first, arrays join back after the distinct).
     */
-  def embeddingPairsLsh(
-      vecs: DataFrame,
-      tau: Double,
-      tables: Int = 8,
-      bitsOverride: Option[Int] = None,
-      dim: Int = 64,
-      targetBucket: Int = 8,
-      maxBucket: Int = 1000): DataFrame = {
+  def embeddingPairsLsh(vecs: DataFrame, tau: Double,
+      bitsOverride: Option[Int] = None): DataFrame = {
     // NOTE: deriving bits runs ONE eager count() over the input lineage per
     // invocation — the price of a data-dependent plan parameter (the same
     // stats pass AQE pays). Callers that know their corpus size — or can
     // read it from parquet footers (`Tables.rowCountFromFooters`, zero
     // jobs) the way `qDedupEmbedding` does — should pass `bitsOverride`
     // to keep the builder fully lazy.
-    val bits = bitsOverride.getOrElse(lshBits(vecs.count(), targetBucket))
+    val bits = bitsOverride.getOrElse(lshBits(vecs.count(), LshTargetBucket))
     // planes from the fixed pool (first `bits` of each table) so the set
     // a corpus sees is a prefix of the set every other corpus size sees —
     // see AnnOps.LshMaxBits
-    val planes = AnnOps.hyperplanes(tables, AnnOps.LshMaxBits, dim).map(_.take(bits))
+    val planes = AnnOps.hyperplanes(LshTables, AnnOps.LshMaxBits, EmbeddingDim)
+      .map(_.take(bits))
     val bucketed = vecs.select(
       col("vec_id"), col("label"),
       posexplode(array(planes.map(p => AnnOps.bucketOf(col("v"), p)): _*))
         .as(Seq("table", "bucket")))
-    val cand = bucketed
-      .groupBy("table", "bucket", "label")
-      .agg(collect_list(col("vec_id")).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(bucketPairs(array_sort(col("ids"))).as("p"))
-      .select(col("p.id1"), col("p.id2"))
+    // the same pair surfaces from several tables
+    val cand = bucketCandidates(bucketed, Seq("table", "bucket", "label"), "vec_id", MaxBucket)
       .distinct()
-    cand
-      .join(vecs.select(col("vec_id").as("id1"), col("v").as("v1")), "id1")
-      .join(vecs.select(col("vec_id").as("id2"), col("v").as("v2")), "id2")
-      .withColumn("cos_sim", roundHalfUp(
-        graft.functions.VectorFns.cosine_sim(col("v1"), col("v2")), 4))
-      // !isnan is load-bearing: Spark orders NaN ABOVE every double, so a
-      // zero-vector pair's 0/0 cosine would pass >= tau — while the DuckDB
-      // twin's x/0 is NULL and drops. Cosine is undefined for zero
-      // vectors; exclude them on both sides.
-      .filter(!isnan(col("cos_sim")) && col("cos_sim") >= tau)
-      .select("id1", "id2", "cos_sim")
+    cosineVerify(withVectors(cand, vecs), tau)
   }
 
   /** Bucket bit width for a corpus of `n` vectors: ⌈log₂(n / targetBucket)⌉
@@ -536,7 +531,7 @@ object DedupOps {
   def qDedupEmbedding(s: SparkSession, d: String): DataFrame = {
     val n = Tables.rowCountFromFooters(s, d, "embeddings") * 12L / 11L
     embeddingPairsLsh(plantedEmbeddings(s, d), tau = 0.95,
-      bitsOverride = Some(lshBits(n, targetBucket = 8)))
+      bitsOverride = Some(lshBits(n, LshTargetBucket)))
       .orderBy("id1", "id2")
   }
 
@@ -562,42 +557,25 @@ object DedupOps {
     * global cap (the flat quantizer's 512-cell ceiling bound at sf10:
     * one decade further its within-cell pair expansion went quadratic
     * again). Assignment is one projection + one broadcast join; the ONLY
-    * corpus shuffle is the cell groupBy, `maxBucket` sheds degenerate
-    * density cells (the same guard as the minhash/simhash/LSH family),
-    * and within-cell pair expansion uses the native SortedIdPairs kernel
-    * ([[bucketPairs]]).
+    * corpus shuffle is the cell groupBy, and [[bucketCandidates]] sheds
+    * degenerate density cells over [[MaxBucket]] (the same guard as the
+    * minhash/simhash/LSH family).
     */
   def semanticDedupPairs(vecs: DataFrame, tau: Double,
       nOverride: Option[Long] = None, target: Int = SemCellTarget,
-      iters: Int = 2, dim: Int = 64, maxBucket: Int = 1000,
       ncoarseOverride: Option[Int] = None): DataFrame = {
     // Deriving the coarse cell count runs ONE eager count() when the
     // caller does not know its corpus size; registered queries pass
     // nOverride from parquet footers (zero jobs — see qDedupSemantic).
     val n = nOverride.getOrElse(vecs.count())
-    val idx = AnnOps.ivf2Train(vecs, n, target, iters, dim,
-      ncoarseOverride = ncoarseOverride)
-    val cand = AnnOps.ivf2Assign(vecs, idx)
-      .groupBy("gcid", "fcid", "label")
-      .agg(collect_list(col("vec_id")).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(bucketPairs(array_sort(col("ids"))).as("p"))
-      .select(col("p.id1"), col("p.id2"))
+    val idx = AnnOps.ivf2Train(vecs, n, target, ncoarseOverride = ncoarseOverride)
     // no distinct(): each vec_id lands in exactly ONE (gcid, fcid, label)
     // group, so candidate pairs are unique by construction — unlike the
     // multi-table LSH path, where the same pair surfaces from several
     // tables and the dedup shuffle is load-bearing
-    cand
-      .join(vecs.select(col("vec_id").as("id1"), col("v").as("v1")), "id1")
-      .join(vecs.select(col("vec_id").as("id2"), col("v").as("v2")), "id2")
-      .withColumn("cos_sim", roundHalfUp(
-        graft.functions.VectorFns.cosine_sim(col("v1"), col("v2")), 4))
-      // !isnan is load-bearing: Spark orders NaN ABOVE every double, so a
-      // zero-vector pair's 0/0 cosine would pass >= tau — while the DuckDB
-      // twin's x/0 is NULL and drops. Cosine is undefined for zero
-      // vectors; exclude them on both sides.
-      .filter(!isnan(col("cos_sim")) && col("cos_sim") >= tau)
-      .select("id1", "id2", "cos_sim")
+    val cand = bucketCandidates(AnnOps.ivf2Assign(vecs, idx),
+      Seq("gcid", "fcid", "label"), "vec_id", MaxBucket)
+    cosineVerify(withVectors(cand, vecs), tau)
   }
 
   /** SemDeDup fine-cell population target: ~256 vectors per cell, so the
@@ -621,33 +599,6 @@ object DedupOps {
 
   // -------------------------------------------------------- dedup_fingerprint
 
-  /** Substring-level near-dup pairs: documents sharing ≥ `minShared`
-    * winnowing fingerprints (`TextAnalysis.docFingerprints`) — the scalable
-    * stand-in for suffix-array substring dedup: a shared run of ≥ k+w−1
-    * characters guarantees ONE shared fingerprint, so with the default
-    * `minShared = 3` the pairing guarantee applies to runs long enough for
-    * ≥ 3 distinct window minima (in practice a few times k+w−1 — winnowing
-    * density is ~2/(w+1) fingerprints per position; set `minShared = 1` for
-    * the strict single-fingerprint guarantee at the cost of noisier pairs).
-    * Either way a long quoted or boilerplate passage pairs two documents
-    * even when their WHOLE-doc similarity is far below any Jaccard
-    * threshold (the case `ngram_jaccard` and `minhashPairs` deliberately
-    * ignore).
-    *
-    * Same plan contract as the rest of the family: one shuffle on the
-    * fingerprint value, `maxBucket` drops degenerate fingerprints (a hash
-    * shared by half the web is boilerplate, not quotation), in-bucket pair
-    * expansion, and the per-pair shared-fingerprint count IS the
-    * verification — no second pass over text.
-    *
-    * Parameter scale matters: k is CHARACTERS of shared run per k-gram, and
-    * the shared-substring guarantee is k+w−1 chars. Short k (7) makes every
-    * common English 7-char run a bucket and candidate volume explodes on
-    * real text; the defaults (k=30, w=10 → 39-char guaranteed runs,
-    * ~6 word spans) sit near the span lengths published training-data
-    * substring-dedup uses, where cross-document collisions mean actual
-    * shared text.
-    */
   /** Corpus-sized winnowing window for the PAIRING path: w = 10 through
     * 2^16 docs, +4 per corpus doubling past it, capped at 58. Fingerprint
     * density is ~2/(w+1) per character, so the candidate volume per doc
@@ -665,20 +616,39 @@ object DedupOps {
   def fingerprintW(n: Long): Int =
     math.min(58, 10 + 4 * math.max(0, AnnOps.ceilLog2(math.max(1L, n)) - 16))
 
-  def fingerprintPairs(
-      docs: DataFrame,
-      k: Int = 30,
-      w: Int = 10,
-      minShared: Int = 3,
-      maxBucket: Int = 200): DataFrame = {
+  /** Substring-level near-dup pairs: documents sharing ≥ `minShared`
+    * winnowing fingerprints (`TextAnalysis.docFingerprints`) — the scalable
+    * stand-in for suffix-array substring dedup: a shared run of ≥ k+w−1
+    * characters guarantees ONE shared fingerprint, so with the default
+    * `minShared = 3` the pairing guarantee applies to runs long enough for
+    * ≥ 3 distinct window minima (in practice a few times k+w−1 — winnowing
+    * density is ~2/(w+1) fingerprints per position; set `minShared = 1` for
+    * the strict single-fingerprint guarantee at the cost of noisier pairs).
+    * Either way a long quoted or boilerplate passage pairs two documents
+    * even when their WHOLE-doc similarity is far below any Jaccard
+    * threshold (the case `ngram_jaccard` and `minhashPairs` deliberately
+    * ignore).
+    *
+    * Same plan contract as the rest of the family: one shuffle on the
+    * fingerprint value, [[bucketCandidates]] drops fingerprints shared by
+    * more than 200 docs (a hash shared by half the web is boilerplate, not
+    * quotation), and the per-pair shared-fingerprint count over the
+    * candidates' multiplicity IS the verification — no second pass over
+    * text.
+    *
+    * Parameter scale matters: k is CHARACTERS of shared run per k-gram, and
+    * the shared-substring guarantee is k+w−1 chars. Short k (7) makes every
+    * common English 7-char run a bucket and candidate volume explodes on
+    * real text; the defaults (k=30, w=10 → 39-char guaranteed runs,
+    * ~6 word spans) sit near the span lengths published training-data
+    * substring-dedup uses, where cross-document collisions mean actual
+    * shared text.
+    */
+  def fingerprintPairs(docs: DataFrame, k: Int = 30, w: Int = 10,
+      minShared: Int = 3): DataFrame = {
     val fps = TextAnalysis.docFingerprints(docs, "text", k, w)
       .select(col("doc_id"), explode(col("fingerprints")).as("fp"))
-    fps
-      .groupBy("fp")
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(bucketPairs(array_sort(col("ids"))).as("p"))
-      .select(col("p.id1"), col("p.id2"))
+    bucketCandidates(fps, Seq("fp"), "doc_id", FingerprintMaxBucket)
       .groupBy("id1", "id2")
       .agg(count(lit(1)).as("shared_fps")) // fingerprints are distinct per doc
       .filter(col("shared_fps") >= minShared)
@@ -701,31 +671,25 @@ object DedupOps {
     * from the survivors in original order (a fully-deduped doc keeps an
     * emptied row, mirroring line_dedup's contract).
     *
-    * Plan: per-doc windows build spans (docs are small — the window
-    * partition is one doc), ONE span-key partial-agg groupBy finds counts
+    * Plan: spans are slices of each doc's own sentence array (no shuffle),
+    * ONE span-key partial-agg groupBy finds counts
     * + first occurrence, victims explode to covered positions and leave in
     * a LEFT ANTI join, reassembly is one doc-key groupBy. No global sort,
-    * no span-key window; the span table is the only corpus-sized shuffle.
+    * no window; the span table is the only corpus-sized shuffle.
     */
   def spanDedup(docs: DataFrame, textCol: String, idCol: String,
       splitRegex: String = "(?<=[.!?])\\s+", spanLen: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("doc_id").orderBy("pos0")
-    val sents = docs
+    // `a`: the doc's non-blank sentences; `pos`: 1-based index into it
+    val sentRows = docs
       .select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol), splitRegex)).as(Seq("pos0", "sent")))
-      .filter(zsTrim(col("sent")) =!= "")
-      .withColumn("pos", row_number().over(w).cast("long"))
-      .select("doc_id", "pos", "sent")
-    val wp = Window.partitionBy("doc_id").orderBy("pos")
-    val spans = (1 until spanLen)
-      .foldLeft(sents.withColumn("span", col("sent"))) { (df, i) =>
-        df.withColumn("span",
-          concat_ws(" ", col("span"), lead(col("sent"), i).over(wp)))
-          .withColumn(s"__ok$i", lead(col("sent"), i).over(wp).isNotNull)
-      }
-      .filter((1 until spanLen).map(i => col(s"__ok$i")).reduce(_ && _))
-      .select(col("doc_id"), col("pos"), col("span"))
+        filter(split(col(textCol), splitRegex), t => zsTrim(t) =!= "").as("a"))
+      .select(col("doc_id"), col("a"), posexplode(col("a")).as(Seq("pos0", "sent")))
+      .withColumn("pos", (col("pos0") + 1).cast("long"))
+    val sents = sentRows.select("doc_id", "pos", "sent")
+    val spans = sentRows
+      .filter(col("pos") <= size(col("a")) - (spanLen - 1))
+      .select(col("doc_id"), col("pos"),
+        array_join(slice(col("a"), col("pos0") + 1, lit(spanLen)), " ").as("span"))
     val bySpan = spans.groupBy("span").agg(
       count(lit(1)).as("c"),
       min(struct(col("doc_id"), col("pos"))).as("keeper"))
@@ -746,8 +710,7 @@ object DedupOps {
     val rebuilt = survivors
       .groupBy("doc_id")
       .agg(concat_ws(" ",
-        array_sort(collect_list(struct(col("pos"), col("sent"))))
-          .getField("sent")).as("t"))
+        sortedList(struct(col("pos"), col("sent"))).getField("sent")).as("t"))
     docs.select(col(idCol).as("doc_id"))
       .join(rebuilt, Seq("doc_id"), "left")
       .withColumn("text_deduped", coalesce(col("t"), lit("")))

@@ -1018,46 +1018,6 @@ object SyncOps {
 
   // -------------------------------------------------------------- robots_parse
 
-  /** robots.txt text → a user-agent-grouped rule table, mirroring the state
-    * machine of CPython's `urllib.robotparser.RobotFileParser.parse` as the
-    * reference uses it (dags/lib/robots_txt.py:49-65 builds the parser;
-    * :9-43 swaps in the wildcard-capable RuleLine). Faithful semantics:
-    *
-    *  - a line's key is everything before the FIRST `:`, lowercased and
-    *    trimmed; `#` starts a comment; a comment-only/whitespace-only line
-    *    is a NO-OP (CPython strips it then `continue`s), but a truly EMPTY
-    *    line ends the current entry (state 2 → push, state 1 → discard);
-    *  - consecutive `User-agent` lines accumulate into ONE entry; a
-    *    `User-agent` after rule lines (or after a blank) starts a new one;
-    *  - `Crawl-delay` / `Request-rate` keep the entry "open" (CPython sets
-    *    state=2) but emit no rule row; unknown keys (`Sitemap`, …) are
-    *    no-ops for grouping too;
-    *  - rules before the first `User-agent` line are dropped (state 0), as
-    *    are rules after a blank line until the next `User-agent`;
-    *  - an empty `Disallow:` value means allow-all (robots_txt.py:14-16:
-    *    RuleLine flips allowance to True on an empty path).
-    *
-    * Rule paths are stored as trimmed raw text: the reference's
-    * `unquote(quote(urlunparse(urlparse(path))))` normalization is the
-    * identity for ASCII-safe paths (quote∘unquote always round-trips, and
-    * urlparse∘urlunparse reassembles `path?query` unchanged), which is the
-    * documented approximation for non-ASCII rule paths.
-    *
-    * Output: one row per rule — (host, group_id, agents, rule_idx,
-    * allowance, path); `agents` is sorted for determinism (CPython matches
-    * any-of, so order within an entry is not semantic).
-    *
-    * Scale: the windows partition by host and each host's robots.txt is a
-    * few KB, so per-host work is trivially bounded and never skews;
-    * parallelism = #hosts. One shuffle for the windows, one tiny
-    * agents-per-group aggregate joined back on (host, group_id).
-    */
-  /** The shared parse core: one row per kept line with its entry
-    * assignment — `group_id` (1-based entry index), `is_ua`, `closed`
-    * (a blank line occurred at or before this row within the entry —
-    * rows after it are state-0 noise), `key`, `value`.
-    */
-
   /** Python `str.strip()` for robots lines — CPython's robotparser strips
     * FULL whitespace (`line.strip()`), not just spaces: tab-padded
     * `\tDisallow:` lines are real-web content and must parse. The class
@@ -1072,6 +1032,11 @@ object SyncOps {
     "[ \t\u001F\u00A0\u1680\u2000-\u200A\u202F\u205F\u3000]+\\z"
   private def pyStrip(c: Column): Column = regexp_replace(c, PyStripRe, "")
 
+  /** The shared parse core: one row per kept line with its entry
+    * assignment — `group_id` (1-based entry index), `is_ua`, `closed`
+    * (a blank line occurred at or before this row within the entry —
+    * rows after it are state-0 noise), `key`, `value`.
+    */
   private def robotsGrouped(robots: DataFrame, hostCol: String,
       contentCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1115,6 +1080,40 @@ object SyncOps {
       .groupBy("host", "group_id")
       .agg(array_sort(collect_set(col("value"))).as("agents"))
 
+  /** robots.txt text → a user-agent-grouped rule table, mirroring the state
+    * machine of CPython's `urllib.robotparser.RobotFileParser.parse` as the
+    * reference uses it (dags/lib/robots_txt.py:49-65 builds the parser;
+    * :9-43 swaps in the wildcard-capable RuleLine). Faithful semantics:
+    *
+    *  - a line's key is everything before the FIRST `:`, lowercased and
+    *    trimmed; `#` starts a comment; a comment-only/whitespace-only line
+    *    is a NO-OP (CPython strips it then `continue`s), but a truly EMPTY
+    *    line ends the current entry (state 2 → push, state 1 → discard);
+    *  - consecutive `User-agent` lines accumulate into ONE entry; a
+    *    `User-agent` after rule lines (or after a blank) starts a new one;
+    *  - `Crawl-delay` / `Request-rate` keep the entry "open" (CPython sets
+    *    state=2) but emit no rule row; unknown keys (`Sitemap`, …) are
+    *    no-ops for grouping too;
+    *  - rules before the first `User-agent` line are dropped (state 0), as
+    *    are rules after a blank line until the next `User-agent`;
+    *  - an empty `Disallow:` value means allow-all (robots_txt.py:14-16:
+    *    RuleLine flips allowance to True on an empty path).
+    *
+    * Rule paths are stored as trimmed raw text: the reference's
+    * `unquote(quote(urlunparse(urlparse(path))))` normalization is the
+    * identity for ASCII-safe paths (quote∘unquote always round-trips, and
+    * urlparse∘urlunparse reassembles `path?query` unchanged), which is the
+    * documented approximation for non-ASCII rule paths.
+    *
+    * Output: one row per rule — (host, group_id, agents, rule_idx,
+    * allowance, path); `agents` is sorted for determinism (CPython matches
+    * any-of, so order within an entry is not semantic).
+    *
+    * Scale: the windows partition by host and each host's robots.txt is a
+    * few KB, so per-host work is trivially bounded and never skews;
+    * parallelism = #hosts. One shuffle for the windows, one tiny
+    * agents-per-group aggregate joined back on (host, group_id).
+    */
   def parseRobotsTxt(robots: DataFrame, hostCol: String, contentCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wGroup = Window.partitionBy("host", "group_id").orderBy("line_no")

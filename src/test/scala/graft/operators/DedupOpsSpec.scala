@@ -259,7 +259,7 @@ class DedupOpsSpec extends SparkSpec {
       (20L, vec(20, 1.0, 21)), (21L, vec(20, 0.94999, 21)),
       (30L, vec(30, 1.0, 31)), (31L, vec(30, 0.9497, 31)))
     val vecs = rows.toDF("vec_id", "v").withColumn("label", lit("x"))
-    val got = DedupOps.semanticDedupPairs(vecs, tau = 0.95, dim = 64,
+    val got = DedupOps.semanticDedupPairs(vecs, tau = 0.95,
       ncoarseOverride = Some(1), target = 1000000)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got.keySet == Set((10L, 11L), (20L, 21L)),
@@ -293,7 +293,7 @@ class DedupOpsSpec extends SparkSpec {
       .toDF("vec_id", "v").withColumn("label", lit("x"))
     val exact = DedupOps.embeddingPairs(vecs, tau = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sem = DedupOps.semanticDedupPairs(vecs, tau = 0.95, dim = 64,
+    val sem = DedupOps.semanticDedupPairs(vecs, tau = 0.95,
       ncoarseOverride = Some(2), target = 1000000)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val straddle = (math.min(idAt40, idAt50), math.max(idAt40, idAt50))

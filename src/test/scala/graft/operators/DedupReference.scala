@@ -3,13 +3,15 @@ package graft.operators
 import graft.functions.NumFns.roundHalfUp
 import graft.functions.TextFns._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Reference formulations `DedupOpsSpec` checks the shipped dedup kernels
   * against: the interpreted pair expansion behind `bucketPairs`, the
   * all-pairs n-gram Jaccard join that `ngramJaccardPairsPrefix` must
-  * reproduce bit for bit, and per-hash MinHash signatures for the
-  * estimation spec.
+  * reproduce bit for bit, per-hash MinHash signatures for the estimation
+  * spec, and the window-built shingle rows the MinHash n-gram spec
+  * compares the `wordNgrams` kernel against.
   */
 object DedupReference {
 
@@ -60,4 +62,21 @@ object DedupReference {
   def minhashSignature(grams: Column, numHashes: Int): Column =
     array((0 until numHashes).map(i =>
       array_min(transform(grams, g => hash(g, lit(i))))): _*)
+
+  /** One row per word n-gram OCCURRENCE: (doc_id, g), built with
+    * posexplode + `lead` windows over each doc's space tokens — an
+    * independent formulation of the shingles `DedupOps.minhashPairs` takes
+    * from the `wordNgrams` kernel (which keeps distinct grams only).
+    */
+  def ngramRows(docs: DataFrame, n: Int): DataFrame = {
+    val byDocPos = Window.partitionBy("doc_id").orderBy("pos")
+    val parts = col("tok") +: (1 until n).map(o => lead("tok", o).over(byDocPos))
+    docs
+      .withColumn("w", spaceTokens(col("text")))
+      .filter(size(col("w")) >= n)
+      .select(col("doc_id"), size(col("w")).as("nw"), posexplode(col("w")).as(Seq("pos", "tok")))
+      .withColumn("g", concat_ws("_", parts: _*))
+      .filter(col("pos") <= col("nw") - n) // last n-1 positions have no full gram
+      .select("doc_id", "g")
+  }
 }
