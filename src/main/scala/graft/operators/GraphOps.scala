@@ -2,9 +2,14 @@ package graft.operators
 
 import graft.functions.NumFns.roundHalfUp
 import graft.Tables
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Checkpoints
+import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** Graph-shaped lookups over an (s, p, o) triples table — the Spark twin of
   * the reference's RDF taxonomy/obligation refresh DAGs
@@ -81,24 +86,28 @@ object GraphOps {
     * PROPAGATION — the step every dedup pipeline needs after pair
     * generation: near-dup PAIRS form chains (A~B, B~C with A,C below the
     * pair threshold), and keep-one-per-cluster requires the transitive
-    * closure, not the pairs. The undirected edge table is built from one
-    * read of `edges` with a single exchange (on src) and cached. Iteration
-    * 1 is fused into a group-by of that table on src (label = least of the
-    * node's id and its neighbours' ids), which needs no further exchange;
-    * every later iteration is one join + partial-agg min (map-side
-    * combine) over the edge table. Labels converge in O(diameter)
-    * iterations — dup clusters are shallow (a handful of hops), so the
-    * loop runs 2-4 times in practice, each a linear pass. Per-iteration
-    * checkpoint truncates lineage (the plan tree otherwise grows ~3^k and
-    * OOMs the driver before the data ever would); the changed-labels probe
-    * is a full filter-count ([[Checkpoints.materialize]], one job) that
-    * also materializes the iteration's checkpoint. The last iteration's
-    * checkpoint backs the result, so no extra copy is made at return.
-    * `maxIter` (>= 1, the fused round counts as iteration 1) bounds the
-    * loop against pathological chains (a 100 TB run would switch to the
-    * large-star/small-star contraction at extreme diameters — same
-    * contract, fewer rounds).
+    * closure, not the pairs. Labels converge in O(diameter) rounds — dup
+    * clusters are shallow (a handful of hops), so the loop runs 2-4 times
+    * in practice, each a linear pass.
     *
+    * Catalyst plans the edge input once and the result once; the rounds
+    * are plain RDD jobs over `(id, label)` longs, so a round costs no
+    * analysis, no AQE planning and no SQL execution — only its one job.
+    * The edges become an adjacency of distinct neighbours, hash
+    * partitioned as wide as the edge input and persisted for the loop.
+    * Round 1 needs no shuffle (label = least of the node's id and its
+    * neighbours' ids); every later round pairs each partition's adjacency
+    * with its labels (no shuffle) and sends the labels through one
+    * min-combining shuffle. Each round is checkpointed
+    * ([[Checkpoints]]), and its changed-labels count is the action that
+    * materializes the checkpoint; the superseded round is released right
+    * after. The last round's checkpoint backs the result, so at return
+    * exactly one checkpoint is pinned. `maxIter` (>= 1, the fused round
+    * counts as iteration 1) bounds the loop against pathological chains
+    * (a 100 TB run would switch to the large-star/small-star contraction
+    * at extreme diameters — same contract, fewer rounds).
+    *
+    * `src` and `dst` must be bigint; an edge with a null end is dropped.
     * Output: (id, comp) for every node that appears in an edge, comp = the
     * minimum id reachable from the node.
     */
@@ -122,76 +131,86 @@ object GraphOps {
   def connectedComponentsWithStats(
       edges: DataFrame, maxIter: Int = 20): (DataFrame, Boolean, Int) = {
     require(maxIter >= 1, s"connectedComponents needs maxIter >= 1, got $maxIter")
-    // Both directions of every edge from ONE read of `edges` (a union of
-    // the two projections evaluates the edge plan twice and shuffles
-    // twice), deduplicated inside the src partitioning: distinct on
-    // (src, dst) is satisfied by the hash layout on src, so the
-    // repartition is the only exchange. Cached pre-partitioned by src:
-    // every round groups or joins the undirected edge table on src, and
-    // InMemoryRelation preserves the repartition's hash layout — only the
-    // (smaller) label state exchanges per round.
-    val both = explode(array(
-      struct(col("src").as("src"), col("dst").as("dst")),
-      struct(col("dst").as("src"), col("src").as("dst"))))
-    val und = edges.select(both.as("e")).select("e.src", "e.dst")
-      .repartition(col("src"))
-      .distinct()
-      .persist()
-    // state = (id, comp, comp_prev) — comp_prev rides along so the
-    // convergence probe shares the SAME action that materializes the
-    // round (one job per round, not a count + a compare join).
+    for (c <- Seq("src", "dst"); t = edges.schema(c).dataType)
+      require(t == LongType, s"connectedComponents needs a bigint `$c` column, got ${t.sql}")
+    // The edge plan runs once, as the first round's shuffle input; toRdd
+    // plans it without opening a SQL execution.
+    val input = edges.select("src", "dst").queryExecution.toRdd
+    val part = new HashPartitioner(math.max(1, input.getNumPartitions))
+    // Both directions of every edge, hashed to their node's partition, where
+    // they become that partition's one Adjacency block.
+    val adj = input
+      .flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+        else { val (s, d) = (r.getLong(0), r.getLong(1)); Iterator((s, d), (d, s)) }
+      }
+      .partitionBy(part)
+      .mapPartitions(pairs => Iterator.single(adjacency(pairs)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // A round's labels are checkpointed as (id, comp) rows, the form the
+    // result's LogicalRDD reads. Partition p holds the rows of adj's block p
+    // in the block's order, so rounds pair a node with its label by
+    // position; the block's ids are sorted, so a recomputed block keeps
+    // that order.
     //
-    // Lineage is truncated EVERY round with a lazy checkpoint: the
-    // iteration body references `state` three times, so chaining plans
-    // round-over-round grows the logical tree ~3^k — at a dozen iterations
-    // the plan alone (not the data) OOMs the driver rendering explain
-    // strings. The probe's full filter-count is the materializing action
-    // (a limit(1) would short-circuit and leave partitions unmaterialized),
-    // after which `state` is a flat LogicalRDD. Superseded checkpoint
-    // blocks are released explicitly after each round materializes — at
-    // most two rounds' blocks are ever live.
-    def probe(round: DataFrame): Long =
-      Checkpoints.materialize(round.filter(col("comp") =!= col("comp_prev")))
     // Round 1, fused: every node starts labelled with its own id, so its
-    // first label is the least of its id and its neighbours' ids. Every
-    // node of `und` is a src (both directions are in it), and the group
-    // by src needs no exchange on und's partitioning.
-    var state = Checkpoints(
-      und.groupBy("src").agg(min("dst").as("nmin"))
-        .select(col("src").as("id"), least(col("src"), col("nmin")).as("comp"),
-          col("src").as("comp_prev")),
-      eager = false)
-    var changed = probe(state)
+    // first label is the least of its id and its neighbours' ids, and the
+    // changed labels are those that differ from the id.
+    var state = Checkpoints(adj.mapPartitions { blocks =>
+      val a = blocks.next()
+      a.ids.indices.iterator.map(i => InternalRow(a.ids(i), math.min(a.ids(i), a.nbrs(i).min)))
+    })
+    var changed = state.filter(r => r.getLong(0) != r.getLong(1)).count()
     var iter = 1
     while (changed != 0L && iter < maxIter) {
-      // comp_prev rides through the SAME aggregation instead of a second
-      // per-round join against state: the state-side union rows carry
-      // their comp as `prev` (exactly one state row per id — every node
-      // is in state), neighbor rows carry null, and max() ignores nulls —
-      // identical (id, comp, comp_prev) rows, one exchange less per round.
-      val compType = state.schema("comp").dataType
-      val next = Checkpoints(
-        und
-          .join(state.select(col("id").as("src"), col("comp").as("nc")), "src")
-          .select(col("dst").as("id"), col("nc"), lit(null).cast(compType).as("prev"))
-          .union(state.select(col("id"), col("comp").as("nc"), col("comp").as("prev")))
-          .groupBy("id")
-          .agg(min("nc").as("comp"), max("prev").as("comp_prev")),
-        eager = false)
-      changed = probe(next)
-      // The probe above computed every partition of `next` and finalized
-      // its checkpoint, so the superseded round's blocks are released
-      // EXPLICITLY (bounded storage on long-lived sessions) instead of
-      // waiting for GC + ContextCleaner.
+      // Every node sends its label to itself and to each neighbour; the
+      // least label per receiver is kept before and after the shuffle. The
+      // count of labels that moved is the round's one action, and it
+      // materializes the round's checkpoint.
+      val sent = adj.zipPartitions(state) { (blocks, rows) =>
+        val a = blocks.next()
+        minLabels { send =>
+          for (i <- a.ids.indices) {
+            val c = rows.next().getLong(1)
+            send(a.ids(i), c)
+            a.nbrs(i).foreach(send(_, c))
+          }
+        }.iterator
+      }.partitionBy(part)
+      val next = Checkpoints(adj.zipPartitions(sent) { (blocks, got) =>
+        val best = minLabels(send => got.foreach { case (id, c) => send(id, c) })
+        blocks.next().ids.iterator.map(id => InternalRow(id, best(id)))
+      })
+      changed = next.zipPartitions(state)((n, p) =>
+        n.zip(p).filter { case (a, b) => a.getLong(1) != b.getLong(1) }).count()
       Checkpoints.release(state)
       state = next
       iter += 1
     }
-    und.unpersist(false)
-    // The final round's checkpoint is the result's backing data: at return
-    // exactly ONE checkpoint is pinned, freed by the ContextCleaner when
-    // the result is dropped (or explicitly via Checkpoints.release).
-    (state.select("id", "comp"), changed == 0L, iter)
+    adj.unpersist(blocking = false)
+    (Checkpoints.dataFrame(edges.sparkSession, state, LabelSchema), changed == 0L, iter)
+  }
+
+  private val LabelSchema = StructType.fromDDL("id BIGINT NOT NULL, comp BIGINT NOT NULL")
+
+  /** One partition of the undirected graph: its node ids, ascending, and
+    * each node's distinct neighbours. A partition is one object, not one
+    * record per node, so caching it does not size thousands of records.
+    */
+  private final class Adjacency(val ids: Array[Long], val nbrs: Array[Array[Long]]) extends Serializable
+
+  private def adjacency(pairs: Iterator[(Long, Long)]): Adjacency = {
+    val m = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+    pairs.foreach { case (s, d) => m.getOrElseUpdate(s, new mutable.ArrayBuilder.ofLong) += d }
+    val ids = m.keys.toArray.sorted
+    new Adjacency(ids, ids.map(m(_).result().distinct))
+  }
+
+  /** The least label each id is sent by `emit`. */
+  private def minLabels(emit: ((Long, Long) => Unit) => Unit): mutable.LongMap[Long] = {
+    val best = mutable.LongMap.empty[Long]
+    emit { (id, c) => if (c < best.getOrElseUpdate(id, c)) best(id) = c }
+    best
   }
 
   /** Apply cluster resolution to the corpus: drop every non-canonical
@@ -231,12 +250,15 @@ object GraphOps {
     * onto it + one partial-agg sum shuffled on dst, plus two 1-row
     * broadcast aggregates (N, dangling mass) — never a collect. Hub
     * pages skew the dst shuffle; AQE skew-split handles it (same watch
-    * as perplexity_bucket's word join). Lineage is truncated per round
-    * (a LAZY local checkpoint materialized by the next round's
-    * dangling-mass probe — one job per round; see [[Checkpoints]] for the
-    * reliable mode); superseded rounds are released
-    * explicitly, so at return only the final round's checkpoint is
-    * pinned.
+    * as perplexity_bucket's word join). The rounds stay a Dataset loop:
+    * moving them to RDD jobs would change the float summation order of
+    * the ranks. Lineage is truncated per round, since chained round plans
+    * grow the logical tree with every iteration, and each SQL execution
+    * re-analyzes it and renders its explain string on the driver. The
+    * checkpoint is LAZY, materialized by the next round's dangling-mass
+    * probe — one job per round; see [[Checkpoints]] for the reliable
+    * mode. Superseded rounds are released explicitly, so at return only
+    * the final round's checkpoint is pinned.
     *
     * Output: (id, rank) for every node, full precision (callers round).
     */
@@ -280,8 +302,7 @@ object GraphOps {
     // broadcast-crossJoin form paid a broadcast build + nested-loop stage
     // per round for the same single double). ONE job per round: the
     // checkpoint is LAZY and the next round's dangling-mass aggregate is
-    // the action that materializes it — the same probe-shares-the-action
-    // pattern as connectedComponentsWithStats (the earlier eager checkpoint +
+    // the action that materializes it (the earlier eager checkpoint +
     // separate dm job paid two driver round-trips per round). Float
     // semantics are unchanged: the aggregate is the identical plan over
     // the identical checkpointed state, only the job boundary moved.
@@ -319,12 +340,11 @@ object GraphOps {
       damping: Double): DataFrame = {
     val d = lit(damping)
     // Node rows ride through the SAME aggregation as the edge
-    // contributions (the connectedComponents comp_prev trick) instead of
-    // a per-round nodes⋈contribs join: contribution rows carry
-    // (id=dst, c=rank/odeg, dang=null), node rows carry (id, c=null,
-    // dang) — sum() ignores the null c (merging a null partial is a
-    // no-op, so the contribution sums stay BIT-IDENTICAL to the join
-    // form), max() picks each id's one non-null dang. One exchange per
+    // contributions instead of a per-round nodes⋈contribs join:
+    // contribution rows carry (id=dst, c=rank/odeg, dang=null), node rows
+    // carry (id, c=null, dang) — sum() ignores the null c (merging a null
+    // partial is a no-op, so the contribution sums stay BIT-IDENTICAL to
+    // the join form), max() picks each id's one non-null dang. One exchange per
     // round, no broadcast build job — and at 100 TB the union scales
     // where broadcasting a corpus-sized node table could not.
     val contribs = linkW

@@ -1,9 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.{RDD, ReliableRDDCheckpointData}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** The one place graft truncates lineage and frees what that stored.
   *
@@ -26,6 +31,21 @@ object Checkpoints {
     if (ds.sparkSession.sparkContext.getCheckpointDir.isEmpty) ds.localCheckpoint(eager)
     else ds.checkpoint(eager = true)
 
+  /** Mark `rdd` for a checkpoint under the same mode rule and return it.
+    * The mark is lazy: the next action over `rdd` materializes it. A
+    * reliable checkpoint writes its files in a job after that action, so
+    * `rdd` is persisted first and the write reads the stored blocks
+    * instead of recomputing the lineage.
+    */
+  def apply[T](rdd: RDD[T]): RDD[T] = {
+    if (rdd.sparkContext.getCheckpointDir.isEmpty) rdd.localCheckpoint()
+    else {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+    }
+    rdd
+  }
+
   /** Compute every partition of `ds` and return its row count. Over a
     * checkpoint, or a narrow plan on one (a filter, a projection), this is
     * ONE job, and for a lazy checkpoint it is the action that materializes
@@ -34,6 +54,16 @@ object Checkpoints {
     * executed RDD needs no shuffle.
     */
   def materialize(ds: Dataset[_]): Long = ds.queryExecution.toRdd.count()
+
+  /** A DataFrame whose plan is one `LogicalRDD` leaf over `rows`, so that
+    * [[rdds]] finds a checkpointed `rows` and [[release]] frees it.
+    * Building it analyzes the leaf and runs nothing.
+    */
+  def dataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(session,
+      LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(session))
+  }
 
   /** The RDDs behind every checkpointed leaf of the Dataset's plan. Spark
     * wraps a checkpoint in a `LogicalRDD` leaf and exposes no public way
@@ -52,12 +82,20 @@ object Checkpoints {
     * Checkpoint lineage is truncated, so a later action on ANY Dataset
     * that shares one of these leaves fails instead of recomputing — call
     * it only once everything derived from them is dead. Each leaf must be
-    * materialized already. Local blocks go through `sc.unpersistRDD`,
-    * which skips `RDD.unpersist`'s per-RDD "cannot be recomputed" warning.
+    * materialized already.
     */
-  def release(ds: Dataset[_]): Unit = {
-    val sc = ds.sparkSession.sparkContext
-    val leaves = rdds(ds)
+  def release(ds: Dataset[_]): Unit = free(ds.sparkSession.sparkContext, rdds(ds))
+
+  /** Free a checkpointed RDD's storage, as [[release]] does for a
+    * Dataset's leaves. The same rule holds: nothing derived from `rdd`
+    * may run afterwards.
+    */
+  def release(rdd: RDD[_]): Unit = free(rdd.sparkContext, Seq(rdd))
+
+  /** Local blocks go through `sc.unpersistRDD`, which skips
+    * `RDD.unpersist`'s per-RDD "cannot be recomputed" warning.
+    */
+  private def free(sc: SparkContext, leaves: Seq[RDD[_]]): Unit = {
     leaves.foreach { rdd =>
       assert(rdd.isCheckpointed, s"RDD ${rdd.id} released before its checkpoint materialized")
       sc.unpersistRDD(rdd.id, blocking = false)

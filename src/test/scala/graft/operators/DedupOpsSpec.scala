@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ReliableCheckpoints
+import org.apache.spark.sql.graftbridge.{JobCount, ReliableCheckpoints}
 
 class DedupOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -339,15 +339,8 @@ class DedupOpsSpec extends SparkSpec {
     // itself launches a schema-inference job, so the invariant is: building
     // the registered query costs exactly the jobs of a plainly-lazy read of
     // the same table — zero EXTRA jobs.
-    val tracker = spark.sparkContext.statusTracker
-    def jobsDuring(f: => Unit): Int = {
-      val before = tracker.getJobIdsForGroup(null).length
-      f
-      tracker.getJobIdsForGroup(null).length - before
-    }
-    val lazyJobs = jobsDuring { DedupOps.plantedEmbeddings(spark, sfDir) }
-    var df: org.apache.spark.sql.DataFrame = null
-    val qJobs = jobsDuring { df = DedupOps.qDedupEmbedding(spark, sfDir) }
+    val (_, lazyJobs) = JobCount(spark)(DedupOps.plantedEmbeddings(spark, sfDir))
+    val (df, qJobs) = JobCount(spark)(DedupOps.qDedupEmbedding(spark, sfDir))
     assert(qJobs === lazyJobs,
       s"plan construction ran ${qJobs - lazyJobs} extra Spark job(s) beyond the lazy read")
     assert(df.columns.toSeq === Seq("id1", "id2", "cos_sim"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{Checkpoints, JobCount, ReliableCheckpoints}
+import org.apache.spark.sql.graftbridge.{Checkpoints, JobCount, ReliableCheckpoints, SqlExecCount}
 
 class GraphOpsSpec extends SparkSpec {
 
@@ -102,13 +102,62 @@ class GraphOpsSpec extends SparkSpec {
     import spark2.implicits._
     // 200 docs: 40 five-doc stars, and every 35th doc links its star to
     // the previous one, so labels settle in round 2 and round 3 observes
-    // no change. Round 1 runs the edge repartition, the edge cache and the
-    // probe; rounds 2 and 3 each run the label-state shuffle, the
-    // aggregate shuffle and the probe.
+    // no change. Each round is one job, its changed-labels count: round 1
+    // shuffles the edges into the adjacency and labels each node from its
+    // neighbours; rounds 2 and 3 pair adjacency and labels without a
+    // shuffle and shuffle only the labels they send.
     val base = (0L until 200L).toDF("doc_id")
     val (q, jobs) = JobCount(spark)(GraphOps.dedupClusterQuery(base))
     assert(q.filter(!col("converged")).isEmpty)
-    assert(jobs === 9, s"dedupClusterQuery construction ran $jobs jobs")
+    assert(jobs === 3, s"dedupClusterQuery construction ran $jobs jobs")
+  }
+
+  test("connected-components rounds open no SQL executions") {
+    val spark2 = spark
+    import spark2.implicits._
+    // Catalyst plans the edge input and the result; no round opens a SQL
+    // execution, so 13 rounds cost as many as the fixture's 3
+    val base = (0L until 200L).toDF("doc_id")
+    val (q, fixtureExecs) = SqlExecCount(spark)(GraphOps.dedupClusterQuery(base))
+    assert(fixtureExecs === 0, s"dedupClusterQuery construction opened $fixtureExecs SQL executions")
+    assert(q.filter(!col("converged")).isEmpty)
+    val chain = (1L until 13L).map(i => (i, i + 1)).toDF("src", "dst")
+    val ((_, converged, iters), chainExecs) =
+      SqlExecCount(spark)(GraphOps.connectedComponentsWithStats(chain))
+    assert(converged && iters === 13)
+    assert(chainExecs === fixtureExecs)
+  }
+
+  test("connectedComponents drops an edge with a null end") {
+    val spark2 = spark
+    import spark2.implicits._
+    // 3 and 4 are named only by null-ended edges, so they vanish; 5 stays
+    // through its edge to 6
+    val edges = Seq((Some(1L), Some(2L)), (Some(3L), None), (None, Some(4L)),
+      (Some(5L), None), (Some(5L), Some(6L)), (None, None)).toDF("src", "dst")
+    val got = GraphOps.connectedComponents(edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L))
+  }
+
+  test("connectedComponents rejects a non-bigint id column by name") {
+    val spark2 = spark
+    import spark2.implicits._
+    val src = intercept[IllegalArgumentException](
+      GraphOps.connectedComponents(Seq((1, 2L)).toDF("src", "dst")))
+    assert(src.getMessage.contains("`src`") && src.getMessage.contains("INT"))
+    val dst = intercept[IllegalArgumentException](
+      GraphOps.connectedComponents(Seq((1L, 2)).toDF("src", "dst")))
+    assert(dst.getMessage.contains("`dst`") && dst.getMessage.contains("INT"))
+  }
+
+  test("a node whose only edge is a self-loop is its own component in one round") {
+    val spark2 = spark
+    import spark2.implicits._
+    val (out, converged, iters) =
+      GraphOps.connectedComponentsWithStats(Seq((7L, 7L)).toDF("src", "dst"))
+    assert(converged && iters === 1)
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq === Seq(7L -> 7L))
   }
 
   test("connectedComponents converges with a reliable checkpoint dir") {
