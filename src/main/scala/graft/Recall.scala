@@ -25,10 +25,6 @@ import org.apache.spark.sql.functions._
   *    wider widths where the three-ring probed mass decays: measured
   *    0.823 at the 15-bit third decade; the 100 TB path is IVF-PQ, LSH is
   *    the hyperplane alternative);
-  *  - `ann_ivf` (reference config): flat ivfTopK recall@10 at nlist=8 /
-  *    nprobe=4 — half the cells probed (floor 0.7, scale-stable because
-  *    it probes a fixed FRACTION: isolates quantizer quality from
-  *    probe-volume effects);
   *  - `ann_ivf2` (REGISTERED config): the two-level quantizer at the
   *    gate's corpus-sized parameters, trained ONCE, plus the per-nprobeF
   *    recall/wall curve (4/8/16/32). Trend only, stated honestly: at
@@ -37,7 +33,11 @@ import org.apache.spark.sql.functions._
   *    the quantizer to exploit — the worst case for any sublinear ANN);
   *  - `ann_ivfpq`: recall@10 of the registered RESIDUAL composition and
   *    of the r19 raw-codebook composition at identical bytes (trend: the
-  *    residual lift Jégou §IV predicts — measured 0.28 → 0.42 at sf0.01);
+  *    residual lift Jégou §IV predicts — measured 0.28 → 0.42 at sf0.01).
+  *    The IVF, IVF-PQ and PQ floors live in the test-side planted-cluster
+  *    spec (AnnRecallSpec), where each query's exact top-10 is known and
+  *    a floor measures the quantizer rather than this corpus's lack of
+  *    structure;
   *  - `dedup_semantic`: planted-duplicate recall with floor 1.0 (cos=1
   *    pairs share a centroid by construction). The planted set needs NO
   *    quadratic all-pairs reference — it is known by construction as
@@ -67,15 +67,11 @@ object Recall {
     val lshFloor = operators.AnnOps.annLshFloor(lshBits)
     val lsh = pairSet(operators.AnnOps.lshTopK(vecs, queries, k = 10, bits = lshBits)
       .select("query_id", "neighbor_id"))
-    val ivfFloor = 0.7
-    val ivf = pairSet(operators.AnnOps.ivfTopK(vecs, queries, k = 10,
-      nlist = 8, nprobe = 4).select("query_id", "neighbor_id"))
     // -1.0 = undefined (empty denominator on a degenerate corpus) — kept
     // finite so RECALL.json stays valid JSON (bare NaN/Infinity is not)
     def ratio(hit: Int, total: Int): Double =
       if (total == 0) -1.0 else hit.toDouble / total
     val lshRecall = ratio(lsh.intersect(exactTopK).size, exactTopK.size)
-    val ivfRecall = ratio(ivf.intersect(exactTopK).size, exactTopK.size)
 
     // Registered two-level config + the nprobeF recall/wall curve: the
     // default must be chosen from data, not convention. The quantizer
@@ -143,7 +139,6 @@ object Recall {
     // degenerate corpus) is not a miss.
     val misses = Seq(
       ("ann_lsh", lshRecall, lshFloor),
-      ("ann_ivf", ivfRecall, ivfFloor),
       ("sem_planted", semPlantedRecall, 1.0)
     ).filter { case (_, r, f) => r >= 0.0 && r < f }
 
@@ -153,7 +148,6 @@ object Recall {
       s"""{"sf":"$sfDir","k":10,"n_queries":${queries.count()},""" +
       s""""ann_lsh_recall":${fnum(lshRecall)},"ann_lsh_floor":$lshFloor,""" +
       s""""ann_lsh_bits":$lshBits,""" +
-      s""""ann_ivf_recall":${fnum(ivfRecall)},"ann_ivf_floor":$ivfFloor,""" +
       s""""ann_ivf2_recall":${fnum(ivf2Recall)},""" +
       s""""ann_ivf2_cprobe":$cprobe,"ann_ivf2_nprobef":$nprobeF,""" +
       s""""ann_ivf2_cells":${idx2.totalCells},""" +

@@ -282,7 +282,7 @@ object SparkEntry {
     "sample_bottomk" -> TwinHashSql.sampleBottomK,
     "ann_lsh" -> TwinHashSql.annLsh,
     // IVF tier: the two-level Lloyd-trained quantizer is bit-deterministic
-    // since the ordered-fold update step (AnnOps.ivfCentroids/ivf2Train),
+    // since the ordered-fold update step (AnnOps.ivf2Train's Lloyd),
     // so the whole coarse + grouped-fine training + probe + rerank chain
     // re-derives in SQL — xxhash64(vec_id) sample order, per-pass
     // max-dot/min-cid assignment, ordered-fold means, exact-count fine

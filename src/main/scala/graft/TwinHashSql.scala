@@ -699,13 +699,13 @@ $cte AS MATERIALIZED (SELECT *, ${toS64(xor64(s"${p}f4", s"${p}f4 // $M32"))} AS
     else s"(${dotSql(v, c, dim)} - 0.5 * list_sum(list_transform($c, x -> x * x)))"
 
   /** Lloyd-trained IVF quantizer re-derived in SQL — the twin of
-    * `AnnOps.ivfCentroids` + `centroidArrays` (deterministic since the
+    * `AnnOps`' one-group Lloyd (`flatLloyd`; deterministic since the
     * ordered-fold update: sample/seed order by xxhash64(vec_id), per-
     * iteration assignment = max-dot/min-cid, update mean = ordered left
     * fold over members sorted by vec_id, one closing division). Emits
     * CTEs over corpus CTE `src(vec_id, v)` ending in
     * `${cte}_cf(cid, cv)` — the trained quantizer, densely re-indexed in
-    * cid order exactly like `centroidArrays`. `iters` is unrolled (one
+    * cid order exactly like `Ivf2Index.coarse`. `iters` is unrolled (one
     * assignment + one update CTE pair per pass). The `+ 0.0` on the
     * assignment sort key collapses IEEE −0.0 (see AnnOps.noNegZero): the
     * engines disagree on ±0 order, both tie-break on cid once

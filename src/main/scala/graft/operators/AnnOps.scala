@@ -293,30 +293,9 @@ object AnnOps {
       .select("vec_id", "v")
       .persist()
 
-  /** Deterministic IVF (inverted-file) coarse quantizer. Training is
-    * corpus-size-INDEPENDENT: Lloyd runs over a bounded deterministic sample
-    * (the `trainCap` hash-smallest vec_ids — one TakeOrdered pass over the
-    * corpus, per-partition top-k, no full sort), exactly how published IVF
-    * implementations train the quantizer on a sample rather than the
-    * collection. At 100 TB the training cost is one corpus scan to draw the
-    * sample plus `iters` passes over ≤ `trainCap` vectors; seeding from the
-    * hash order is reproducible without RNG state. The Lloyd passes are
-    * [[lloyd]]'s one-group case.
-    */
-  def ivfCentroids(vecs: DataFrame, nlist: Int, iters: Int, dim: Int = 64,
-      trainCap: Int = 100000): DataFrame = {
-    val session = vecs.sparkSession
-    import session.implicits._
-    val sample = hashSample(vecs, trainCap)
-    val cents = flatLloyd(sample, nlist, iters, dim)
-    sample.unpersist(false)
-    cents.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }
-      .toDF("cid", "cv")
-  }
-
   /** [[lloyd]] over a whole (vec_id, v) sample as one group — the coarse
-    * quantizer of [[ivfCentroids]] and [[ivf2Train]].
+    * level of [[ivf2Train]]. Its cost is bounded by the sample, not the
+    * corpus: `iters` passes over ≤ trainCap vectors.
     */
   private def flatLloyd(sample: DataFrame, nlist: Int, iters: Int,
       dim: Int): IndexedSeq[Array[Double]] =
@@ -396,16 +375,6 @@ object AnnOps {
     cents.map { case (g, cs) => g -> cs.map(_._2) }
   }
 
-  /** Driver-side materialization of the trained quantizer — nlist × dim
-    * doubles (a few KB), the one sanctioned collect in this module: the
-    * centroids must become plan LITERALS so that corpus assignment compiles
-    * to a zero-shuffle projection instead of a crossJoin + groupBy.
-    * Re-indexed densely 0..m−1 in cid order (Lloyd can empty a cell).
-    */
-  def centroidArrays(centroids: DataFrame): IndexedSeq[Array[Double]] =
-    centroids.orderBy("cid").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("cv")).toArray).toIndexedSeq
-
   /** Nearest-centroid id as a pure expression: the native
     * [[graft.functions.NearestCentroid]] kernel — one codegen'd argmax
     * loop with the centroid matrix as a single reference object (first
@@ -419,66 +388,15 @@ object AnnOps {
   def nearestCentroid(v: Column, cents: Seq[Array[Double]]): Column =
     graft.functions.VectorFns.nearest_centroid(v, cents)
 
-  /** IVF-bucketed ANN — the centroid alternative to `lshTopK`: the corpus is
-    * assigned to its nearest centroid by a PROJECTION (`nearestCentroid`
-    * expression over the broadcast-as-literal centroid array — the inverted
-    * file costs zero corpus-side shuffles), each query probes its `nprobe`
-    * nearest centroids, and only vectors in probed cells get the exact
-    * cosine rerank. Candidate volume is ~N × nprobe / nlist per query; the
-    * only corpus-side exchange in the whole plan is the final per-query
-    * top-k window over narrow (query_id, neighbor_id, cos) candidate rows.
-    * The probe table (queries × nprobe) is broadcast, so candidates never
-    * shuffle to meet it.
-    *
-    * Uses inner-product argmin against mean centroids (vectors here are
-    * ~equal-norm, so dot ranking ≈ cosine ranking); recall vs `bruteTopK`
-    * is spec-tested. Training (`ivfCentroids` + the tiny centroid collect)
-    * is the explicit index-build phase every IVF system has — it runs when
-    * the DataFrame is constructed, not per-row.
-    */
-  def ivfTopK(vecs: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 32, nprobe: Int = 8, iters: Int = 2, dim: Int = 64,
-      trainCap: Int = 100000): DataFrame =
-    ivfProbeTopK(vecs, queries, k,
-      centroidArrays(ivfCentroids(vecs, nlist, iters, dim, trainCap)), nprobe)
-
-  /** The probe+rerank phase of [[ivfTopK]] against an ALREADY-trained
-    * quantizer (`cents` from [[centroidArrays]]). Exposed separately so a
-    * trained index can serve many probe configurations — e.g. `Recall`'s
-    * per-nprobe curve trains ONCE and times only this phase per point
-    * (training cost is constant across nprobe and would otherwise drown
-    * the probe-cost signal the curve exists to show).
-    */
-  def ivfProbeTopK(vecs: DataFrame, queries: DataFrame, k: Int,
-      cents: IndexedSeq[Array[Double]], nprobe: Int): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    // Literal-backed centroid table for the query probe side: no lineage to
-    // the corpus, so probing never re-runs training.
-    val centDf = cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cid", "cv")
-    val probed = topK(queries.select(col("vec_id").as("query_id"), col("v").as("qv"))
-        .crossJoin(broadcast(centDf))
-        .withColumn("sim", noNegZero(dot_product(col("qv"), col("cv")))),
-        "query_id", Seq(desc("sim"), col("cid")), lit(nprobe))
-      .select("query_id", "cid", "qv")
-    // The inverted file: one projection over the corpus, vectors ride along
-    // so candidates need no join back to the corpus for the rerank.
-    val inverted = vecs.select(
-      col("vec_id").as("neighbor_id"), col("v").as("cv2"),
-      nearestCentroid(col("v"), cents).as("cid"))
-    cosineRerank(inverted, probed, k)
-  }
-
   // ------------------------------------------------- two-level IVF quantizer
 
   /** A trained two-level (coarse→fine) IVF quantizer. `coarse` is the
     * ≤ [[Ivf2CoarseCap]]-row routing table (plan literals via the
     * [[nearestCentroid]] kernel); `fine` holds, per coarse cell id, that
     * cell's fine centroids densely indexed 0..k_g−1. A vector's cell is the
-    * pair (gcid, fcid). Driver-side size is totalCells × dim doubles — the
-    * same few-KB-to-few-MB class as a flat quantizer's centroid table, but
-    * the PLAN only ever carries the coarse matrix: fine centroids ride as a
-    * broadcast table keyed by gcid.
+    * pair (gcid, fcid). Driver-side size is totalCells × dim doubles (a
+    * few KB to a few MB), but the PLAN only ever carries the coarse matrix:
+    * fine centroids ride as a broadcast table keyed by gcid.
     */
   case class Ivf2Index(
       coarse: IndexedSeq[Array[Double]],
@@ -511,7 +429,7 @@ object AnnOps {
     * literal at ANY corpus size while fine counts track the data. The low
     * floor is deliberate: it keeps the FINE level active (k_g > 1) from a
     * few thousand vectors up — including the oracle-gate corpora — rather
-    * than degenerating to a flat quantizer everywhere below the old cap.
+    * than degenerating to a single-level quantizer on small corpora.
     * Integer arithmetic; twins re-derive it from `count(*)` with the same
     * `(n + 1023) // 1024` and clamps.
     */
@@ -521,9 +439,8 @@ object AnnOps {
 
   /** Fine cell count for ONE coarse cell from its exact full-corpus
     * population: ⌈n_g / target⌉ clamped to [1, 512]. Total cells across
-    * the index ≈ ⌈n / target⌉ with no global cap — the flat quantizer's
-    * 512-cell ceiling (which already bound at sf10) is gone; expected
-    * cell population stays ≈ target as the corpus grows.
+    * the index ≈ ⌈n / target⌉ with no global cap, so expected cell
+    * population stays ≈ target as the corpus grows.
     */
   def ivf2FineK(cellN: Long, target: Int): Int =
     math.max(1, math.min(512, ((math.max(1L, cellN) + target - 1) / target).toInt))
@@ -531,8 +448,7 @@ object AnnOps {
   /** Coarse probe width: 1/4 of the coarse cells, floored at 8. Bounded
     * cost by construction (ncoarse ≤ 512 ⇒ cprobe ≤ 128 coarse-dot ranks
     * per query) — the fraction lives at the CAPPED level, so it is a
-    * constant-work knob, unlike the flat quantizer's nprobe = nlist/4
-    * which reranked 25% of the corpus forever.
+    * constant-work knob.
     */
   def ivf2Cprobe(ncoarse: Int): Int = math.max(8, ncoarse / 4)
 
@@ -542,11 +458,11 @@ object AnnOps {
     * round-18 verdict named: per-query rerank cost is now CONSTANT as the
     * corpus grows. Honest recall note: on a corpus with real cluster
     * structure a fixed volume holds recall (the quantizer concentrates
-    * true neighbors in few cells); on the near-random synthetic testdata
-    * recall at fixed volume necessarily decays with corpus size — the
-    * no-structure worst case for ANY sublinear ANN — so RECALL.json
-    * records both this registered config's trend and a reference
-    * half-cells-probed config whose floor is scale-stable.
+    * true neighbors in few cells) — the planted-cluster spec (AnnRecallSpec)
+    * floors every shipped IVF path at this width; on the near-random
+    * synthetic testdata recall at fixed volume necessarily decays with
+    * corpus size — the no-structure worst case for ANY sublinear ANN — so
+    * RECALL.json records this config's trend there without a floor.
     */
   def ivf2NprobeF(target: Int): Int =
     math.max(8, (1600 + target - 1) / target)
@@ -554,7 +470,7 @@ object AnnOps {
   /** Train the two-level quantizer. Deterministic end to end (the DuckDB
     * twins re-derive every step):
     *
-    *  1. COARSE: the [[ivfCentroids]] Lloyd over the trainCap hash-smallest
+    *  1. COARSE: the [[flatLloyd]] over the trainCap hash-smallest
     *     sample, ncoarse = [[ivf2Ncoarse]] cells → plan-literal matrix.
     *  2. Exact full-corpus coarse cell populations (one ≤ncoarse-row
     *     partial-agg groupBy) → per-cell fine counts k_g = [[ivf2FineK]].
@@ -566,9 +482,8 @@ object AnnOps {
     *     centroid (possible only when n > trainCap leaves a cell
     *     sample-empty) fall back to one fine cell at the coarse centroid.
     *
-    * Per-pass collect volume is totalCells × dim doubles — the same
-    * "centroids end as broadcast data anyway" bound as the flat trainer,
-    * now without any global cell cap.
+    * Per-pass collect volume is totalCells × dim doubles — the centroids
+    * end as broadcast data anyway, so collecting them costs no more.
     */
   def ivf2Train(vecs: DataFrame, n: Long, target: Int, iters: Int = 2,
       dim: Int = 64, trainCap: Int = 100000,
@@ -684,7 +599,7 @@ object AnnOps {
   }
 
   /** Exact cosine rerank of an inverted file against a probe table — the
-    * shared tail of the flat IVF, the two-level and the persisted-index
+    * shared tail of the in-memory two-level and the persisted-index
     * paths. `inverted` must carry (neighbor_id, cv2) plus the join key
     * columns present in `probed` besides (query_id, qv).
     */

@@ -70,17 +70,25 @@ class AnnOpsSpec extends SparkSpec {
 
   test("corpus smaller than k returns every corpus row per query, no errors") {
     // the k > |corpus| boundary: top-k must degrade to "all neighbors",
-    // identically for brute force and both ANN paths
+    // identically for brute force and every ANN path
     // every path excludes the query's self-match (queries are corpus
     // members by construction), so k=10 over a 3-vector corpus caps at 2
     val vecs = AnnOps.corpus(spark, sfDir).filter(col("vec_id") < 3)
     val queries = vecs.filter(col("vec_id") === 0)
-    val brute = AnnOps.bruteTopK(vecs, queries, k = 10).collect()
-    assert(brute.length == 2 &&
-      brute.map(_.getAs[Long]("neighbor_id")).toSet == Set(1L, 2L))
-    // full-width IVF (nprobe = nlist) sees every cell → both other rows
-    assert(AnnOps.ivfTopK(vecs, queries, k = 10, nlist = 2, nprobe = 2)
-      .count() == 2)
+    def neighbors(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.collect().map(_.getAs[Long]("neighbor_id")).toSeq.sorted
+    assert(neighbors(AnnOps.bruteTopK(vecs, queries, k = 10)) === Seq(1L, 2L))
+    // full-width two-level IVF and IVF-PQ (every coarse and fine cell
+    // probed) and the exhaustive PQ scan see every row → both other rows
+    val (idx, residualBooks) = AnnOps.ivfpqTrainAll(vecs, 3L)
+    val (cprobe, nprobeF) = (idx.coarse.size, idx.totalCells)
+    assert(neighbors(AnnOps.ivf2ProbeTopK(vecs, queries, k = 10, idx, cprobe, nprobeF))
+      === Seq(1L, 2L), "ivf2ProbeTopK")
+    assert(neighbors(AnnOps.ivfpqTopK(vecs, queries, k = 10, idx, residualBooks,
+      cprobe, nprobeF)) === Seq(1L, 2L), "ivfpqTopK")
+    val books = AnnOps.pqCodebooks(vecs)
+    assert(neighbors(AnnOps.pqAdcTopK(AnnOps.pqEncode(vecs, books), queries, books, k = 10))
+      === Seq(1L, 2L), "pqAdcTopK")
     // LSH stays approximate even here: near-random vectors may share no
     // bucket with the query in any table — a subset of the exact result,
     // never more, and no error
@@ -102,75 +110,10 @@ class AnnOpsSpec extends SparkSpec {
     assert(exact(0).getAs[Double]("cos_sim") === 1.0)
   }
 
-  test("ivfTopK recall vs brute force at half-corpus probe width") {
-    val vecs = AnnOps.corpus(spark, sfDir)
-    val queries = vecs.filter(col("vec_id") % 100 === 0)
-    val exact = AnnOps.bruteTopK(vecs, queries, k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = AnnOps.ivfTopK(vecs, queries, k = 10, nlist = 8, nprobe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = exact.intersect(approx).size.toDouble / exact.size
-    // Near-random vectors are the hard regime for a coarse quantizer too:
-    // measured 0.80 here with half the cells probed (0.72 at sf0.01, 0.765
-    // at sf0.1 — RECALL.json's per-nprobe curve: 0.26/0.42/0.72/1.00 at
-    // nprobe 1/2/4/8 at sf0.01 and 0.265/0.51/0.765/1.00 at sf0.1, so
-    // nprobe=4 is the knee the default sits on). Floor 0.7, raised from
-    // 0.65 in round 17 once the three-scale sweep showed the worst
-    // deterministic point is 0.72: the pipeline is bit-reproducible
-    // (ordered-fold Lloyd), so the remaining margin only has to absorb a
-    // corpus regeneration, not run-to-run noise.
-    info(f"IVF recall@10 = $recall%.3f (${approx.size} approx pairs, ${exact.size} exact)")
-    assert(recall >= 0.7, s"IVF recall $recall below 0.7")
-  }
-
-  test("ivfTopK always finds an exact duplicate (identical cell assignment)") {
-    val vecs = AnnOps.corpus(spark, sfDir)
-    val clone = vecs.filter(col("vec_id") === 0)
-      .select(lit(99999L).as("vec_id"), col("label"), col("v"))
-    val got = AnnOps.ivfTopK(vecs.unionByName(clone), clone, k = 1, nlist = 8, nprobe = 1)
-    val rows = got.collect()
-    assert(rows.length === 1 && rows(0).getAs[Long]("neighbor_id") === 0L,
-      "identical vector shares the query's own nearest cell even at nprobe=1")
-    assert(rows(0).getAs[Double]("cos_sim") === 1.0)
-  }
-
-  test("ivfCentroids are deterministic and complete (every vector assignable)") {
-    val vecs = AnnOps.corpus(spark, sfDir)
-    val a = AnnOps.ivfCentroids(vecs, nlist = 8, iters = 2).orderBy("cid").collect()
-    val b = AnnOps.ivfCentroids(vecs, nlist = 8, iters = 2).orderBy("cid").collect()
-    def cvs(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => r.getSeq[Double](r.fieldIndex("cv")).toList).toSeq
-    assert(cvs(a) === cvs(b), "two builds must produce identical centroids")
-    assert(a.length <= 8 && a.nonEmpty)
-  }
-
-  test("ivfCentroids are bit-identical under any input partitioning") {
-    // The property the DuckDB oracle twins (and a 1000-executor cluster)
-    // rest on: the Lloyd update mean is an ORDERED fold over members
-    // sorted by vec_id, so the trained quantizer must not move by a
-    // single bit when the input arrives in different partition layouts
-    // or orders. A plain double avg() fails this test (scan-order
-    // accumulation).
-    val vecs = AnnOps.corpus(spark, sfDir)
-    def bits(df: org.apache.spark.sql.DataFrame): Seq[Seq[Long]] =
-      AnnOps.ivfCentroids(df, nlist = 8, iters = 2).orderBy("cid").collect()
-        .map(_.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits).toSeq)
-        .toSeq
-    val base = bits(vecs)
-    assert(bits(vecs.repartition(3)) === base,
-      "3-partition hash layout must not move a bit")
-    assert(bits(vecs.repartition(17, col("vec_id"))) === base,
-      "17-partition key layout must not move a bit")
-    assert(bits(vecs.orderBy(desc("vec_id"))) === base,
-      "reversed scan order must not move a bit")
-  }
-
   test("nearestCentroid expression agrees with the Lloyd min_by assignment") {
     import graft.functions.VectorFns.dot_product
     val vecs = AnnOps.corpus(spark, sfDir)
-    val centroids = AnnOps.ivfCentroids(vecs, nlist = 8, iters = 2)
-    val cents = AnnOps.centroidArrays(centroids)
-    // Re-index the min_by form onto the same dense 0..m-1 ids by ranking cid.
+    val cents = AnnOps.ivf2Train(vecs, vecs.count(), AnnOps.IvfCellTarget).coarse
     val spark2 = spark
     import spark2.implicits._
     val centDf = cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("dense_cid", "cv")
@@ -183,21 +126,6 @@ class AnnOpsSpec extends SparkSpec {
       .select(col("vec_id"), AnnOps.nearestCentroid(col("v"), cents).as("cid"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(viaExpr === viaJoin, "expression argmin must equal join/min_by argmin")
-  }
-
-  test("ivfCentroids trainCap bounds the Lloyd sample without breaking recall") {
-    val vecs = AnnOps.corpus(spark, sfDir)
-    val queries = vecs.filter(col("vec_id") % 100 === 0)
-    val exact = AnnOps.bruteTopK(vecs, queries, k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // Train on a quarter of the corpus (sf0.01 has ~500 vectors): the
-    // quantizer sees only the sample, the inverted file still covers ALL
-    // vectors (assignment is corpus-wide), so recall should hold.
-    val approx = AnnOps.ivfTopK(vecs, queries, k = 10, nlist = 8, nprobe = 4, trainCap = 128)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = exact.intersect(approx).size.toDouble / exact.size
-    info(f"IVF recall@10 with trainCap=128: $recall%.3f")
-    assert(recall >= 0.5, s"sampled-training IVF recall $recall below 0.5")
   }
 
   test("persisted two-level IVF index reproduces the in-memory plan and prunes to probed cells") {
@@ -298,12 +226,12 @@ class AnnOpsSpec extends SparkSpec {
   test("NearestCentroidDyn kernel agrees with the literal NearestCentroid kernel") {
     // The two-level fine assignment rides the dynamic (matrix-as-column)
     // kernel; its argmax and tie semantics must be bit-equal to the
-    // literal kernel the coarse level (and every flat-quantizer result)
-    // uses — same matrix in, same ids out, including ±0.0 ties.
+    // literal kernel the coarse level uses — same matrix in, same ids
+    // out, including ±0.0 ties.
     val spark2 = spark
     import spark2.implicits._
     val vecs = AnnOps.corpus(spark, sfDir)
-    val cents = AnnOps.centroidArrays(AnnOps.ivfCentroids(vecs, nlist = 8, iters = 2))
+    val cents = AnnOps.ivf2Train(vecs, vecs.count(), AnnOps.IvfCellTarget).coarse
     val matDf = Seq(Tuple1(cents.map(_.toSeq))).toDF("mats")
     val viaDyn = vecs.crossJoin(broadcast(matDf))
       .select(col("vec_id"),
@@ -319,20 +247,25 @@ class AnnOpsSpec extends SparkSpec {
     // The two-level trainer inherits the coarse Lloyd's determinism
     // contract: coarse + fine centroids must not move by a bit when the
     // corpus arrives in different partition layouts (the property the
-    // DuckDB twins — and a 1000-executor cluster — rest on).
+    // DuckDB twins — and a 1000-executor cluster — rest on). A plain
+    // double avg() in the Lloyd update fails this (scan-order accumulation).
     val vecs = AnnOps.corpus(spark, sfDir)
     val n = vecs.count()
-    def bits(df: org.apache.spark.sql.DataFrame): Seq[(Int, Seq[Seq[Long]])] =
-      AnnOps.ivf2Train(df, n, AnnOps.IvfCellTarget).fine.map { case (g, cs) =>
-        g -> cs.map(_.toSeq.map(java.lang.Double.doubleToRawLongBits)).toSeq
-      }
-    val base = bits(vecs)
-    assert(base.exists(_._2.size > 1),
+    def bits(cs: Seq[Array[Double]]): Seq[Seq[Long]] =
+      cs.map(_.toSeq.map(java.lang.Double.doubleToRawLongBits))
+    def levels(df: org.apache.spark.sql.DataFrame): (Seq[Seq[Long]], Seq[(Int, Seq[Seq[Long]])]) = {
+      val idx = AnnOps.ivf2Train(df, n, AnnOps.IvfCellTarget)
+      (bits(idx.coarse), idx.fine.map { case (g, cs) => g -> bits(cs) })
+    }
+    val base = levels(vecs)
+    assert(base._2.exists(_._2.size > 1),
       "sf corpus must exercise a genuinely multi-fine-cell index (k_g > 1)")
-    assert(bits(vecs.repartition(3)) === base,
-      "3-partition layout must not move a fine centroid bit")
-    assert(bits(vecs.orderBy(desc("vec_id"))) === base,
-      "reversed scan order must not move a fine centroid bit")
+    assert(levels(vecs.repartition(3)) === base,
+      "3-partition layout must not move a coarse or fine centroid bit")
+    assert(levels(vecs.repartition(17, col("vec_id"))) === base,
+      "17-partition key layout must not move a coarse or fine centroid bit")
+    assert(levels(vecs.orderBy(desc("vec_id"))) === base,
+      "reversed scan order must not move a coarse or fine centroid bit")
   }
 
   test("ivf2ProbeTopK always finds an exact duplicate") {

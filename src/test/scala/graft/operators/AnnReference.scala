@@ -1,15 +1,46 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Plain-Scala references for `AnnOpsSpec`: the inverse of
-  * `AnnOps.quantizeEmbeddings`, and a driver-side Lloyd trainer that the
-  * Spark quantizers must equal bit for bit.
+/** Plain-Scala references for the ANN specs: the inverse of
+  * `AnnOps.quantizeEmbeddings`, a driver-side Lloyd trainer that the
+  * Spark quantizers must equal bit for bit, and a planted-cluster corpus
+  * whose exact neighbors are known by construction.
   */
 object AnnReference {
+
+  /** Members per planted cluster: k + 1 at k = 10, so a member's exact
+    * top-10 (self excluded) is its own cluster.
+    */
+  val PlantedClusterSize = 11
+
+  /** Write `<dir>/embeddings.parquet` in the corpus schema (vec_id,
+    * embedding array<float> of 64 dims, label) with `clusters` planted
+    * clusters: cluster c holds vec_ids 11c .. 11c + 10 and is labelled c.
+    * A member is its cluster's center plus per-member noise of amplitude
+    * `noise`;
+    * each center component is a uniform [-1, 1) draw from xxhash64 of
+    * (c, dim), each noise component one from xxhash64 of (vec_id, dim,
+    * "noise"). Every row is a pure function of its id, so the table is
+    * the same under any partitioning, and no plan carries its data.
+    */
+  def writePlantedClusters(spark: SparkSession, dir: String, clusters: Int,
+      noise: Double): Unit = {
+    // top 53 bits of the hash as a double in [0, 2), shifted to [-1, 1)
+    def uniform(h: Column): Column =
+      shiftrightunsigned(h, 11).cast("double") * lit(math.pow(2, -52)) - lit(1.0)
+    spark.range(clusters.toLong * PlantedClusterSize)
+      .select(col("id").as("vec_id"), (col("id") / PlantedClusterSize).cast("long").as("c"))
+      .select(col("vec_id"), col("c").cast("int").as("label"),
+        array((0 until 64).map { d =>
+          uniform(xxhash64(col("c"), lit(d))) +
+            lit(noise) * uniform(xxhash64(col("vec_id"), lit(d), lit("noise")))
+        }: _*).cast("array<float>").as("embedding"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+  }
 
   /** Dequantize back to doubles: v_i ≈ code_i × scale / 127. */
   def dequantizeEmbeddings(df: DataFrame): DataFrame =
