@@ -21,6 +21,12 @@ import org.apache.spark.sql.SparkSession
   * session's conf, when Spark first generates code: the setting takes
   * effect only when this builder creates the JVM's first session, and
   * `getOrCreate` on an existing session ignores it.
+  *
+  * Spark's live status stores (SQL executions, jobs, stages, tasks per
+  * stage) fill even with the UI off, and by default keep 1,000 / 1,000 /
+  * 1,000 / 100,000 entries: a long-lived session retained ~1.1 MB of
+  * driver heap per llm_curate pass. Nothing in graft reads them, so
+  * [[StatusStoreCaps]] keeps a few passes' worth.
   */
 object GraftSession {
 
@@ -28,6 +34,17 @@ object GraftSession {
     * the cache's four-segment split.
     */
   val CodegenCacheEntries = 2048
+
+  /** Caps on the live status stores (static confs, read when the
+    * SparkContext starts): about two llm_curate passes of executions,
+    * jobs and stages (7, 30 and 50 per pass at sf0.001), and tasks per
+    * stage.
+    */
+  val StatusStoreCaps: Seq[(String, Long)] = Seq(
+    "spark.sql.ui.retainedExecutions" -> 16L,
+    "spark.ui.retainedJobs" -> 64L,
+    "spark.ui.retainedStages" -> 128L,
+    "spark.ui.retainedTasks" -> 256L)
 
   def builder(appName: String = "graft"): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -38,6 +55,7 @@ object GraftSession {
     // fall back to local[N] for the bare-JVM test harness.
     if (!sys.props.contains("spark.master") && !sys.env.contains("SPARK_MASTER"))
       b.master(s"local[$cpus]")
+    StatusStoreCaps.foreach { case (k, v) => b.config(k, v) }
     b.config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -60,13 +60,19 @@ object AnnOps {
     val q = queries.select(col("vec_id").as("query_id"), col("v").as("qv"))
     rankNeighbors(c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos_raw", cosine_sim(col("cv"), col("qv")))
-      // zero vectors have no cosine (0/0 = NaN) and are EXCLUDED: Spark's
-      // NaN-largest ordering would rank them first, and the DuckDB twin's
-      // x/0 yields NULL — dropping on both sides is the one portable (and
-      // semantically right) answer for a similarity search
-      .filter(!isnan(col("cos_raw"))), "cos_raw", k, 4, "cos_sim")
+      .withColumn("cos_raw", cosineOrNull(cosine_sim(col("cv"), col("qv")))),
+      "cos_raw", k, 4, "cos_sim")
   }
+
+  /** Zero vectors have no cosine (0/0 = NaN) and are EXCLUDED: Spark's
+    * NaN-largest ordering would rank them first, and the DuckDB twin's x/0
+    * yields NULL — dropping on both sides is the one portable (and
+    * semantically right) answer for a similarity search. The NaN becomes
+    * NULL here and [[rankNeighbors]] drops it after the top-k: a filter on
+    * the score below the window would be inlined into the join condition,
+    * evaluating the cosine twice per pair.
+    */
+  private def cosineOrNull(cos: Column): Column = nanvl(cos, lit(null).cast("double"))
 
   /** The one bounded top-k step: rows numbered by `order` within each
     * `part` group (distinct ranks 1, 2, …; every ordering here ends in id
@@ -81,12 +87,14 @@ object AnnOps {
       .filter(col("rank") <= k)
 
   /** The per-query neighbor ranking every search here ends in: [[topK]]
-    * by descending `score`, ties on neighbor_id, emitted as (query_id,
-    * neighbor_id, rank, `score` rounded half-up to `digits` as `as`).
+    * by descending `score` (NULLs last, then dropped), ties on
+    * neighbor_id, emitted as (query_id, neighbor_id, rank, `score` rounded
+    * half-up to `digits` as `as`).
     */
   private def rankNeighbors(cands: DataFrame, score: String, k: Int,
       digits: Int, as: String): DataFrame =
-    topK(cands, "query_id", Seq(desc(score), col("neighbor_id")), lit(k))
+    topK(cands, "query_id", Seq(desc_nulls_last(score), col("neighbor_id")), lit(k))
+      .filter(col(score).isNotNull)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         roundHalfUp(col(score), digits).as(as))
 
@@ -232,8 +240,7 @@ object AnnOps {
     rankNeighbors(cand
       .join(vecs.select(col("vec_id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
       .join(broadcast(queries.select(col("vec_id").as("query_id"), col("v").as("qv"))), "query_id")
-      .withColumn("cos_raw", cosine_sim(col("cv"), col("qv")))
-      .filter(!isnan(col("cos_raw"))), // zero vectors: no cosine (see bruteTopK)
+      .withColumn("cos_raw", cosineOrNull(cosine_sim(col("cv"), col("qv")))),
       "cos_raw", k, 4, "cos_sim")
   }
 
@@ -298,18 +305,41 @@ object AnnOps {
     * corpus: `iters` passes over ≤ trainCap vectors.
     */
   private def flatLloyd(sample: DataFrame, nlist: Int, iters: Int,
-      dim: Int): IndexedSeq[Array[Double]] =
-    lloyd(sample.withColumn("g", lit(0)), lit(nlist), iters, dim, euclid = false)
+      dim: Int): IndexedSeq[Array[Double]] = {
+    // The seeds are a global top-k (one TakeOrderedAndProject). A window
+    // over one constant group would lose its partition key to Spark's
+    // EliminateWindowPartitions and run unpartitioned, with a WARN.
+    val seeds = sample.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(nlist)
+      .select("v").collect().toIndexedSeq.zipWithIndex
+      .map { case (r, cid) => (cid.toLong, r.getSeq[Double](0).toArray) }
+    lloyd(sample.withColumn("g", lit(0)), Map(0 -> seeds), iters, dim, euclid = false)
       .getOrElse(0, IndexedSeq.empty)
+  }
+
+  /** [[lloyd]]'s seeds for a grouped `sample`: per group, the `k`
+    * hash-smallest members by (xxhash64(vec_id), vec_id) through
+    * [[topK]]; position in that order is the cid.
+    */
+  private def groupSeeds(sample: DataFrame, k: Column): Map[Int, IndexedSeq[(Long, Array[Double])]] =
+    regroup(topK(sample, "g", Seq(xxhash64(col("vec_id")), col("vec_id")), k)
+      .select(col("g"), (col("rank") - 1).as("cid"), col("v"))
+      .collect())
+
+  /** (g, cid, v) rows → each group's (cid, centroid) in cid order. */
+  private def regroup(rows: Array[org.apache.spark.sql.Row]): Map[Int, IndexedSeq[(Long, Array[Double])]] =
+    rows.toIndexedSeq
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+      .groupBy(_._1)
+      .map { case (g, rs) => g -> rs.sortBy(_._2).map(t => (t._2, t._3)) }
 
   /** The one Lloyd trainer, grouped: every group `g` of the persisted
-    * `sample` (vec_id, g: int, v) trains its own centroids, `k` of them
-    * (a Column — a literal, or a per-group count looked up from `g`).
+    * `sample` (vec_id, g: int, v) trains its own centroids from `seeds`.
     * Returns each group's centroids in cid order.
     *
     *  - Seeds: per group, the `k` hash-smallest members by
-    *    (xxhash64(vec_id), vec_id) through [[topK]] — position in that
-    *    order is the cid; a group with fewer members seeds what it has.
+    *    (xxhash64(vec_id), vec_id) ([[groupSeeds]]; [[flatLloyd]] for the
+    *    one-group case) — position in that order is the cid; a group with
+    *    fewer members seeds what it has.
     *  - Assignment, each pass: ONE broadcast join on `g` to the current
     *    matrices + the codegen'd [[graft.functions.NearestCentroidDyn]]
     *    kernel (the matrix is a column — never an nlist × dim literal
@@ -338,19 +368,11 @@ object AnnOps {
     * per-group runs (groups share nothing), with one driver round-trip per
     * pass instead of one per group per pass.
     */
-  private def lloyd(sample: DataFrame, k: Column, iters: Int, dim: Int,
-      euclid: Boolean): Map[Int, IndexedSeq[Array[Double]]] = {
+  private def lloyd(sample: DataFrame, seeds: Map[Int, IndexedSeq[(Long, Array[Double])]],
+      iters: Int, dim: Int, euclid: Boolean): Map[Int, IndexedSeq[Array[Double]]] = {
     val spark = sample.sparkSession
     import spark.implicits._
-    def regroup(rows: Array[org.apache.spark.sql.Row]) =
-      rows.toIndexedSeq
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-        .groupBy(_._1)
-        .map { case (g, rs) => g -> rs.sortBy(_._2).map(t => (t._2, t._3)) }
-    var cents = regroup(
-      topK(sample, "g", Seq(xxhash64(col("vec_id")), col("vec_id")), k)
-        .select(col("g"), (col("rank") - 1).as("cid"), col("v"))
-        .collect())
+    var cents = seeds
     val v = if (euclid) concat(col("v"), array(lit(1.0d))) else col("v")
     (0 until iters).foreach { _ =>
       val mats = cents.toSeq.map { case (g, cs) =>
@@ -517,9 +539,9 @@ object AnnOps {
     // a projection (the kernel over ≤512 literal centroids) — not a second
     // corpus TakeOrdered. Every sample cell is a corpus cell, so the k_g
     // lookup always hits.
-    val fine = lloyd(
-      sample.select(col("vec_id"), nearestCentroid(col("v"), coarse).as("g"), col("v")),
-      typedLit(kg).apply(col("g")), iters, dim, euclid = false)
+    val bySample = sample.select(col("vec_id"), nearestCentroid(col("v"), coarse).as("g"), col("v"))
+    val fine = lloyd(bySample, groupSeeds(bySample, typedLit(kg).apply(col("g"))),
+      iters, dim, euclid = false)
     val all = counts.keys.toIndexedSeq.sorted.map { g =>
       g -> fine.getOrElse(g, IndexedSeq(coarse(g)))
     }
@@ -608,8 +630,7 @@ object AnnOps {
     rankNeighbors(inverted
       .join(broadcast(probed), keys)
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos_raw", noNegZero(cosine_sim(col("cv2"), col("qv"))))
-      .filter(!isnan(col("cos_raw"))) // zero vectors: no cosine (see bruteTopK)
+      .withColumn("cos_raw", cosineOrNull(noNegZero(cosine_sim(col("cv2"), col("qv")))))
       .select("query_id", "neighbor_id", "cos_raw"), "cos_raw", k, 4, "cos_sim")
   }
 
@@ -774,10 +795,9 @@ object AnnOps {
     // the 4.8 s ann_pq wall). The DuckDB twins keep the per-subspace
     // formulation; the hash-exact gate is the equivalence proof.
     val sample = hashSample(vecs, trainCap)
-    val books = lloyd(
-      sample.select(col("vec_id"), posexplode(array(
-        (0 until m).map(s => slice(col("v"), s * sd + 1, sd)): _*)).as(Seq("g", "v"))),
-      lit(k), iters, sd, euclid = true)
+    val bySub = sample.select(col("vec_id"), posexplode(array(
+      (0 until m).map(s => slice(col("v"), s * sd + 1, sd)): _*)).as(Seq("g", "v")))
+    val books = lloyd(bySub, groupSeeds(bySub, lit(k)), iters, sd, euclid = true)
     sample.unpersist(false)
     (0 until m).map(books.getOrElse(_, IndexedSeq.empty))
   }

@@ -37,10 +37,10 @@ import scala.jdk.CollectionConverters._
   *    capped) with `avg`/`sum`/`min`/`max` sub-aggregations — the facet
   *    shape of `lib/elastic.py`'s terms aggregations
   *
-  * Scoring model: `match`/`match_phrase` contribute BM25 (identical
-  * formula + broadcast-1-row-stats shape as [[SearchOps.matchBm25TopK]];
-  * document frequencies are computed over the INPUT corpus before any
-  * filtering, as an index-level stat — exactly ES). Exact-match clauses
+  * Scoring model: `match`/`match_phrase` contribute BM25 through [[bm25]],
+  * the one scorer the typed SearchOps operators also use (document
+  * frequencies are computed over the INPUT corpus before any filtering,
+  * as an index-level stat — exactly ES). Exact-match clauses
   * (`term`/`terms`/`range`/`exists`) contribute their `boost` (default
   * 1.0) when matched — ES's constant-score behavior for filter-type
   * queries lifted into query context. `filter` and `must_not` clauses
@@ -59,17 +59,82 @@ object EsQuery {
 
   private val mapper = new ObjectMapper()
 
-  /** One BM25-scoring leaf discovered during compilation; `df` columns in
-    * the emitted score expression are named positionally (`df_q<i>_t<j>`)
-    * and produced by [[statsFor]].
+  /** One BM25-scored leaf: a `match` over `field` (one BM25 term per
+    * query term) or, when `phrase`, a `match_phrase` (the consecutive run
+    * of `terms` is the single term: tf = run occurrences, overlaps
+    * counted), its term sum scaled by `boost`.
     */
-  private sealed trait Need { def field: String }
-  private final case class MatchNeed(field: String, terms: Seq[String]) extends Need
-  private final case class PhraseNeed(field: String, terms: Seq[String]) extends Need
+  private[operators] final case class Bm25Leaf(field: String, terms: Seq[String],
+      phrase: Boolean = false, boost: Double = 1.0) {
+    def toks: Column = spaceTokens(col(field))
+    /** Per-document tf of each BM25 term (long). */
+    def tfs: Seq[Column] =
+      if (phrase) Seq(phraseTf(toks, terms)) else terms.map(t => size(filter(toks, x => x === t)))
+    /** Per-document "contains the term" of each BM25 term. */
+    def hits: Seq[Column] =
+      if (phrase) Seq(tfs.head > 0) else terms.map(t => array_contains(toks, t))
+  }
 
-  private final class Ctx(val scoring: Boolean) {
-    val needs = ListBuffer.empty[Need]
-    def add(n: Need): Int = { needs += n; needs.size - 1 }
+  /** Lucene's BM25Similarity constants (the ES default since 5.x). */
+  private val K1 = 1.2
+  private val B = 0.75
+
+  /** Collects the BM25 leaves of one query. Each leaf's score reads its
+    * statistics by position (`es_df_q<i>_t<j>`, `es_sum_dl_<field>`,
+    * `es_n_docs`) from the 1-row aggregate that [[join]] broadcasts; a
+    * non-scoring scorer (filter context) records nothing and scores 0.
+    */
+  private final class Scorer(val scoring: Boolean) {
+    private val leaves = ListBuffer.empty[Bm25Leaf]
+    def nonEmpty: Boolean = leaves.nonEmpty
+
+    /**   score(D,Q) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·|D|/avgdl))
+      *   idf(t)     = ln(1 + (N − df + 0.5)/(df + 0.5))
+      * Constants stay unfolded expressions (`k1 + 1`, not 2.2): the DuckDB
+      * twins fold `1.2 + 1.0` with the same IEEE ops, so both sides land on
+      * identical bits (a pre-folded literal can differ by 1 ulp and flip
+      * the 6th rounded digit).
+      */
+    def score(leaf: Bm25Leaf): Column = if (!scoring) lit(0.0) else {
+      val i = leaves.size
+      leaves += leaf
+      val n = col("es_n_docs").cast("double")
+      val avgdl = col(s"es_sum_dl_${leaf.field}").cast("double") / col("es_n_docs")
+      val dl = size(leaf.toks).cast("double")
+      leaf.tfs.zipWithIndex.map { case (tfRaw, j) =>
+        val tf = tfRaw.cast("double")
+        val df = col(s"es_df_q${i}_t$j").cast("double")
+        val idf = log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
+        idf * (tf * (lit(K1) + lit(1.0))) /
+          (tf + lit(K1) * (lit(1.0) - lit(B) + lit(B) * dl / avgdl))
+      }.reduce(_ + _) * lit(leaf.boost)
+    }
+
+    /** `docs` with the broadcast index statistics of every leaf scored so
+      * far: corpus size, one Σ|D| per scored field, one df per (leaf,
+      * term) — a single 1-row aggregate however many leaves there are.
+      */
+    def join(docs: DataFrame): DataFrame = if (leaves.isEmpty) docs else {
+      val dlAggs = leaves.map(_.field).distinct.map { f =>
+        sum(size(spaceTokens(col(f))).cast("long")).as(s"es_sum_dl_$f")
+      }
+      val dfAggs = leaves.zipWithIndex.flatMap { case (leaf, i) =>
+        leaf.hits.zipWithIndex.map { case (h, j) =>
+          sum(when(h, 1L).otherwise(0L)).as(s"es_df_q${i}_t$j")
+        }
+      }
+      val aggs = count(lit(1)).as("es_n_docs") +: (dlAggs ++ dfAggs).toSeq
+      docs.crossJoin(broadcast(docs.agg(aggs.head, aggs.tail: _*)))
+    }
+  }
+
+  /** The BM25 entry of the typed operators: `docs` with the broadcast
+    * statistics row, and the leaves' scores summed in leaf order.
+    */
+  private[operators] def bm25(docs: DataFrame, leaves: Seq[Bm25Leaf]): (DataFrame, Column) = {
+    val scorer = new Scorer(true)
+    val score = leaves.map(scorer.score).reduce(_ + _)
+    (scorer.join(docs), score)
   }
 
   private def fail(msg: String): Nothing =
@@ -96,20 +161,6 @@ object EsQuery {
       (q.asText, Option(spec.get("boost")).map(_.asDouble).getOrElse(1.0))
     } else (spec.asText, 1.0)
 
-  /** BM25 of one tokenized field vs one term/run tf, df given positionally.
-    * Mirrors SearchOps.matchBm25TopK term-for-term (k1=1.2, b=0.75 — the
-    * Lucene defaults; constants stay unfolded expressions so the DuckDB
-    * oracle lands on identical bits).
-    */
-  private def bm25(tf: Column, dfCol: Column, dl: Column, sumDl: Column): Column = {
-    val n = col("es_n_docs").cast("double")
-    val avgdl = sumDl.cast("double") / col("es_n_docs")
-    val df = dfCol.cast("double")
-    val idf = log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
-    idf * (tf * (lit(1.2) + lit(1.0))) /
-      (tf + lit(1.2) * (lit(1.0) - lit(0.75) + lit(0.75) * dl.cast("double") / avgdl))
-  }
-
   private def phraseTf(toksCol: Column, terms: Seq[String]): Column = {
     import org.apache.spark.sql.graftbridge.GraftSqlBridge
     GraftSqlBridge.column(
@@ -117,7 +168,7 @@ object EsQuery {
   }
 
   /** Compile one query node → (match predicate, score contribution). */
-  private def clause(node: JsonNode, ctx: Ctx): (Column, Column) = {
+  private def clause(node: JsonNode, ctx: Scorer): (Column, Column) = {
     val fields = node.properties().asScala.toSeq
     if (fields.size != 1) fail(s"query clause must have exactly one key, got $node")
     val kind = fields.head.getKey
@@ -125,36 +176,13 @@ object EsQuery {
     kind match {
       case "match_all" => (lit(true), lit(0.0))
 
-      case "match" =>
-        val (f, body) = singleField(spec, "match")
+      case "match" | "match_phrase" =>
+        val (f, body) = singleField(spec, kind)
         val (q, boost) = queryAndBoost(body, "query")
         val terms = q.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-        if (terms.isEmpty) fail("empty match query")
-        val toks = spaceTokens(col(f))
-        val dl = size(toks)
-        val tfs = terms.map(t => size(filter(toks, x => x === t)))
-        val pred = tfs.map(_ > 0).reduce(_ || _)
-        val score = if (!ctx.scoring) lit(0.0) else {
-          val i = ctx.add(MatchNeed(f, terms))
-          terms.indices.map { j =>
-            bm25(tfs(j).cast("double"), col(s"es_df_q${i}_t$j"), dl, col(s"es_sum_dl_$f"))
-          }.reduce(_ + _) * lit(boost)
-        }
-        (pred, score)
-
-      case "match_phrase" =>
-        val (f, body) = singleField(spec, "match_phrase")
-        val (q, boost) = queryAndBoost(body, "query")
-        val terms = q.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-        if (terms.isEmpty) fail("empty match_phrase query")
-        val toks = spaceTokens(col(f))
-        val tf = phraseTf(toks, terms)
-        val pred = tf > 0
-        val score = if (!ctx.scoring) lit(0.0) else {
-          val i = ctx.add(PhraseNeed(f, terms))
-          bm25(tf.cast("double"), col(s"es_df_q${i}_t0"), size(toks), col(s"es_sum_dl_$f")) * lit(boost)
-        }
-        (pred, score)
+        if (terms.isEmpty) fail(s"empty $kind query")
+        val leaf = Bm25Leaf(f, terms, phrase = kind == "match_phrase", boost = boost)
+        (leaf.tfs.map(_ > 0).reduce(_ || _), ctx.score(leaf))
 
       case "term" =>
         val (f, body) = singleField(spec, "term")
@@ -229,8 +257,8 @@ object EsQuery {
 
       case "bool" =>
         val must = clausesOf(spec, "must").map(clause(_, ctx))
-        val filt = clausesOf(spec, "filter").map(clause(_, new Ctx(false)))
-        val mustNot = clausesOf(spec, "must_not").map(clause(_, new Ctx(false)))
+        val filt = clausesOf(spec, "filter").map(clause(_, new Scorer(false)))
+        val mustNot = clausesOf(spec, "must_not").map(clause(_, new Scorer(false)))
         val should = clausesOf(spec, "should").map(clause(_, ctx))
         // ES minimum_should_match forms: integer, negative integer
         // (total + n), "N%" / "-N%" (percentage of the should count,
@@ -274,52 +302,25 @@ object EsQuery {
       if (n.isArray) n.elements().asScala.toSeq else Seq(n)
     }
 
-  /** The single 1-row index-statistics aggregate all BM25 leaves share:
-    * corpus size, one Σ|D| per scored field, one df per (clause, term).
-    * Broadcast back onto the corpus — the same shape as
-    * [[SearchOps.matchBm25TopK]], regardless of how many scoring clauses
-    * the body contains.
-    */
-  private def statsFor(docs: DataFrame, needs: Seq[Need]): DataFrame = {
-    val dlAggs = needs.map(_.field).distinct.map { f =>
-      sum(size(spaceTokens(col(f))).cast("long")).as(s"es_sum_dl_$f")
-    }
-    val dfAggs = needs.zipWithIndex.flatMap {
-      case (MatchNeed(f, terms), i) =>
-        val toks = spaceTokens(col(f))
-        terms.zipWithIndex.map { case (t, j) =>
-          sum(when(array_contains(toks, t), 1L).otherwise(0L)).as(s"es_df_q${i}_t$j")
-        }
-      case (PhraseNeed(f, terms), i) =>
-        Seq(sum(when(phraseTf(spaceTokens(col(f)), terms) > 0, 1L).otherwise(0L))
-          .as(s"es_df_q${i}_t0"))
-    }
-    val aggs = count(lit(1)).as("es_n_docs") +: (dlAggs ++ dfAggs)
-    docs.agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Run an ES search body in query mode: returns matching docs with a
     * `score` column (round 6), ES-sorted (`sort` or `_score` desc with
     * `idCol` tiebreak), `size`-limited (default 10), `_source`-projected.
     */
   def search(docs: DataFrame, body: String, idCol: String = "doc_id"): DataFrame = {
     val root = mapper.readTree(body)
-    val ctx = new Ctx(true)
+    val scorer = new Scorer(true)
     val (pred, rawScore) = Option(root.get("query")) match {
-      case Some(q) => clause(q, ctx)
+      case Some(q) => clause(q, scorer)
       case None => (lit(true), lit(0.0))
     }
-    val withStats =
-      if (ctx.needs.isEmpty) docs
-      else docs.crossJoin(broadcast(statsFor(docs, ctx.needs.toSeq)))
-    // scoring queries mirror matchBm25TopK's contract exactly (drop rows
-    // whose ROUNDED score is 0 — the typed operator's filter); pure
-    // filter-context queries score 0 by construction and must keep rows
-    val scored0 = withStats
+    // scoring queries drop rows whose ROUNDED score is 0, as the typed
+    // BM25 operators do; pure filter-context queries score 0 by
+    // construction and must keep rows
+    val scored0 = scorer.join(docs)
       .withColumn("score", roundHalfUp(rawScore, 6))
       .filter(pred)
     val scored =
-      if (ctx.needs.nonEmpty) scored0.filter(col("score") > 0) else scored0
+      if (scorer.nonEmpty) scored0.filter(col("score") > 0) else scored0
     val sorted = Option(root.get("sort")) match {
       case None => scored.orderBy(desc("score"), col(idCol))
       case Some(s) =>
@@ -355,7 +356,7 @@ object EsQuery {
   def aggregations(docs: DataFrame, body: String): DataFrame = {
     val root = mapper.readTree(body)
     val filtered = Option(root.get("query")) match {
-      case Some(q) => docs.filter(clause(q, new Ctx(false))._1)
+      case Some(q) => docs.filter(clause(q, new Scorer(false))._1)
       case None => docs
     }
     val aggsNode = Option(root.get("aggs")).orElse(Option(root.get("aggregations")))

@@ -53,10 +53,8 @@ object SearchOps {
 
   /** Multi-term match with BM25 scoring — what ES actually computes for a
     * `match` query (elastic.py:57 consumers rank by `_score`; Lucene's
-    * BM25Similarity is the ES default since 5.x):
-    *
-    *   score(D,Q) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·|D|/avgdl))
-    *   idf(t)     = ln(1 + (N − df + 0.5)/(df + 0.5))
+    * BM25Similarity is the ES default since 5.x): one `match` leaf of
+    * [[EsQuery.bm25]], the scorer the ES body compiler uses too.
     *
     * The corpus statistics (N, Σ|D| for avgdl, one df per query term) are a
     * SINGLE 1-row partial aggregate broadcast back onto the docs — the
@@ -67,31 +65,15 @@ object SearchOps {
     * discriminative terms dominate, which is the point of upgrading from
     * TF×(1/len).
     */
-  def matchBm25TopK(docs: DataFrame, textCol: String, terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val toks = spaceTokens(col(textCol))
-    val dl = size(toks)
-    val statAggs =
-      count(lit(1)).as("n_docs") +:
-      sum(dl.cast("long")).as("sum_dl") +:
-      terms.zipWithIndex.map { case (t, i) =>
-        sum(when(array_contains(toks, t), 1L).otherwise(0L)).as(s"df$i")
-      }
-    val stats = docs.agg(statAggs.head, statAggs.tail: _*)
-    val n = col("n_docs").cast("double")
-    val avgdl = col("sum_dl").cast("double") / col("n_docs")
-    val score = terms.zipWithIndex.map { case (t, i) =>
-      val tf = size(filter(toks, x => x === t)).cast("double")
-      val df = col(s"df$i").cast("double")
-      val idf = log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
-      // Constants stay as (k1 + 1)-style EXPRESSIONS, not pre-folded Scala
-      // doubles: the DuckDB oracle folds `1.2 + 1.0` with the same IEEE ops,
-      // so both sides land on identical bits (a pre-folded `lit(2.2)` vs a
-      // summed 1.2+1.0 can differ by 1 ulp and flip the 6th rounded digit).
-      idf * (tf * (lit(k1) + lit(1.0))) /
-        (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * dl.cast("double") / avgdl))
-    }.reduce(_ + _)
-    docs.crossJoin(broadcast(stats))
+  def matchBm25TopK(docs: DataFrame, textCol: String, terms: Seq[String], k: Int): DataFrame =
+    bm25TopK(docs, Seq(EsQuery.Bm25Leaf(textCol, terms)), k)
+
+  /** Rows of `docs` whose rounded BM25 score over `leaves` is > 0, top `k`
+    * by (score desc, doc_id).
+    */
+  private def bm25TopK(docs: DataFrame, leaves: Seq[EsQuery.Bm25Leaf], k: Int): DataFrame = {
+    val (withStats, score) = EsQuery.bm25(docs, leaves)
+    withStats
       .withColumn("score", roundHalfUp(score, 6))
       .filter(col("score") > 0)
       .orderBy(desc("score"), col("doc_id"))
@@ -104,45 +86,14 @@ object SearchOps {
 
   // -------------------------------------------------------------- multi_match
 
-  /** ES `multi_match` (most_fields): BM25 per field, each field's score
-    * scaled by its boost, summed — `title^3 body` style. One stats row
-    * carries every (field × term) document frequency plus each field's
-    * Σ|D| (avgdl is per-field, as ES computes it); still a single broadcast
-    * 1-row aggregate and a single scoring pass regardless of how many
-    * fields the query names.
+  /** ES `multi_match` (most_fields): one boosted `match` leaf per field,
+    * summed in field order — `title^3 body` style. avgdl is per field, as
+    * ES computes it; still a single broadcast 1-row aggregate and a single
+    * scoring pass regardless of how many fields the query names.
     */
   def multiMatchTopK(docs: DataFrame, fields: Seq[(String, Double)],
-      terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    def toks(f: String): Column = spaceTokens(col(f))
-    val statAggs =
-      count(lit(1)).as("n_docs") +:
-      fields.flatMap { case (f, _) =>
-        sum(size(toks(f)).cast("long")).as(s"sum_dl_$f") +:
-        terms.zipWithIndex.map { case (t, i) =>
-          sum(when(array_contains(toks(f), t), 1L).otherwise(0L)).as(s"df_${f}_$i")
-        }
-      }
-    val stats = docs.agg(statAggs.head, statAggs.tail: _*)
-    val n = col("n_docs").cast("double")
-    val score = fields.map { case (f, boost) =>
-      val dl = size(toks(f)).cast("double")
-      val avgdl = col(s"sum_dl_$f").cast("double") / col("n_docs")
-      val fieldScore = terms.zipWithIndex.map { case (t, i) =>
-        val tf = size(filter(toks(f), x => x === t)).cast("double")
-        val df = col(s"df_${f}_$i").cast("double")
-        val idf = log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
-        idf * (tf * (lit(k1) + lit(1.0))) /
-          (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * dl / avgdl))
-      }.reduce(_ + _)
-      fieldScore * lit(boost)
-    }.reduce(_ + _)
-    docs.crossJoin(broadcast(stats))
-      .withColumn("score", roundHalfUp(score, 6))
-      .filter(col("score") > 0)
-      .orderBy(desc("score"), col("doc_id"))
-      .limit(k)
-  }
+      terms: Seq[String], k: Int): DataFrame =
+    bm25TopK(docs, fields.map { case (f, boost) => EsQuery.Bm25Leaf(f, terms, boost = boost) }, k)
 
   /** queries() wrapper: title^3 + text, title synthesized from each doc's
     * first four words so term hits overlap both fields deterministically.
@@ -159,35 +110,17 @@ object SearchOps {
   // ------------------------------------------------------------- search_phrase
 
   /** ES `match_phrase` (slop 0): a document matches only where the query
-    * terms appear as a CONSECUTIVE token run; scoring is the same BM25 shape
-    * as `matchBm25TopK` with the phrase playing the single "term" — tf =
-    * run occurrences (native codegen'd `CountTokenRun` kernel, overlapping
-    * runs counted), df = documents containing the run at least once. Same
-    * scale shape too: one 1-row broadcast stats aggregate, one scoring
-    * pass, TakeOrderedAndProject for the top-k.
+    * terms appear as a CONSECUTIVE token run — one `match_phrase` leaf of
+    * [[EsQuery.bm25]], the run playing the single BM25 term: tf = run
+    * occurrences (native codegen'd `CountTokenRun` kernel, overlapping
+    * runs counted, output as `phrase_tf`), df = documents containing the
+    * run at least once. Same scale shape as [[matchBm25TopK]].
     */
-  def phraseTopK(docs: DataFrame, textCol: String, phrase: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.graftbridge.GraftSqlBridge
-    def runCount(c: Column): Column =
-      GraftSqlBridge.column(
-        graft.functions.CountTokenRun(GraftSqlBridge.expression(c), phrase))
-    val toks = spaceTokens(col(textCol))
-    val dl = size(toks)
-    val tfRaw = runCount(toks)
-    val stats = docs.agg(
-      count(lit(1)).as("n_docs"),
-      sum(dl.cast("long")).as("sum_dl"),
-      sum(when(tfRaw > 0, 1L).otherwise(0L)).as("df0"))
-    val n = col("n_docs").cast("double")
-    val avgdl = col("sum_dl").cast("double") / col("n_docs")
-    val tf = tfRaw.cast("double")
-    val df = col("df0").cast("double")
-    val idf = log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
-    val score = idf * (tf * (lit(k1) + lit(1.0))) /
-      (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * dl.cast("double") / avgdl))
-    docs.crossJoin(broadcast(stats))
-      .withColumn("phrase_tf", tfRaw)
+  def phraseTopK(docs: DataFrame, textCol: String, phrase: Seq[String], k: Int): DataFrame = {
+    val leaf = EsQuery.Bm25Leaf(textCol, phrase, phrase = true)
+    val (withStats, score) = EsQuery.bm25(docs, Seq(leaf))
+    withStats
+      .withColumn("phrase_tf", leaf.tfs.head)
       .withColumn("score", roundHalfUp(score, 6))
       .filter(col("phrase_tf") > 0)
       .orderBy(desc("score"), col("doc_id"))

@@ -51,10 +51,40 @@ class PlanAuditSpec extends SparkSpec {
       "scoring pass must not shuffle the corpus")
   }
 
+  test("es_query compiles to the search_bm25 shape: broadcast stats, top-k, no corpus shuffle") {
+    val p = plan("es_query")
+    assert(p.contains("BroadcastExchange"), "1-row index stats must broadcast")
+    assert(p.contains("TakeOrderedAndProject"), "size cap must be a top-k, not a global sort")
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
+      "the scoring pass must never shuffle the corpus")
+  }
+
+  test("BM25 queries broadcast the stats row and top-k without shuffling the corpus") {
+    // search_bm25 and es_query have their own checks above
+    for (q <- Seq("multi_match", "search_phrase")) {
+      val p = plan(q)
+      assert(p.contains("BroadcastExchange"), s"$q: the 1-row stats aggregate must broadcast")
+      assert(p.contains("TakeOrderedAndProject"), s"$q: the size cap must be a top-k, not a global sort")
+      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
+        s"$q: the scoring pass must not shuffle the corpus")
+    }
+  }
+
   test("ann_topk broadcasts the query vectors (corpus never shuffles)") {
     val p = plan("ann_topk")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       "query side must broadcast")
+  }
+
+  test("ANN searches score each candidate pair once (one CosineSim in the optimized plan)") {
+    // a filter on the score below the ranking window would be inlined into
+    // the join condition and evaluate the cosine a second time
+    for (q <- Seq("ann_topk", "ann_lsh", "ann_ivf", "ann_ivf_index")) {
+      val p = SparkEntry.queries(q)(spark, sfDir).queryExecution.optimizedPlan
+      val n = p.collect { case node => node.expressions.map(_.collect {
+        case c: graft.functions.CosineSim => c }.size).sum }.sum
+      assert(n == 1, s"$q holds CosineSim $n times:\n$p")
+    }
   }
 
   test("semi/anti joins stay semi/anti in the physical plan") {
@@ -239,14 +269,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(onGram.isEmpty, "document frequency must not be a window on the gram key")
     assert(windows.forall(_.partitionSpec.exists(_.references.exists(_.name == "doc_id"))),
       "remaining windows must partition by doc_id")
-  }
-
-  test("es_query compiles to the search_bm25 shape: broadcast stats, top-k, no corpus shuffle") {
-    val p = plan("es_query")
-    assert(p.contains("BroadcastExchange"), "1-row index stats must broadcast")
-    assert(p.contains("TakeOrderedAndProject"), "size cap must be a top-k, not a global sort")
-    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
-      "the scoring pass must never shuffle the corpus")
   }
 
   test("text_fix is a pure narrow projection (zero exchanges)") {

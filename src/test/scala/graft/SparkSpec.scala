@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
+    val b = SparkSession.builder()
+    GraftSession.StatusStoreCaps.foreach { case (k, v) => b.config(k, v) }
+    val s = b
       .appName("graft-test")
       // local[4, 2]: maxFailures=2, i.e. ONE task retry — production has
       // task retries, and the encoder-seam spec (EmbedOpsSpec) kills a

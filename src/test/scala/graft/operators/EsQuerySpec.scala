@@ -28,6 +28,22 @@ class EsQuerySpec extends SparkSpec {
     assert(compiled == typed)
   }
 
+  test("compiled bool.should of boosted matches equals the typed multi_match bit for bit") {
+    val titled = docs.select(col("doc_id"), col("text"),
+      array_join(slice(graft.functions.TextFns.spaceTokens(col("text")), 1, 4), " ").as("title"))
+    val body =
+      """{"query": {"bool": {"should": [
+        |  {"match": {"title": {"query": "data merge", "boost": 3.0}}},
+        |  {"match": {"text": "data merge"}}
+        |]}}, "size": 20}""".stripMargin
+    def bits(df: org.apache.spark.sql.DataFrame) = df.select("doc_id", "score").collect().toSeq
+      .map(r => (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+    val compiled = bits(EsQuery.search(titled, body))
+    val typed = bits(SearchOps.multiMatchTopK(titled,
+      fields = Seq("title" -> 3.0, "text" -> 1.0), terms = Seq("data", "merge"), k = 20))
+    assert(compiled.nonEmpty && compiled == typed)
+  }
+
   test("filter context: term / terms / range / exists compile to pure predicates") {
     val body =
       """{"query": {"bool": {"filter": [

@@ -6,6 +6,8 @@ over every *.scala file under src/main/scala. Run from the repo root:
 
     python3 tools/src_lines.py                  # working tree
     python3 tools/src_lines.py --rev HEAD~1     # a commit, read through git
+    python3 tools/src_lines.py --files [--rev HEAD~1]
+                                                # one line per file first
 
 The filter, applied to each line after stripping surrounding whitespace:
   - blank lines are not code;
@@ -50,34 +52,40 @@ ROOT = "src/main/scala"
 
 
 def sources(rev):
-    """Text of every *.scala file under ROOT, at `rev` or on disk."""
+    """(path, text) of every *.scala file under ROOT, at `rev` or on disk."""
     if rev:
         names = subprocess.run(
             ["git", "ls-tree", "-r", "--name-only", rev, "--", ROOT],
             check=True, capture_output=True, text=True).stdout.split()
         for n in sorted(names):
             if n.endswith(".scala"):
-                yield subprocess.run(
+                yield n, subprocess.run(
                     ["git", "show", f"{rev}:{n}"],
                     check=True, capture_output=True, text=True).stdout
         return
     for d, _, files in sorted(os.walk(ROOT)):
         for f in sorted(files):
             if f.endswith(".scala"):
-                with open(os.path.join(d, f), encoding="utf-8") as fh:
-                    yield fh.read()
+                path = os.path.join(d, f)
+                with open(path, encoding="utf-8") as fh:
+                    yield path, fh.read()
 
 
 def main(argv):
+    per_file = "--files" in argv
+    argv = [a for a in argv if a != "--files"]
     rev = argv[1] if argv[:1] == ["--rev"] and len(argv) == 2 else None
     if argv and rev is None:
-        sys.exit("usage: src_lines.py [--rev <commit>]")
+        sys.exit("usage: src_lines.py [--files] [--rev <commit>]")
     files = raw = code = 0
-    for text in sources(rev):
+    for path, text in sources(rev):
         lines = text.splitlines()
+        n = ncnb(lines)
+        if per_file:
+            print(json.dumps({"path": path, "raw": len(lines), "ncnb": n}))
         files += 1
         raw += len(lines)
-        code += ncnb(lines)
+        code += n
     print(json.dumps({"rev": rev or "worktree", "root": ROOT,
                       "files": files, "raw": raw, "ncnb": code}))
 
